@@ -44,8 +44,9 @@ from pyspark.sql.datasource import (
 
 SCHEMA = "height BIGINT, block_json STRING, block_results_json STRING"
 
-#: reference TENDERMINT_MAX_QUERY_RANGE (EventStream.kt:73)
-DEFAULT_PAGE_SIZE = 20
+#: heights per partition — the reference's TENDERMINT_MAX_QUERY_RANGE
+#: (EventStream.kt:73)
+PAGE_SIZE = 20
 
 
 class HeightRange(InputPartition):
@@ -84,10 +85,9 @@ class FixtureNode:
         return rd("block"), rd("block_results")
 
 
-#: default synthetic chain length — finite so head()-derived planning
-#: (open ``to``, ``from="latest"``, unbounded live polls) stays bounded;
-#: raise via the ``synthetic_head`` option for longer runs
-DEFAULT_SYNTHETIC_HEAD = 10_000
+#: synthetic chain length — finite so head()-derived planning (open ``to``,
+#: ``from="latest"``, unbounded live polls) stays bounded
+SYNTHETIC_HEAD = 10_000
 
 
 class SyntheticNode:
@@ -97,7 +97,7 @@ class SyntheticNode:
     "infinite" sentinel head makes any head-resolved plan (open ``to`` /
     unbounded live tail) enumerate ~2^62 heights on the driver."""
 
-    def __init__(self, chain_id: str = "synthetic-1", head: int = DEFAULT_SYNTHETIC_HEAD):
+    def __init__(self, chain_id: str = "synthetic-1", head: int = SYNTHETIC_HEAD):
         self.chain_id = chain_id
         self._head = int(head)
 
@@ -185,10 +185,7 @@ def _make_node(options: dict):
             raise ValueError("fixtures backend needs fixtures_dir")
         return FixtureNode(root)
     if backend == "synthetic":
-        return SyntheticNode(
-            options.get("chain_id", "synthetic-1"),
-            int(options.get("synthetic_head", DEFAULT_SYNTHETIC_HEAD)),
-        )
+        return SyntheticNode(options.get("chain_id", "synthetic-1"))
     if backend == "http":
         # real-wire HTTP RPC (two GETs per height + /status head probe),
         # with 502/transient-fault retry — sources/rpcnode.py
@@ -204,14 +201,14 @@ def _make_node(options: dict):
     raise ValueError(f"unknown blockstream backend: {backend}")
 
 
-def _plan(lo: int, hi: int, page: int) -> Sequence[HeightRange]:
+def _plan(lo: int, hi: int) -> Sequence[HeightRange]:
     """[lo, hi] inclusive → page-size ranges (reference range chunking,
     MetadataStream.kt:59-77)."""
     out = []
     h = lo
     while h <= hi:
-        out.append(HeightRange(h, min(h + page - 1, hi)))
-        h += page
+        out.append(HeightRange(h, min(h + PAGE_SIZE - 1, hi)))
+        h += PAGE_SIZE
     return out
 
 
@@ -241,10 +238,9 @@ class BlockBatchReader(DataSourceReader):
         self.hi = int(options["to_height"])
         if self.lo > self.hi:
             raise ValueError(f"from ({self.lo}) must be <= to ({self.hi})")
-        self.page = int(options.get("page_size", DEFAULT_PAGE_SIZE))
 
     def partitions(self) -> Sequence[InputPartition]:
-        return _plan(self.lo, self.hi, self.page)
+        return _plan(self.lo, self.hi)
 
     def read(self, partition: HeightRange) -> Iterator[tuple]:
         return _read_range(_make_node(self.options), partition)
@@ -265,7 +261,6 @@ class BlockStreamReader(DataSourceStreamReader):
         self.options = options
         self.start = int(options.get("from_height", 1))
         self.to = int(options["to_height"]) if "to_height" in options else None
-        self.page = int(options.get("page_size", DEFAULT_PAGE_SIZE))
         # O7 throttle (the reference's buffer caps, EventStream.kt:239 /
         # MultiplexFlow.kt:74): bound each microbatch's height span so a
         # deep backlog drains in rate-limited steps instead of one giant
@@ -283,8 +278,11 @@ class BlockStreamReader(DataSourceStreamReader):
             head = min(head, self.to)
         if self.max_per_trigger is not None:
             head = min(head, self._last + self.max_per_trigger)
+        # monotonic and never below ``from - 1``: a head still under
+        # ``from`` must not become a committed offset, or the batch after
+        # the chain grows would plan heights below ``from``
         self._last = max(self._last, head)
-        return {"height": head}
+        return {"height": self._last}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         # re-seed the throttle cursor from the committed offset: a restarted
@@ -294,7 +292,7 @@ class BlockStreamReader(DataSourceStreamReader):
         lo, hi = start["height"] + 1, end["height"]
         if lo > hi:
             return []
-        return _plan(lo, hi, self.page)
+        return _plan(lo, hi)
 
     def read(self, partition: HeightRange) -> Iterator[tuple]:
         return _read_range(self._node, partition)

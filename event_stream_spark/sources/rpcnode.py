@@ -35,6 +35,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from event_stream_spark.streaming.retry import backoff_millis
 
+#: retries per GET after the first attempt
+MAX_RETRIES = 5
+
 
 class RpcNodeServer:
     """Tendermint-RPC-shaped HTTP server over an inner content node."""
@@ -125,7 +128,6 @@ class HttpNode:
         self.url = (options.get("rpc_url") or "").rstrip("/")
         if not self.url:
             raise ValueError("http backend needs rpc_url")
-        self.max_retries = int(options.get("rpc_max_retries", 5))
         self.base_backoff_millis = float(options.get("rpc_base_backoff_millis", 25.0))
 
     def _get(self, path: str) -> str | None:
@@ -140,7 +142,7 @@ class HttpNode:
                 err: Exception = exc
             except (urllib.error.URLError, OSError) as exc:
                 err = exc
-            if attempt >= self.max_retries:
+            if attempt >= MAX_RETRIES:
                 raise err
             time.sleep(backoff_millis(attempt, self.base_backoff_millis) / 1000.0)
             attempt += 1

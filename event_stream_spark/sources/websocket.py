@@ -1,6 +1,5 @@
 """RFC 6455 WebSocket transport for the push path (S1) — the real framing
-layer under the ``wsfeed`` reader, completing the localhost transport story
-started by ``wstransport`` (line-framed TCP).
+layer under the ``wsfeed`` reader.
 
 The reference's live path is a managed *websocket*: an HTTP/1.1 Upgrade
 handshake, then masked client frames / unmasked server frames carrying
@@ -22,12 +21,15 @@ the actual RFC 6455 wire protocol over localhost TCP:
   response or refuses with a JSON-RPC ``error`` + close — the relay treats
   a refusal as terminal (the nodeEventStream ``require``), and any
   transport fault as reconnect-with-backoff.
-- Pushed events are single text frames carrying the same raw message JSON
-  the node event stream emits; envelope extraction (``result.data.value``)
-  stays where it lives for every transport, in ``decode.decode_messages``.
+- Pushed events are single text frames carrying the raw message JSON the
+  node event stream emits.  The relay writes each frame's text to the feed
+  as one line, unparsed: classification — including ``malformed`` for a
+  frame that is not one JSON object — and envelope extraction
+  (``result.data.value``) live in ``decode.decode_messages``, so a bad
+  frame is dropped downstream instead of stopping the relay.
 
-Durable-log resubscribe semantics match ``wstransport.WsFeedServer``: the
-server replays its retained log on each subscribe (at-least-once delivery)
+Durable-log resubscribe semantics: the server replays its retained log on
+each subscribe (at-least-once delivery)
 and the combined flow's height dedup (F5, MultiplexFlow.kt:142-145) makes
 it exactly-once downstream.  The relay bridges frames into the offset-
 replayable ``wsfeed`` buffer — Structured Streaming sources must be
@@ -319,11 +321,10 @@ def _parse_headers(raw: bytes) -> tuple[str, dict[str, str]]:
 
 
 class WebSocketServer:
-    """The node's websocket endpoint stand-in, speaking real RFC 6455.
-
-    Same contract as ``wstransport.WsFeedServer`` (retained log replayed on
-    subscribe, ``push``/``drop_connections``/``close``), plus the HTTP
-    Upgrade handshake and frame codec on the wire.  Thread-per-connection.
+    """The node's websocket endpoint stand-in, speaking real RFC 6455:
+    HTTP Upgrade handshake, JSON-RPC subscribe, retained log replayed on
+    every subscribe, ``push``/``drop_connections``/``close`` for tests.
+    Thread-per-connection.
     """
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
@@ -472,11 +473,11 @@ class WebSocketServer:
                     self._clients.remove(io)
 
     def push(self, messages: list[str | dict]) -> None:
-        """Append to the retained log and push to every live subscriber."""
+        """Append to the retained log and push to every live subscriber.
+        A dict is sent as compact JSON, a string verbatim (so a test can
+        push a frame that is not valid JSON)."""
         lines = [
-            json.dumps(
-                json.loads(m) if isinstance(m, str) else m, separators=(",", ":")
-            )
+            m if isinstance(m, str) else json.dumps(m, separators=(",", ":"))
             for m in messages
         ]
         with self._lock:
@@ -522,11 +523,19 @@ class WebSocketServer:
         self._srv.close()
 
 
+#: relay reconnect policy: jittered exponential backoff from 50 ms, capped
+#: at 1 s, and the TCP connect timeout
+RECONNECT_BASE_BACKOFF_MILLIS = 50.0
+RECONNECT_MAX_BACKOFF_MILLIS = 1000.0
+CONNECT_TIMEOUT_S = 5.0
+
+
 class WebSocketRelay:
-    """Client half of the websocket lifecycle: Upgrade handshake → JSON-RPC
-    subscribe → bridge pushed text frames into the wsfeed buffer; reconnect
-    with exponential backoff on drop; terminal on refusal (HTTP non-101,
-    bad ``Sec-WebSocket-Accept``, or a JSON-RPC error response)."""
+    """Client half of the websocket lifecycle: Upgrade handshake (always
+    offering permessage-deflate) → JSON-RPC subscribe → bridge pushed text
+    frames into the wsfeed buffer; reconnect with exponential backoff on
+    drop; terminal on refusal (HTTP non-101, bad ``Sec-WebSocket-Accept``,
+    or a JSON-RPC error response)."""
 
     def __init__(
         self,
@@ -535,18 +544,10 @@ class WebSocketRelay:
         feed_path: str,
         *,
         subscription: str = SUBSCRIPTION_NEW_BLOCK,
-        base_backoff_millis: float = 50.0,
-        max_backoff_millis: float = 1000.0,
-        connect_timeout_s: float = 5.0,
-        offer_deflate: bool = True,
     ):
         self.host, self.port = host, port
         self.feed_path = feed_path
         self.subscription = subscription
-        self.base_backoff_millis = base_backoff_millis
-        self.max_backoff_millis = max_backoff_millis
-        self.connect_timeout_s = connect_timeout_s
-        self.offer_deflate = offer_deflate
         self.deflate_active = False  # negotiated on the CURRENT connection
         self.connections = 0
         self.error: Exception | None = None
@@ -566,11 +567,6 @@ class WebSocketRelay:
         Raises ``ValueError`` (terminal) on refusal, ``OSError``/
         ``ProtocolError`` (retryable) on transport faults."""
         key = base64.b64encode(os.urandom(16)).decode("ascii")
-        ext = (
-            f"Sec-WebSocket-Extensions: {PMD_OFFER}\r\n"
-            if self.offer_deflate
-            else ""
-        )
         sock.sendall(
             (
                 f"GET /websocket HTTP/1.1\r\n"
@@ -578,7 +574,7 @@ class WebSocketRelay:
                 "Upgrade: websocket\r\n"
                 "Connection: Upgrade\r\n"
                 f"Sec-WebSocket-Key: {key}\r\n"
-                f"{ext}"
+                f"Sec-WebSocket-Extensions: {PMD_OFFER}\r\n"
                 "Sec-WebSocket-Version: 13\r\n\r\n"
             ).encode("ascii")
         )
@@ -590,9 +586,7 @@ class WebSocketRelay:
         if headers.get("sec-websocket-accept") != accept_key(key):
             raise ValueError("Sec-WebSocket-Accept mismatch")
         accepted = headers.get("sec-websocket-extensions", "")
-        self.deflate_active = (
-            self.offer_deflate and "permessage-deflate" in accepted
-        )
+        self.deflate_active = "permessage-deflate" in accepted
         if self.deflate_active and "max_window_bits" in accepted:
             # the server demands a window we did not offer — RFC 7692 §7:
             # a client MUST fail the connection on unacceptable params
@@ -605,7 +599,7 @@ class WebSocketRelay:
             sock = None
             try:
                 sock = socket.create_connection(
-                    (self.host, self.port), timeout=self.connect_timeout_s
+                    (self.host, self.port), timeout=CONNECT_TIMEOUT_S
                 )
                 overrun = self._handshake(sock)
                 io = _WsIO(
@@ -642,8 +636,8 @@ class WebSocketRelay:
                 return
             time.sleep(
                 min(
-                    backoff_millis(attempt, self.base_backoff_millis),
-                    self.max_backoff_millis,
+                    backoff_millis(attempt, RECONNECT_BASE_BACKOFF_MILLIS),
+                    RECONNECT_MAX_BACKOFF_MILLIS,
                 )
                 / 1000.0
             )
@@ -668,13 +662,15 @@ class WebSocketRelay:
     def _bridge(self, io: _WsIO, pending: list[tuple[int, bytes]]) -> None:
         io.sock.settimeout(0.1)  # poll the stop flag between frames
         while not self._stop.is_set():
-            texts = [
-                p.decode("utf-8", "replace")
+            # one feed line per frame, text unparsed; raw CR/LF can only be
+            # insignificant whitespace in a JSON message, so they become spaces
+            lines = [
+                p.decode("utf-8", "replace").replace("\r", " ").replace("\n", " ")
                 for op, p in pending
                 if op == OP_TEXT and p
             ]
-            if texts:
-                append_messages(self.feed_path, texts)
+            if lines:
+                append_messages(self.feed_path, lines)
             if any(op == OP_CLOSE for op, _ in pending):
                 io.send_close(CLOSE_NORMAL)
                 raise OSError("server sent close")  # reconnect path

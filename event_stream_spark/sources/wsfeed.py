@@ -71,15 +71,17 @@ def open_connection(feed_path: str) -> str:
 
 
 def append_messages(feed_path: str, messages: list[str | dict]) -> None:
-    """Test/producer helper: append messages to the feed, one compact JSON
-    per line (the channel framing).  Opens a connection first if the feed
-    does not exist.  Atomic-ish: single write+flush."""
+    """Producer side: append messages to the feed, one per line (the
+    channel framing).  A dict is written as compact JSON, a string as given
+    (it must hold no line break) — nothing is parsed here; ``decode`` classifies each payload, a non-JSON
+    one as ``malformed``.  Opens a connection first if the feed does not
+    exist.  Atomic-ish: single write+flush."""
     if not os.path.exists(feed_path):
         open_connection(feed_path)
-    lines = []
-    for m in messages:
-        obj = json.loads(m) if isinstance(m, str) else m
-        lines.append(json.dumps(obj, separators=(",", ":")))
+    lines = [
+        m if isinstance(m, str) else json.dumps(m, separators=(",", ":"))
+        for m in messages
+    ]
     with open(feed_path, "a") as fh:
         fh.write("".join(line + "\n" for line in lines))
         fh.flush()

@@ -69,15 +69,22 @@ def parse_header_rows(df: DataFrame) -> DataFrame:
 
 
 def resolve_heights(
-    from_height: int | str, to_height: int | None, **options
-) -> tuple[int, int | None, int]:
+    from_height: int | str,
+    to_height: int | None,
+    live_from: int | None = None,
+    **options,
+) -> tuple[int, int, int]:
     """`From.Latest` / open-`to` resolution at plan time
     (MultiplexBlockDataFlow.kt:82-92 + the builder's ``from("latest")``).
 
-    Returns ``(from_height, to_height, head)`` with ``from="latest"``
-    resolved to the backend's current head and an omitted ``to`` resolved to
-    the head for the bounded backfill leg (the live tail continues past it).
-    Resolution asks the node backend once — no Spark job."""
+    Returns ``(from_height, to_height, live_start)`` for the combined
+    builders: ``from="latest"`` resolves to the backend's current head; an
+    omitted ``to`` resolves to the head for the bounded backfill leg — or
+    to ``from - 1``, an empty backfill, when ``from`` is above the head; an
+    explicit ``to`` below ``from`` raises like the batch reader.  The live
+    tail starts at ``live_from`` (default ``to + 1``, the contiguous
+    handoff), never below ``from``.  Resolution asks the node backend once —
+    no Spark job."""
     from event_stream_spark.sources import blockstream
 
     node = blockstream._make_node(
@@ -89,8 +96,11 @@ def resolve_heights(
     elif isinstance(from_height, str):
         raise ValueError(f"invalid height specifier: {from_height!r}")
     if to_height is None:
-        to_height = head
-    return from_height, to_height, head
+        to_height = max(head, from_height - 1)
+    elif to_height < from_height:
+        raise ValueError(f"from ({from_height}) must be <= to ({to_height})")
+    live_start = to_height + 1 if live_from is None else max(live_from, from_height)
+    return from_height, to_height, live_start
 
 
 def _raw_source(spark: SparkSession, *, streaming: bool, **options) -> DataFrame:
@@ -173,19 +183,18 @@ def combined_block_stream(
     past it (the reference's open-ended ``to``).
 
     ``live_from`` is where the live tail starts (defaults to the backfill
-    upper bound + 1 — contiguous handoff); overlap between the two legs is
-    resolved by the height dedup exactly like the reference's lastSeen skip
-    (MultiplexFlow.kt:142-145).
+    upper bound + 1 — contiguous handoff; never below ``from_height``);
+    overlap between the two legs is resolved by the height dedup exactly
+    like the reference's lastSeen skip (MultiplexFlow.kt:142-145).
     """
-    from_height, to_height, _head = resolve_heights(from_height, to_height, **options)
+    from_height, to_height, live_start = resolve_heights(
+        from_height, to_height, live_from, **options
+    )
     hist = historical_stream(
         spark, from_height, to_height, decode_tx_meta=decode_tx_meta, **options
     )
     live = live_stream(
-        spark,
-        from_height=(live_from if live_from is not None else to_height + 1),
-        decode_tx_meta=decode_tx_meta,
-        **options,
+        spark, from_height=live_start, decode_tx_meta=decode_tx_meta, **options
     )
     return dedup_heights_stream(hist.unionByName(live), watermark=watermark)
 
@@ -228,11 +237,9 @@ def combined_header_stream(
     """``blockHeaderFlow`` (MultiplexBlockHeaderFlow.kt:23-61): historical
     header backfill ∪ live header tail, deduped on height — the legacy
     metadata surface, without ever materializing a tx column."""
-    from_height, to_height, _head = resolve_heights(from_height, to_height, **options)
-    hist = historical_header_stream(spark, from_height, to_height, **options)
-    live = live_header_stream(
-        spark,
-        from_height=(live_from if live_from is not None else to_height + 1),
-        **options,
+    from_height, to_height, live_start = resolve_heights(
+        from_height, to_height, live_from, **options
     )
+    hist = historical_header_stream(spark, from_height, to_height, **options)
+    live = live_header_stream(spark, from_height=live_start, **options)
     return dedup_heights_stream(hist.unionByName(live), watermark=watermark)

@@ -23,7 +23,16 @@ def spark():
     from event_stream_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    s = get_spark("est-tests", cpus=cpus, shuffle_partitions=8)
+    # a 6 GB heap, not the 12 GB production default: the suite grows the
+    # JVM to its heap cap, and a 12 GB cap plus the second Spark session
+    # of the chaos-sinks test overflows a 16 GB host (OOM-killed JVM)
+    mem = os.environ.get("SPARK_DRIVER_MEM", "6g")
+    s = get_spark(
+        "est-tests",
+        cpus=cpus,
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": mem},
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -3,9 +3,11 @@ the combined historical∪live flow, checkpoint resume, sinks, panic abort."""
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
+from typing import NamedTuple
 
 import pytest
 from pyspark.sql import functions as F
@@ -534,26 +536,81 @@ def _live_fixture_payloads(templates_dir):
     return [m for _, m in sorted(msgs)]
 
 
-def test_push_feed_combined_with_reconnect(spark, templates_dir, tmp_path):
-    """S1: history from fixtures ∪ live from a PUSH feed (the websocket
-    stand-in) = the golden 100+6, with a mid-stream reconnect: after 3 live
-    messages the channel drops (feed file rotated); the resubscribed channel
-    replays 1 message and delivers the remaining 3 — height dedup absorbs
-    the replay (at-least-once transport + F5 = exactly-once effect, the
-    reference's lastSeen skip)."""
-    from tests.conftest import (
-        EXPECTED_HISTORICAL_BLOCK_COUNT,
-        EXPECTED_LIVE_COUNT,
-        MAX_LIVE_HEIGHT,
-        MIN_LIVE_HEIGHT,
+def _synthetic_new_block_messages(lo: int, hi: int) -> list[dict]:
+    """NewBlock ws messages for ``SyntheticNode`` heights lo..hi, in the
+    golden live templates' shape (``result.data.value.block`` plus the
+    begin/end-block events) that ``decode.new_blocks`` reads."""
+    from event_stream_spark.sources.blockstream import SyntheticNode
+    from event_stream_spark.sources.wsfeed import SUBSCRIPTION_NEW_BLOCK
+
+    node = SyntheticNode()
+    msgs = []
+    for h in range(lo, hi + 1):
+        block, results = (json.loads(p)["result"] for p in node.fetch(h))
+        msgs.append({
+            "jsonrpc": "2.0",
+            "id": 0,
+            "result": {
+                "query": SUBSCRIPTION_NEW_BLOCK,
+                "data": {
+                    "type": "tendermint/event/NewBlock",
+                    "value": {
+                        "block": block["block"],
+                        "result_begin_block": {"events": results["begin_block_events"]},
+                        "result_end_block": {"events": []},
+                    },
+                },
+            },
+        })
+    return msgs
+
+
+class PushCorpus(NamedTuple):
+    """A historical leg plus the live NewBlock messages that follow it."""
+
+    hist_options: dict
+    hist_heights: range
+    live_msgs: list
+    live_heights: range
+
+
+@pytest.fixture(params=["fixtures", "synthetic"])
+def push_corpus(request) -> PushCorpus:
+    """The push-path end-to-end corpus: the golden 100+6 (needs the
+    reference templates) or a ``SyntheticNode`` chain, history 1..100 and
+    live 101..106, that runs without them."""
+    if request.param == "fixtures":
+        from tests.conftest import MAX_LIVE_HEIGHT, MIN_LIVE_HEIGHT
+
+        templates_dir = request.getfixturevalue("templates_dir")
+        return PushCorpus(
+            {"backend": "fixtures", "fixtures_dir": templates_dir},
+            range(MIN_HIST_HEIGHT, MAX_HIST_HEIGHT + 1),
+            _live_fixture_payloads(templates_dir),
+            range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1),
+        )
+    return PushCorpus(
+        {"backend": "synthetic"},
+        range(1, 101),
+        _synthetic_new_block_messages(101, 106),
+        range(101, 107),
     )
+
+
+def test_push_feed_combined_with_reconnect(spark, push_corpus, tmp_path):
+    """S1: history ∪ live from a PUSH feed (the websocket stand-in) = every
+    height once (the golden 100+6 on the fixture corpus), with a mid-stream
+    reconnect: after 3 live messages the channel drops (feed file rotated);
+    the resubscribed channel replays 1 message and delivers the remaining 3
+    — height dedup absorbs the replay (at-least-once transport + F5 =
+    exactly-once effect, the reference's lastSeen skip)."""
     from event_stream_spark import decode
     from event_stream_spark.sources.wsfeed import append_messages, live_message_stream
     from event_stream_spark.streaming import dedup_heights_stream, historical_stream
 
     feed = str(tmp_path / "feed.ndjson")
-    msgs = _live_fixture_payloads(templates_dir)
-    assert len(msgs) == EXPECTED_LIVE_COUNT
+    msgs = push_corpus.live_msgs
+    assert len(msgs) == len(push_corpus.live_heights)
     append_messages(feed, msgs[:3])
 
     live = decode.new_blocks(
@@ -564,11 +621,10 @@ def test_push_feed_combined_with_reconnect(spark, templates_dir, tmp_path):
     )
     hist = historical_stream(
         spark,
-        MIN_HIST_HEIGHT,
-        MAX_HIST_HEIGHT,
-        backend="fixtures",
-        fixtures_dir=templates_dir,
+        push_corpus.hist_heights[0],
+        push_corpus.hist_heights[-1],
         decode_tx_meta=False,
+        **push_corpus.hist_options,
     ).select("height", "historical")
     merged = dedup_heights_stream(hist.unionByName(live))
 
@@ -589,9 +645,9 @@ def test_push_feed_combined_with_reconnect(spark, templates_dir, tmp_path):
         q.stop()
 
     heights = sorted(h for h, _ in seen)
-    assert len(heights) == EXPECTED_HISTORICAL_BLOCK_COUNT + EXPECTED_LIVE_COUNT
+    assert heights == [*push_corpus.hist_heights, *push_corpus.live_heights]
     live_seen = sorted(h for h, is_hist in seen if not is_hist)
-    assert live_seen == list(range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1))
+    assert live_seen == list(push_corpus.live_heights)
 
 
 def test_http_rpc_transport_batch_scan(spark, templates_dir):
@@ -625,10 +681,11 @@ def test_http_rpc_transport_batch_scan(spark, templates_dir):
         # open `to`: resolved via the /status head probe over HTTP
         from event_stream_spark.streaming import resolve_heights
 
-        frm, to, head = resolve_heights(
+        frm, to, live = resolve_heights(
             "latest", None, backend="http", rpc_url=server.url
         )
-        assert frm == to == head == FixtureNode(templates_dir).head()
+        assert frm == to == FixtureNode(templates_dir).head()
+        assert live == to + 1
     finally:
         server.close()
 
@@ -713,119 +770,6 @@ def test_http_rpc_transport_retries_502(templates_dir):
         server.close()
 
 
-def _pump(q, cond, timeout=60.0):
-    """Drive a streaming query until ``cond()`` holds (the transport side
-    appends asynchronously, so availability must be polled)."""
-    import time as _time
-
-    t0 = _time.time()
-    while _time.time() - t0 < timeout:
-        q.processAllAvailable()
-        if cond():
-            return True
-        _time.sleep(0.05)
-    return False
-
-
-def test_socket_transport_combined_with_drop(spark, templates_dir, tmp_path):
-    """S1 over a REAL TCP connection: history from fixtures ∪ live frames
-    pushed through WsFeedServer → WsSocketRelay → wsfeed reader = the
-    golden 100+6, surviving a mid-stream hard connection drop.  The
-    resubscribed session replays the server's retained log (at-least-once
-    transport, WebSocketFlow.kt:65-115 lifecycle) and height dedup (F5)
-    absorbs the replay — BlockDataFlowTest.kt:145-187 shape."""
-    from tests.conftest import (
-        EXPECTED_HISTORICAL_BLOCK_COUNT,
-        EXPECTED_LIVE_COUNT,
-        MAX_LIVE_HEIGHT,
-        MIN_LIVE_HEIGHT,
-    )
-    from event_stream_spark import decode
-    from event_stream_spark.sources.wstransport import (
-        WsFeedServer,
-        live_socket_stream,
-    )
-    from event_stream_spark.streaming import dedup_heights_stream, historical_stream
-
-    msgs = _live_fixture_payloads(templates_dir)
-    assert len(msgs) == EXPECTED_LIVE_COUNT
-    server = WsFeedServer()
-    feed = str(tmp_path / "socketfeed.ndjson")
-    server.push(msgs[:2])  # retained pre-subscribe, replayed on connect
-
-    df, relay = live_socket_stream(spark, server.host, server.port, feed)
-    live = decode.new_blocks(decode.decode_messages(df)).select(
-        F.col("block.header.height").cast("long").alias("height"),
-        F.lit(False).alias("historical"),
-    )
-    hist = historical_stream(
-        spark,
-        MIN_HIST_HEIGHT,
-        MAX_HIST_HEIGHT,
-        backend="fixtures",
-        fixtures_dir=templates_dir,
-        decode_tx_meta=False,
-    ).select("height", "historical")
-    merged = dedup_heights_stream(hist.unionByName(live))
-
-    seen: list[tuple[int, bool]] = []
-    q = (
-        merged.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda b, _id: seen.extend(
-                (r["height"], r["historical"]) for r in b.collect()
-            )
-        )
-        .start()
-    )
-    try:
-        n_live = lambda: sum(1 for _, is_hist in seen if not is_hist)  # noqa: E731
-        assert _pump(q, lambda: n_live() >= 2), "first frames never arrived"
-        server.drop_connections()  # mid-stream websocket drop
-        server.push(msgs[2:])  # delivered on the resubscribed session
-        assert _pump(q, lambda: n_live() >= EXPECTED_LIVE_COUNT), (
-            "post-reconnect frames never arrived"
-        )
-    finally:
-        q.stop()
-        relay.stop()
-        server.close()
-
-    heights = sorted(h for h, _ in seen)
-    assert len(heights) == EXPECTED_HISTORICAL_BLOCK_COUNT + EXPECTED_LIVE_COUNT
-    live_seen = sorted(h for h, is_hist in seen if not is_hist)
-    assert live_seen == list(range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1))
-    assert relay.reconnects >= 1  # the drop really tore the TCP session
-    assert server.subscriptions >= 2  # and the client really resubscribed
-
-
-def test_socket_transport_refuses_bad_subscription(tmp_path):
-    """Handshake parity with nodeEventStream's require: the server refuses
-    an unsupported subscription over the wire and the relay treats that as
-    terminal (no reconnect storm), never opening a feed channel."""
-    import time as _time
-
-    from event_stream_spark.sources.wstransport import WsFeedServer, WsSocketRelay
-
-    server = WsFeedServer()
-    feed = str(tmp_path / "refused.ndjson")
-    relay = WsSocketRelay(
-        server.host, server.port, feed, subscription="tm.event='Tx'"
-    ).start()
-    try:
-        t0 = _time.time()
-        while relay.error is None and _time.time() - t0 < 10:
-            _time.sleep(0.02)
-        assert relay.error is not None
-        assert "unsupported subscription" in str(relay.error)
-        assert relay.connections == 0
-        assert server.refused == 1
-        assert not os.path.exists(feed)  # channel never opened
-    finally:
-        relay.stop()
-        server.close()
-
-
 def test_push_feed_throttle_and_subscription(spark, templates_dir, tmp_path):
     """O7/O8 + S2 parity: max_per_trigger caps each microbatch (the ws
     throttle), and an unsupported subscription type is rejected like
@@ -898,10 +842,11 @@ def test_from_latest_resolution(spark, templates_dir):
     from tests.conftest import EXPECTED_LIVE_COUNT, MAX_LIVE_HEIGHT, MIN_LIVE_HEIGHT
     from event_stream_spark.streaming import combined_block_stream, resolve_heights
 
-    fh, th, head = resolve_heights(
+    fh, th, live = resolve_heights(
         "latest", None, backend="fixtures", fixtures_dir=templates_dir
     )
-    assert fh == th == head == MAX_LIVE_HEIGHT
+    assert fh == th == MAX_LIVE_HEIGHT
+    assert live == MAX_LIVE_HEIGHT + 1
     with pytest.raises(ValueError, match="invalid height specifier"):
         resolve_heights("newest", None, backend="fixtures", fixtures_dir=templates_dir)
 
@@ -936,6 +881,59 @@ def test_from_latest_resolution(spark, templates_dir):
     )
     assert sorted(got) == list(range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1))
     assert len(got) == EXPECTED_LIVE_COUNT
+
+
+@pytest.mark.parametrize("builder", ["blocks", "headers"])
+@pytest.mark.parametrize(
+    "from_h, to_h, want",
+    [
+        (1, 8, range(1, 13)),  # backfill 1..8, live from 9: the handoff
+        (10, None, range(10, 13)),  # open `to`, `from` above the head
+        (10, 20, range(10, 13)),  # backfill leg starts above the head
+        (10, 5, None),  # explicit `to` below `from`: rejected
+    ],
+)
+def test_combined_stream_never_emits_below_from(spark, builder, from_h, to_h, want):
+    """Both combined builders decide the live start once: an explicit
+    ``to < from`` raises like the batch reader, and while the head is below
+    ``from`` neither leg commits an offset under it, so nothing below
+    ``from`` is emitted once the chain grows past it."""
+    from event_stream_spark.sources.blockstream import SyntheticNode
+    from event_stream_spark.sources.rpcnode import RpcNodeServer
+    from event_stream_spark.streaming import (
+        combined_block_stream,
+        combined_header_stream,
+    )
+
+    if builder == "blocks":
+        build = functools.partial(combined_block_stream, decode_tx_meta=False)
+    else:
+        build = combined_header_stream
+    server = RpcNodeServer(SyntheticNode())
+    server.set_head(8)
+    try:
+        if want is None:
+            with pytest.raises(ValueError, match="must be <="):
+                build(spark, from_h, to_h, backend="http", rpc_url=server.url)
+            return
+        df = build(spark, from_h, to_h, backend="http", rpc_url=server.url)
+        seen: list[int] = []
+        q = (
+            df.select("height")
+            .writeStream.foreachBatch(
+                lambda b, _id: seen.extend(r["height"] for r in b.collect())
+            )
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            server.set_head(12)  # the chain grows past `from`
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        server.close()
+    assert sorted(seen) == list(want)
 
 
 def test_cli_batch_fixtures(spark, templates_dir):

@@ -32,12 +32,34 @@ from event_stream_spark.sources.websocket import (
     _WsIO,
 )
 
-from tests.test_streaming import (  # noqa: F401  (fixture re-exports)
-    MAX_HIST_HEIGHT,
-    MIN_HIST_HEIGHT,
-    _live_fixture_payloads,
-    _pump,
-)
+from tests.test_streaming import push_corpus  # noqa: F401  (fixture re-export)
+
+
+def _pump(q, cond, timeout=60.0):
+    """Drive a streaming query until ``cond()`` holds (the transport side
+    appends asynchronously, so availability must be polled)."""
+    t0 = time.time()
+    while time.time() - t0 < timeout:
+        q.processAllAvailable()
+        if cond():
+            return True
+        time.sleep(0.05)
+    return False
+
+
+def _wait_for(cond, timeout=10.0) -> bool:
+    t0 = time.time()
+    while not cond() and time.time() - t0 < timeout:
+        time.sleep(0.02)
+    return cond()
+
+
+def _feed_lines(feed: str) -> list[str]:
+    """Message lines of a wsfeed buffer (connection header excluded)."""
+    if not os.path.exists(feed):
+        return []
+    with open(feed) as fh:
+        return [ln for ln in fh.read().splitlines() if ln and not ln.startswith("#conn:")]
 
 
 def test_accept_key_rfc_example():
@@ -185,26 +207,10 @@ def test_subscribe_ack_retained_replay_and_ping(tmp_path):
     server.push([{"n": 1}, {"n": 2}])
     relay = WebSocketRelay(server.host, server.port, feed).start()
     try:
-        t0 = time.time()
-        while relay.connections == 0 and time.time() - t0 < 10:
-            time.sleep(0.02)
-        assert relay.connections == 1
+        assert _wait_for(lambda: relay.connections == 1)
         server.push([{"n": 3}])
-
-        def lines():
-            if not os.path.exists(feed):
-                return []
-            with open(feed) as fh:
-                return [
-                    json.loads(ln)
-                    for ln in fh.read().splitlines()
-                    if ln and not ln.startswith("#conn:")
-                ]
-
-        t0 = time.time()
-        while len(lines()) < 3 and time.time() - t0 < 10:
-            time.sleep(0.05)
-        got = lines()
+        _wait_for(lambda: len(_feed_lines(feed)) >= 3)
+        got = [json.loads(ln) for ln in _feed_lines(feed)]
         assert [m.get("n") for m in got[:3]] == [1, 2, 3]
 
         ios = server.ping(b"keepalive")
@@ -213,6 +219,31 @@ def test_subscribe_ack_retained_replay_and_ping(tmp_path):
         while ios[0].pongs == 0 and time.time() - t0 < 10:
             time.sleep(0.02)
         assert ios[0].pongs >= 1
+    finally:
+        relay.stop()
+        server.close()
+
+
+def test_relay_keeps_running_past_malformed_frame(tmp_path):
+    """A text frame that is not one JSON object is written to the feed as
+    its own line, unparsed (``decode`` classifies it ``malformed``
+    downstream); the relay keeps its connection and later frames still
+    reach the feed.  A multi-line frame stays one feed line."""
+    server = WebSocketServer()
+    feed = str(tmp_path / "wsfeed.ndjson")
+    garbage = '{"jsonrpc":"2.0"}garbage'
+    relay = WebSocketRelay(server.host, server.port, feed).start()
+    try:
+        assert _wait_for(lambda: relay.connections == 1)
+        server.push([{"n": 1}, garbage])
+        assert _wait_for(lambda: len(_feed_lines(feed)) >= 2)
+        server.push(['{\n  "n": 2\n}', {"n": 3}])
+        assert _wait_for(lambda: len(_feed_lines(feed)) >= 4)
+        got = _feed_lines(feed)
+        assert got[:2] == ['{"n":1}', garbage]
+        assert [json.loads(ln) for ln in got[2:]] == [{"n": 2}, {"n": 3}]
+        assert relay.error is None
+        assert relay.connections == 1  # no reconnect, no terminal refusal
     finally:
         relay.stop()
         server.close()
@@ -240,24 +271,18 @@ def test_websocket_refuses_bad_subscription(tmp_path):
         server.close()
 
 
-def test_websocket_transport_combined_with_drop(spark, templates_dir, tmp_path):
-    """S1 over REAL RFC 6455 framing: history from fixtures ∪ live frames
-    pushed through WebSocketServer → WebSocketRelay → wsfeed reader = the
-    golden 100+6, surviving a mid-stream hard drop; the resubscribed
-    session replays the retained log and height dedup absorbs the replay
-    (BlockDataFlowTest.kt:145-187 shape, WebSocketFlow.kt:65-115
-    lifecycle)."""
-    from tests.conftest import (
-        EXPECTED_HISTORICAL_BLOCK_COUNT,
-        EXPECTED_LIVE_COUNT,
-        MAX_LIVE_HEIGHT,
-        MIN_LIVE_HEIGHT,
-    )
+def test_websocket_transport_combined_with_drop(spark, push_corpus, tmp_path):
+    """S1 over REAL RFC 6455 framing: history ∪ live frames pushed through
+    WebSocketServer → WebSocketRelay → wsfeed reader = every height once
+    (the golden 100+6 on the fixture corpus), surviving a mid-stream hard
+    drop; the resubscribed session replays the retained log and height
+    dedup absorbs the replay (BlockDataFlowTest.kt:145-187 shape,
+    WebSocketFlow.kt:65-115 lifecycle)."""
     from event_stream_spark import decode
     from event_stream_spark.streaming import dedup_heights_stream, historical_stream
 
-    msgs = _live_fixture_payloads(templates_dir)
-    assert len(msgs) == EXPECTED_LIVE_COUNT
+    msgs = push_corpus.live_msgs
+    assert len(msgs) == len(push_corpus.live_heights)
     server = WebSocketServer()
     feed = str(tmp_path / "wsfeed.ndjson")
     server.push(msgs[:2])  # retained pre-subscribe, replayed on connect
@@ -269,11 +294,10 @@ def test_websocket_transport_combined_with_drop(spark, templates_dir, tmp_path):
     )
     hist = historical_stream(
         spark,
-        MIN_HIST_HEIGHT,
-        MAX_HIST_HEIGHT,
-        backend="fixtures",
-        fixtures_dir=templates_dir,
+        push_corpus.hist_heights[0],
+        push_corpus.hist_heights[-1],
         decode_tx_meta=False,
+        **push_corpus.hist_options,
     ).select("height", "historical")
     merged = dedup_heights_stream(hist.unionByName(live))
 
@@ -292,7 +316,7 @@ def test_websocket_transport_combined_with_drop(spark, templates_dir, tmp_path):
         assert _pump(q, lambda: n_live() >= 2), "first frames never arrived"
         server.drop_connections()  # mid-stream websocket drop
         server.push(msgs[2:])  # delivered on the resubscribed session
-        assert _pump(q, lambda: n_live() >= EXPECTED_LIVE_COUNT), (
+        assert _pump(q, lambda: n_live() >= len(msgs)), (
             "post-reconnect frames never arrived"
         )
     finally:
@@ -301,9 +325,9 @@ def test_websocket_transport_combined_with_drop(spark, templates_dir, tmp_path):
         server.close()
 
     heights = sorted(h for h, _ in seen)
-    assert len(heights) == EXPECTED_HISTORICAL_BLOCK_COUNT + EXPECTED_LIVE_COUNT
+    assert heights == [*push_corpus.hist_heights, *push_corpus.live_heights]
     live_seen = sorted(h for h, is_hist in seen if not is_hist)
-    assert live_seen == list(range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1))
+    assert live_seen == list(push_corpus.live_heights)
     assert relay.reconnects >= 1  # the drop really tore the TCP session
     assert server.subscriptions >= 2  # and the client really resubscribed
 
