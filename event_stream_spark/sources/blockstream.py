@@ -21,11 +21,14 @@ same decode/enrich DataFrame transforms serve batch and streaming unchanged.
 Batch mode (``spark.read.format("blockstream")``) covers the bounded
 historical scan (S5); streaming mode covers polling live tail (S3/S4/S10).
 
-Node backends are pluggable like the reference's NetAdapter (NetAdapter.kt:13-30):
-``fixtures`` replays the golden template corpus; ``synthetic`` generates
-deterministic blocks for scale/soak tests; ``http`` speaks real HTTP RPC
-(two GETs per height + /status head probe, 502-retry with backoff — the
-TendermintServiceOpenApiClient fetch model) via ``sources/rpcnode.py``.
+Four built-in node backends stand behind one seam, like the reference's
+NetAdapter (NetAdapter.kt:13-30): ``fixtures`` replays the golden template
+corpus; ``synthetic`` generates deterministic blocks for scale/soak tests;
+``http`` speaks real HTTP RPC (two GETs per height + /status head probe,
+retried with backoff — the TendermintServiceOpenApiClient fetch model) via
+``sources/rpcnode.py``; ``grpc`` speaks real gRPC over HTTP/2 (the
+GrpcBlockFlow fetcher) via ``sources/grpcwire.py``.  Readers build a node
+per ``read()`` from the options, so no node is pickled to executors.
 """
 
 from __future__ import annotations
@@ -168,15 +171,14 @@ class SyntheticNode:
 
 
 def _make_node(options: dict):
-    """The NetAdapter seam (NetAdapter.kt:13-30): resolve the node backend.
-
-    Besides the built-ins, ``backend="pkg.module:ClassName"`` imports a
-    custom adapter class and instantiates it with the options dict — the
-    plug point for alternate transports (the reference's gRPC fetcher,
-    es-grpc/.../GrpcBlockFlow.kt:26-66, plugs in exactly here; see
-    sources/grpcmock.py).  A dotted path — not a runtime registry — because
-    ``read()`` runs in executor worker processes that must re-resolve the
-    backend by import."""
+    """The NetAdapter seam (NetAdapter.kt:13-30): build the node backend
+    named by ``backend`` — one of the four built-ins ``fixtures``,
+    ``synthetic``, ``http`` (option ``rpc_url``) and ``grpc`` (option
+    ``grpc_target``; the reference's gRPC fetcher,
+    es-grpc/.../GrpcBlockFlow.kt:26-66).  Each transport client and its
+    server (``RpcNodeServer``, ``GrpcBlockServer``) carry the same content
+    node, so every backend yields the same (block_json, block_results_json)
+    pairs."""
     backend = options.get("backend", "synthetic")
     if backend == "fixtures":
         # single option name; the CLI's --templates-dir flag maps to it
@@ -192,12 +194,11 @@ def _make_node(options: dict):
         from event_stream_spark.sources.rpcnode import HttpNode
 
         return HttpNode(options)
-    if ":" in backend:
-        import importlib
+    if backend == "grpc":
+        # real-wire gRPC over HTTP/2, same retry policy — sources/grpcwire.py
+        from event_stream_spark.sources.grpcwire import GrpcNode
 
-        mod_name, _, cls_name = backend.partition(":")
-        cls = getattr(importlib.import_module(mod_name), cls_name)
-        return cls(options)
+        return GrpcNode(options)
     raise ValueError(f"unknown blockstream backend: {backend}")
 
 
@@ -267,13 +268,12 @@ class BlockStreamReader(DataSourceStreamReader):
         # batch (same knob as Kafka's maxOffsetsPerTrigger)
         self.max_per_trigger = int(options.get("max_heights_per_trigger", 0)) or None
         self._last = self.start - 1
-        self._node = _make_node(options)
 
     def initialOffset(self) -> dict:
         return {"height": self.start - 1}
 
     def latestOffset(self) -> dict:
-        head = self._node.head()
+        head = _make_node(self.options).head()
         if self.to is not None:
             head = min(head, self.to)
         if self.max_per_trigger is not None:
@@ -295,7 +295,7 @@ class BlockStreamReader(DataSourceStreamReader):
         return _plan(lo, hi)
 
     def read(self, partition: HeightRange) -> Iterator[tuple]:
-        return _read_range(self._node, partition)
+        return _read_range(_make_node(self.options), partition)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the checkpoint log

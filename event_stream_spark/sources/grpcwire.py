@@ -4,9 +4,8 @@ over actual HTTP/2 framing on a localhost socket.
 The reference's gRPC flow (es-grpc/.../flows/grpc/GrpcBlockFlow.kt:26-66)
 is the S3/S4 polling composition with the FETCHER swapped to a protobuf
 service client (``pbClient.tendermintService.getBlockByHeight``).  Here the
-fetcher is a node backend behind ``blockstream._make_node``
-(``backend="event_stream_spark.sources.grpcwire:GrpcNode"``), and this
-module makes the transport real:
+fetcher is the built-in node backend ``backend="grpc"`` behind
+``blockstream._make_node``, and this module makes the transport real:
 
 - **HTTP/2**: connection preface, SETTINGS exchange + ACK, HEADERS/DATA/
   trailers per stream, odd client stream ids, PING answered, GOAWAY
@@ -15,26 +14,30 @@ module makes the transport real:
   flag + u32 length) around a protobuf payload; request headers are
   ``:method POST, :path /<service>/<method>, content-type
   application/grpc, te trailers``; the response ends with trailers
-  carrying ``grpc-status`` (0 = OK, 12 = UNIMPLEMENTED) per the public
-  gRPC-over-HTTP/2 spec.
-- **Protobuf**: hand-rolled varint/length-delimited wire coding (same
-  wire-format layer as ``operators/txmeta.py``'s reader) over a pragmatic
-  subset of the Tendermint block protos — Header{chain_id=1, height=2,
-  time=3, proposer_address=4}, Data{txs=1 repeated bytes},
-  Block{header=1, data=2}, plus results messages mirroring
-  ``abci.TxResult``/events.  The full Tendermint proto tree is out of
-  scope; the subset carries exactly the fields the shared decode path
-  reads, and the conversion to the canonical (block_json,
-  block_results_json) wire pair is tested byte-equal against the
-  ``grpcmock`` generator.
+  carrying ``grpc-status`` (0 = OK, 5 = NOT_FOUND, 12 = UNIMPLEMENTED)
+  per the public gRPC-over-HTTP/2 spec.
+- **Protobuf**: the writer helpers below; messages are read with
+  ``operators/txmeta.py``'s wire-format reader, which raises on truncated
+  input.  The messages are a pragmatic subset of the Tendermint block
+  protos — Header{chain_id=1, height=2, time=3, proposer_address=4},
+  Data{txs=1 repeated bytes}, Block{header=1, data=2}, and
+  Results{height=1, txs_results=2, begin_block_events=3} with
+  TxResult{code=1, log=3, events=7}, Event{type=1, attributes=2},
+  EventAttribute{key=1, value=2, index=3}.  The full Tendermint proto tree
+  is out of scope; the subset carries exactly the fields the shared decode
+  path reads.
 
 Service surface (mirrors the cometbft BlockService shape):
 ``/es.BlockService/GetLatestHeight`` (Empty → {height=1}) and
-``/es.BlockService/GetBlockByHeight`` ({height=1} → {block=1, results=2}).
+``/es.BlockService/GetBlockByHeight`` ({height=1} → {block=1, results=2};
+results absent when the node has none).
 
+``GrpcBlockServer(node)`` serves an inner content node, as
+``rpcnode.RpcNodeServer(node)`` does over HTTP, so every transport returns
+the node's own (block_json, block_results_json) pair byte for byte.
 ``GrpcNode`` keeps ONE HTTP/2 connection per instance and multiplexes
-calls as new streams — per-executor-task connection reuse; tasks planned
-over many heights pay one dial, not one per height.
+calls as new streams — tasks planned over many heights pay one dial, not
+one per height.
 """
 
 from __future__ import annotations
@@ -42,9 +45,9 @@ from __future__ import annotations
 import base64
 import json
 import socket
-import struct
 import threading
 
+from event_stream_spark.operators.txmeta import _fields
 from event_stream_spark.sources.http2 import (
     FLAG_ACK,
     FLAG_END_HEADERS,
@@ -63,8 +66,10 @@ from event_stream_spark.sources.http2 import (
     HpackEncoder,
     encode_frame,
 )
+from event_stream_spark.streaming.retry import retry_node_call
 
 GRPC_OK = 0
+GRPC_NOT_FOUND = 5
 GRPC_UNIMPLEMENTED = 12
 
 
@@ -105,42 +110,6 @@ def pb_msg(field: int, v: bytes) -> bytes:
     return _tag(field, 2) + _varint(len(v)) + v
 
 
-def pb_fields(data: bytes) -> list[tuple[int, int, int | bytes]]:
-    """Decode a message into (field, wire_type, value) triples."""
-    out: list[tuple[int, int, int | bytes]] = []
-    pos = 0
-    while pos < len(data):
-        key, pos = _read_varint(data, pos)
-        field, wire = key >> 3, key & 0x7
-        if wire == 0:
-            v, pos = _read_varint(data, pos)
-            out.append((field, wire, v))
-        elif wire == 2:
-            n, pos = _read_varint(data, pos)
-            out.append((field, wire, data[pos:pos + n]))
-            pos += n
-        elif wire == 5:
-            out.append((field, wire, struct.unpack_from("<I", data, pos)[0]))
-            pos += 4
-        elif wire == 1:
-            out.append((field, wire, struct.unpack_from("<Q", data, pos)[0]))
-            pos += 8
-        else:
-            raise ValueError(f"unsupported wire type {wire}")
-    return out
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    shift = v = 0
-    while True:
-        b = data[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        shift += 7
-        if not b & 0x80:
-            return v, pos
-
-
 def grpc_frame(message: bytes) -> bytes:
     """The 5-byte gRPC message prefix: compression flag 0 + u32 length."""
     return b"\x00" + len(message).to_bytes(4, "big") + message
@@ -161,114 +130,126 @@ def grpc_unframe(data: bytes) -> list[bytes]:
 # the block service messages (pragmatic Tendermint subset)
 # ---------------------------------------------------------------------------
 
-def _encode_block_response(height: int, chain_id: str) -> bytes:
-    """Build GetBlockByHeightResponse for the deterministic synthetic chain
-    — the same generator values as ``grpcmock.GrpcMockNode`` (n_txs =
-    height % 2, tx bytes ``grpc-tx-{h}-{i}``), so the client-side JSON is
-    comparable byte-for-byte."""
-    n_txs = height % 2
-    ts = f"2022-06-01T00:{(height // 60) % 60:02d}:{height % 60:02d}Z"
+def _b64(raw: bytes) -> str:
+    return base64.b64encode(raw).decode()
+
+
+def _scalars(buf: bytes) -> dict:
+    """Field number → value; the last occurrence wins, as for proto3
+    scalars."""
+    return {field: v for field, _w, v in _fields(buf)}
+
+
+def _encode_event(event: dict) -> bytes:
+    return pb_str(1, event["type"]) + b"".join(
+        pb_msg(2, pb_bytes(1, base64.b64decode(attr["key"] or ""))
+               + pb_bytes(2, base64.b64decode(attr["value"] or ""))
+               + pb_varint(3, int(bool(attr.get("index")))))
+        for attr in event["attributes"]
+    )
+
+
+def _decode_event(buf: bytes) -> dict:
+    etype, attrs = "", []
+    for field, _w, v in _fields(buf):
+        if field == 1:
+            etype = v.decode()
+        elif field == 2:
+            attr = _scalars(v)
+            attrs.append({
+                "key": _b64(attr.get(1, b"")),
+                "value": _b64(attr.get(2, b"")),
+                "index": bool(attr.get(3, 0)),
+            })
+    return {"type": etype, "attributes": attrs}
+
+
+def _pair_to_proto(block_json: str, results_json: str | None) -> bytes:
+    """The canonical (block_json, block_results_json) pair →
+    GetBlockByHeightResponse; missing results leave field 2 absent."""
+    block = json.loads(block_json)["result"]["block"]
+    hdr = block["header"]
     header = (
-        pb_str(1, chain_id)
-        + pb_varint(2, height)
-        + pb_str(3, ts)
-        + pb_str(4, f"{height:040X}"[:40])
+        pb_str(1, hdr["chain_id"])
+        + pb_varint(2, int(hdr["height"]))
+        + pb_str(3, hdr["time"])
+        + pb_str(4, hdr["proposer_address"])
     )
     data = b"".join(
-        pb_bytes(1, f"grpc-tx-{height}-{i}".encode()) for i in range(n_txs)
+        pb_bytes(1, base64.b64decode(tx)) for tx in block["data"]["txs"] or []
     )
-    block = pb_msg(1, header) + pb_msg(2, data)
-
-    attr = pb_bytes(1, b"sender") + pb_bytes(2, f"addr{height}".encode())
-    event = pb_str(1, "transfer") + pb_msg(2, attr)
-    tx_result = pb_varint(1, 0) + pb_str(3, "") + pb_msg(7, event)
-    results = pb_varint(1, height) + b"".join(
-        pb_msg(2, tx_result) for _ in range(n_txs)
+    out = pb_msg(1, pb_msg(1, header) + pb_msg(2, data))
+    if results_json is None:
+        return out
+    res = json.loads(results_json)["result"]
+    tx_results = b"".join(
+        pb_msg(2, pb_varint(1, r["code"]) + pb_str(3, r["log"]) + b"".join(
+            pb_msg(7, _encode_event(e)) for e in r["events"] or []
+        ))
+        for r in res["txs_results"] or []
     )
-    return pb_msg(1, block) + pb_msg(2, results)
+    begin_events = b"".join(
+        pb_msg(3, _encode_event(e)) for e in res.get("begin_block_events") or []
+    )
+    return out + pb_msg(2, pb_varint(1, int(res["height"])) + tx_results + begin_events)
 
 
-def _decode_block_response(payload: bytes, height_hint: int) -> tuple[str, str]:
-    """Proto → the canonical (block_json, block_results_json) wire pair —
-    identical construction (key order included) to ``grpcmock``."""
-    block_pb = results_pb = b""
-    for field, _w, v in pb_fields(payload):
+def _proto_to_pair(payload: bytes, height: int) -> tuple[str, str | None]:
+    """GetBlockByHeightResponse → the canonical (block_json,
+    block_results_json) pair, key order included, as the JSON backends
+    emit it."""
+    block_pb, results_pb = b"", None
+    for field, _w, v in _fields(payload):
         if field == 1:
             block_pb = v
         elif field == 2:
             results_pb = v
 
-    chain_id = ""
-    height = height_hint
-    ts = ""
-    proposer = ""
-    txs: list[str] = []
-    for field, _w, v in pb_fields(block_pb):
-        if field == 1:  # header
-            for f2, _w2, v2 in pb_fields(v):
-                if f2 == 1:
-                    chain_id = v2.decode()
-                elif f2 == 2:
-                    height = v2
-                elif f2 == 3:
-                    ts = v2.decode()
-                elif f2 == 4:
-                    proposer = v2.decode()
-        elif field == 2:  # data
-            for f2, _w2, v2 in pb_fields(v):
-                if f2 == 1:
-                    txs.append(base64.b64encode(v2).decode())
-
-    txs_results = []
-    for field, _w, v in pb_fields(results_pb):
-        if field != 2:
-            continue
-        code, log, events = 0, "", []
-        for f2, _w2, v2 in pb_fields(v):
-            if f2 == 1:
-                code = v2
-            elif f2 == 3:
-                log = v2.decode()
-            elif f2 == 7:
-                etype, attrs = "", []
-                for f3, _w3, v3 in pb_fields(v2):
-                    if f3 == 1:
-                        etype = v3.decode()
-                    elif f3 == 2:
-                        key = value = b""
-                        for f4, _w4, v4 in pb_fields(v3):
-                            if f4 == 1:
-                                key = v4
-                            elif f4 == 2:
-                                value = v4
-                        attrs.append({
-                            "key": base64.b64encode(key).decode(),
-                            "value": base64.b64encode(value).decode(),
-                            "index": False,
-                        })
-                events.append({"type": etype, "attributes": attrs})
-        txs_results.append({"code": code, "log": log, "events": events})
-
+    header, txs = {}, []
+    for field, _w, v in _fields(block_pb):
+        if field == 1:
+            header = _scalars(v)
+        elif field == 2:
+            txs = [_b64(tx) for f, _w2, tx in _fields(v) if f == 1]
     block = {
         "jsonrpc": "2.0",
         "result": {
             "block": {
                 "header": {
-                    "chain_id": chain_id,
-                    "height": str(height),
-                    "time": ts,
-                    "proposer_address": proposer,
+                    "chain_id": header.get(1, b"").decode(),
+                    "height": str(header.get(2, height)),
+                    "time": header.get(3, b"").decode(),
+                    "proposer_address": header.get(4, b"").decode(),
                 },
                 "data": {"txs": txs},
             }
         },
     }
+    if results_pb is None:
+        return json.dumps(block), None
+
+    results_height, txs_results, begin_events = height, [], []
+    for field, _w, v in _fields(results_pb):
+        if field == 1:
+            results_height = v
+        elif field == 2:
+            tx_result = {"code": 0, "log": "", "events": []}
+            for f2, _w2, v2 in _fields(v):
+                if f2 == 1:
+                    tx_result["code"] = v2
+                elif f2 == 3:
+                    tx_result["log"] = v2.decode()
+                elif f2 == 7:
+                    tx_result["events"].append(_decode_event(v2))
+            txs_results.append(tx_result)
+        elif field == 3:
+            begin_events.append(_decode_event(v))
     results = {
         "jsonrpc": "2.0",
         "result": {
-            "height": str(height),
+            "height": str(results_height),
             "txs_results": txs_results,
-            "begin_block_events": [],
+            "begin_block_events": begin_events,
         },
     }
     return json.dumps(block), json.dumps(results)
@@ -282,16 +263,17 @@ SERVICE = "es.BlockService"
 
 
 class GrpcBlockServer:
-    """A gRPC service over real HTTP/2 frames serving the deterministic
-    synthetic chain.  Thread-per-connection; streams on a connection are
-    served in arrival order (unary calls — no long-lived streams)."""
+    """A gRPC service over real HTTP/2 frames serving an inner content node
+    (as ``rpcnode.RpcNodeServer`` does over HTTP): GetLatestHeight answers
+    ``node.head()``, GetBlockByHeight encodes ``node.fetch(h)``, and a
+    missing block answers grpc-status NOT_FOUND.  Thread-per-connection;
+    streams on a connection are served in arrival order (unary calls — no
+    long-lived streams)."""
 
-    def __init__(self, host: str = "127.0.0.1", port: int = 0, *,
-                 head: int = 500, chain_id: str = "grpc-wire-1"):
+    def __init__(self, node, host: str = "127.0.0.1", port: int = 0):
+        self.node = node
         self._srv = socket.create_server((host, port))
         self.host, self.port = self._srv.getsockname()[:2]
-        self.head_height = head
-        self.chain_id = chain_id
         self.connections = 0
         self.calls = 0
         self.unimplemented = 0
@@ -367,26 +349,21 @@ class GrpcBlockServer:
         self.calls += 1
         path = st["headers"].get(":path", "")
         msgs = grpc_unframe(st["data"])
-        request = msgs[0] if msgs else b""
+        request = _scalars(msgs[0]) if msgs else {}
         if path == f"/{SERVICE}/GetLatestHeight":
-            body = pb_varint(1, self.head_height)
+            body = pb_varint(1, self.node.head())
         elif path == f"/{SERVICE}/GetBlockByHeight":
-            height = 0
-            for field, _w, v in pb_fields(request):
-                if field == 1:
-                    height = v
-            body = _encode_block_response(height, self.chain_id)
+            height = request.get(1, 0)
+            block, results = self.node.fetch(height)
+            if block is None:
+                self._send_status(sock, enc, sid, GRPC_NOT_FOUND,
+                                  f"no block at height {height}")
+                return
+            body = _pair_to_proto(block, results)
         else:
             self.unimplemented += 1
-            trailers = enc.encode([
-                (":status", "200"),
-                ("content-type", "application/grpc"),
-                ("grpc-status", str(GRPC_UNIMPLEMENTED)),
-                ("grpc-message", f"unknown method {path}"),
-            ])
-            sock.sendall(encode_frame(
-                FRAME_HEADERS, FLAG_END_HEADERS | FLAG_END_STREAM, sid, trailers
-            ))
+            self._send_status(sock, enc, sid, GRPC_UNIMPLEMENTED,
+                              f"unknown method {path}")
             return
         resp_headers = enc.encode([
             (":status", "200"),
@@ -399,6 +376,20 @@ class GrpcBlockServer:
             + encode_frame(FRAME_HEADERS, FLAG_END_HEADERS | FLAG_END_STREAM,
                            sid, trailers)
         )
+
+    @staticmethod
+    def _send_status(sock, enc: HpackEncoder, sid: int, status: int,
+                     message: str) -> None:
+        """A trailers-only response: the call ends with ``status``."""
+        trailers = enc.encode([
+            (":status", "200"),
+            ("content-type", "application/grpc"),
+            ("grpc-status", str(status)),
+            ("grpc-message", message),
+        ])
+        sock.sendall(encode_frame(
+            FRAME_HEADERS, FLAG_END_HEADERS | FLAG_END_STREAM, sid, trailers
+        ))
 
     def close(self) -> None:
         self._stopped.set()
@@ -421,23 +412,21 @@ class GrpcStatusError(RuntimeError):
 
 
 class GrpcNode:
-    """Node backend speaking real gRPC, pluggable as
-    ``backend="event_stream_spark.sources.grpcwire:GrpcNode"``.
+    """Node backend speaking real gRPC (``backend="grpc"``, option
+    ``grpc_target`` = ``host:port``).
 
-    Options: ``grpc_target`` (``host:port``), ``chain_id``.  One HTTP/2
-    connection per instance (executor tasks re-instantiate by import →
-    one dial per task, streams multiplexed per call)."""
+    One HTTP/2 connection per instance, dialed on first use; calls
+    multiplex on it as new streams, so a task planned over many heights
+    pays one dial.  A transport fault drops the connection and the call is
+    retried with backoff on a fresh one (``streaming.retry.retry_node_call``,
+    as ``HttpNode`` retries its GETs); a grpc-status error is not retried."""
 
     def __init__(self, options: dict):
         target = options.get("grpc_target", "localhost:50051")
         host, _, port = target.rpartition(":")
         self.host, self.port = host or "localhost", int(port)
-        self.chain_id = options.get("chain_id", "grpc-wire-1")
         self._sock: socket.socket | None = None
-        self._reader = FrameReader()
-        self._dec = HpackDecoder()
         self._enc = HpackEncoder()
-        self._next_stream = 1
         self._lock = threading.Lock()
 
     def _connect(self) -> socket.socket:
@@ -447,75 +436,92 @@ class GrpcNode:
             self._sock = sock
             self._reader = FrameReader()
             self._dec = HpackDecoder()
+            self._next_stream = 1
         return self._sock
 
+    def _drop(self) -> None:
+        if self._sock is not None:
+            self._sock.close()
+            self._sock = None
+
     def _call(self, method: str, request: bytes) -> bytes:
+        return retry_node_call(lambda: self._call_once(method, request))
+
+    def _call_once(self, method: str, request: bytes) -> bytes:
         """One unary exchange on a fresh odd stream id.  SETTINGS/PING
         bookkeeping is handled inline; response DATA is collected until the
         trailers frame, then grpc-status is enforced."""
         with self._lock:
-            sock = self._connect()
-            sid = self._next_stream
-            self._next_stream += 2
-            headers = self._enc.encode([
-                (":method", "POST"),
-                (":scheme", "http"),
-                (":path", f"/{SERVICE}/{method}"),
-                (":authority", f"{self.host}:{self.port}"),
-                ("content-type", "application/grpc"),
-                ("te", "trailers"),
-            ])
-            sock.sendall(
-                encode_frame(FRAME_HEADERS, FLAG_END_HEADERS, sid, headers)
-                + encode_frame(FRAME_DATA, FLAG_END_STREAM, sid,
-                               grpc_frame(request))
-            )
-            data = b""
-            status: int | None = None
-            message = ""
-            done = False
-            while not done:
-                chunk = sock.recv(65536)
-                if not chunk:
-                    self._sock = None
-                    raise OSError("connection closed mid-call")
-                for ftype, flags, fsid, payload in self._reader.feed(chunk):
-                    if ftype == FRAME_SETTINGS and not flags & FLAG_ACK:
-                        sock.sendall(encode_frame(FRAME_SETTINGS, FLAG_ACK, 0, b""))
-                    elif ftype == FRAME_PING and not flags & FLAG_ACK:
-                        sock.sendall(encode_frame(FRAME_PING, FLAG_ACK, 0, payload))
-                    elif fsid != sid:
-                        continue
-                    elif ftype == FRAME_HEADERS:
-                        hdrs = dict(self._dec.decode(payload))
-                        if "grpc-status" in hdrs:
-                            status = int(hdrs["grpc-status"])
-                            message = hdrs.get("grpc-message", "")
-                        if flags & FLAG_END_STREAM:
-                            done = True
-                    elif ftype == FRAME_DATA:
-                        data += payload
-                        if flags & FLAG_END_STREAM:
-                            done = True
-            if status is None or status != GRPC_OK:
-                raise GrpcStatusError(status if status is not None else -1, message)
-            msgs = grpc_unframe(data)
-            return msgs[0] if msgs else b""
+            try:
+                return self._exchange(method, request)
+            except OSError:
+                self._drop()
+                raise
+
+    def _exchange(self, method: str, request: bytes) -> bytes:
+        sock = self._connect()
+        sid = self._next_stream
+        self._next_stream += 2
+        headers = self._enc.encode([
+            (":method", "POST"),
+            (":scheme", "http"),
+            (":path", f"/{SERVICE}/{method}"),
+            (":authority", f"{self.host}:{self.port}"),
+            ("content-type", "application/grpc"),
+            ("te", "trailers"),
+        ])
+        sock.sendall(
+            encode_frame(FRAME_HEADERS, FLAG_END_HEADERS, sid, headers)
+            + encode_frame(FRAME_DATA, FLAG_END_STREAM, sid,
+                           grpc_frame(request))
+        )
+        data = b""
+        status: int | None = None
+        message = ""
+        done = False
+        while not done:
+            chunk = sock.recv(65536)
+            if not chunk:
+                raise OSError("connection closed mid-call")
+            for ftype, flags, fsid, payload in self._reader.feed(chunk):
+                if ftype == FRAME_SETTINGS and not flags & FLAG_ACK:
+                    sock.sendall(encode_frame(FRAME_SETTINGS, FLAG_ACK, 0, b""))
+                elif ftype == FRAME_PING and not flags & FLAG_ACK:
+                    sock.sendall(encode_frame(FRAME_PING, FLAG_ACK, 0, payload))
+                elif fsid != sid:
+                    continue
+                elif ftype == FRAME_HEADERS:
+                    hdrs = dict(self._dec.decode(payload))
+                    if "grpc-status" in hdrs:
+                        status = int(hdrs["grpc-status"])
+                        message = hdrs.get("grpc-message", "")
+                    if flags & FLAG_END_STREAM:
+                        done = True
+                elif ftype == FRAME_DATA:
+                    data += payload
+                    if flags & FLAG_END_STREAM:
+                        done = True
+        if status is None or status != GRPC_OK:
+            raise GrpcStatusError(status if status is not None else -1, message)
+        msgs = grpc_unframe(data)
+        return msgs[0] if msgs else b""
 
     def head(self) -> int:
         """GetLatestHeight — getLatestBlock().block.header.height
         (GrpcBlockFlow.kt:33)."""
-        body = self._call("GetLatestHeight", b"")
-        for field, _w, v in pb_fields(body):
-            if field == 1:
-                return v
-        return 0
+        return _scalars(self._call("GetLatestHeight", b"")).get(1, 0)
 
-    def fetch(self, height: int) -> tuple[str, str]:
+    def fetch(self, height: int) -> tuple[str | None, str | None]:
         """GetBlockByHeight(height) → the canonical (block_json,
-        block_results_json) pair every backend yields."""
-        body = self._call("GetBlockByHeight", pb_varint(1, height))
-        return _decode_block_response(body, height)
+        block_results_json) pair every backend yields; NOT_FOUND is a
+        missing block, ``(None, None)``, like ``HttpNode``'s 404."""
+        try:
+            body = self._call("GetBlockByHeight", pb_varint(1, height))
+        except GrpcStatusError as exc:
+            if exc.status == GRPC_NOT_FOUND:
+                return None, None
+            raise
+        return _proto_to_pair(body, height)
 
     def close(self) -> None:
         if self._sock is not None:
@@ -523,5 +529,4 @@ class GrpcNode:
                 self._sock.sendall(encode_frame(FRAME_GOAWAY, 0, 0, b"\x00" * 8))
             except OSError:
                 pass
-            self._sock.close()
-            self._sock = None
+            self._drop()

@@ -11,32 +11,31 @@ provides both halves over a real socket:
 - ``RpcNodeServer`` — stdlib ``ThreadingHTTPServer`` exposing ``/status``,
   ``/block`` and ``/block_results`` over any inner content node
   (FixtureNode replays the golden corpus, SyntheticNode serves the fake
-  chain).  ``fail_next(n)`` makes the next *n* requests return 502 — the
+  chain); a height the node has no payload for answers 404.
+  ``fail_next(n)`` makes the next *n* requests return 502 — the
   reference's retryable server-error class (EventStream.kt:222-233) — for
   failure-injection tests.
 
 - ``HttpNode`` — the NetAdapter-seam client (``backend="http"``): ``head()``
-  = GET /status, ``fetch(h)`` = the two per-height GETs, each wrapped in
-  the exponential-backoff retry policy (``streaming.retry.backoff_millis``,
-  Backoff.kt:30-41) for 502s and transient socket faults.  Executors issue
-  these GETs from ``read()`` workers — the fan-out across partitions IS
-  the reference's chunk × ``async`` concurrency, scheduled by Spark.
+  = GET /status, ``fetch(h)`` = the two per-height GETs.  404 is the only
+  missing-block answer; every other status and any socket fault is retried
+  with exponential backoff (``streaming.retry.retry_node_call``,
+  Backoff.kt:30-41) and raised once the retries are spent, so a throttled
+  or failing node never reads as a gap.  Executors issue these GETs from
+  ``read()`` workers — the fan-out across partitions IS the reference's
+  chunk × ``async`` concurrency, scheduled by Spark.
 """
 
 from __future__ import annotations
 
 import json
 import threading
-import time
 import urllib.error
 import urllib.parse
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from event_stream_spark.streaming.retry import backoff_millis
-
-#: retries per GET after the first attempt
-MAX_RETRIES = 5
+from event_stream_spark.streaming.retry import retry_node_call
 
 
 class RpcNodeServer:
@@ -120,32 +119,26 @@ class RpcNodeServer:
 class HttpNode:
     """NetAdapter-seam client for ``backend="http"`` (option ``rpc_url``).
 
-    Each GET retries transient faults (HTTP 5xx, connection errors) with
-    exponential backoff; 4xx (a genuinely missing height) surfaces as a
-    missing payload, mirroring FixtureNode's None."""
+    A 404 (a genuinely missing height) surfaces as a missing payload,
+    mirroring FixtureNode's None; any other HTTP status and any connection
+    error is retried with backoff, then raised."""
 
     def __init__(self, options: dict):
         self.url = (options.get("rpc_url") or "").rstrip("/")
         if not self.url:
             raise ValueError("http backend needs rpc_url")
-        self.base_backoff_millis = float(options.get("rpc_base_backoff_millis", 25.0))
 
     def _get(self, path: str) -> str | None:
-        attempt = 0
-        while True:
-            try:
-                with urllib.request.urlopen(self.url + path, timeout=10) as resp:
-                    return resp.read().decode()
-            except urllib.error.HTTPError as exc:
-                if exc.code < 500:
-                    return None  # missing height, not a fault
-                err: Exception = exc
-            except (urllib.error.URLError, OSError) as exc:
-                err = exc
-            if attempt >= MAX_RETRIES:
-                raise err
-            time.sleep(backoff_millis(attempt, self.base_backoff_millis) / 1000.0)
-            attempt += 1
+        return retry_node_call(lambda: self._get_once(path))
+
+    def _get_once(self, path: str) -> str | None:
+        try:
+            with urllib.request.urlopen(self.url + path, timeout=10) as resp:
+                return resp.read().decode()
+        except urllib.error.HTTPError as exc:
+            if exc.code == 404:
+                return None  # missing height, not a fault
+            raise
 
     def head(self) -> int:
         body = self._get("/status")

@@ -14,6 +14,9 @@ from __future__ import annotations
 import random
 import time
 from collections.abc import Callable
+from typing import TypeVar
+
+T = TypeVar("T")
 
 #: base wait: 1 s · 2^attempt, as in Backoff.kt:12
 BASE_WAIT_MILLIS = 1000.0
@@ -32,6 +35,29 @@ def backoff_millis(
         r = rng or random
         raw += raw * 0.25 * (2.0 * r.random() - 1.0)
     return max(0.0, raw)
+
+
+#: node-request retries after the first attempt, and their backoff base
+NODE_MAX_RETRIES = 5
+NODE_BASE_BACKOFF_MILLIS = 25.0
+
+
+def retry_node_call(call: Callable[[], T]) -> T:
+    """Run one node-backend request, retrying transport faults (``OSError``,
+    which covers urllib's HTTP/URL errors and dropped sockets) with backoff
+    and re-raising after ``NODE_MAX_RETRIES``.  Any other exception passes
+    through unretried: the caller decides what it means (``HttpNode`` maps
+    a 404 to a missing block before it gets here; a gRPC status error is
+    final)."""
+    attempt = 0
+    while True:
+        try:
+            return call()
+        except OSError:
+            if attempt >= NODE_MAX_RETRIES:
+                raise
+        time.sleep(backoff_millis(attempt, NODE_BASE_BACKOFF_MILLIS) / 1000.0)
+        attempt += 1
 
 
 #: substrings of exception text the reference treats as transient

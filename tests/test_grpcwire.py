@@ -1,5 +1,6 @@
 """Real gRPC transport (S10): HTTP/2 framing, HPACK, protobuf wire coding,
-the unary call lifecycle, and the Spark source driven over the real wire.
+the unary call lifecycle, transport conformance of every node backend, and
+the Spark source driven over the real wire.
 
 Parity targets: es-grpc/.../flows/grpc/GrpcBlockFlow.kt:26-66 (fetcher
 composition), GrpcBlockSource semantics via the shared planner.
@@ -7,8 +8,12 @@ composition), GrpcBlockSource semantics via the shared planner.
 
 from __future__ import annotations
 
+import socket
+
 import pytest
 
+from event_stream_spark.operators.txmeta import _fields
+from event_stream_spark.sources.blockstream import SyntheticNode, _make_node
 from event_stream_spark.sources.http2 import (
     FRAME_HEADERS,
     FrameReader,
@@ -23,12 +28,13 @@ from event_stream_spark.sources.grpcwire import (
     GrpcBlockServer,
     GrpcNode,
     GrpcStatusError,
+    _proto_to_pair,
     grpc_frame,
     grpc_unframe,
-    pb_fields,
     pb_str,
     pb_varint,
 )
+from event_stream_spark.sources.rpcnode import RpcNodeServer
 
 
 def test_hpack_integer_prefix_boundaries():
@@ -91,34 +97,92 @@ def test_grpc_message_framing_roundtrip():
 
 def test_protobuf_wire_roundtrip():
     body = pb_varint(2, 300) + pb_str(1, "chain-1") + pb_str(3, "")
-    fields = pb_fields(body)
+    fields = list(_fields(body))
     # proto3 default elision: empty string field 3 is not emitted
     assert fields == [(2, 0, 300), (1, 2, b"chain-1")]
 
 
-def test_unary_call_over_real_wire_matches_mock():
-    """The transport proof: GrpcNode over actual HTTP/2+HPACK+protobuf
-    returns byte-identical (block_json, results_json) to the pure-function
-    mock generator — framing added nothing, lost nothing."""
-    from event_stream_spark.sources.grpcmock import GrpcMockNode
+def test_grpc_decode_raises_on_truncated_field():
+    """A length-delimited field cut short is an error, not a short payload:
+    the response decoder shares txmeta's strict wire-format reader."""
+    with pytest.raises(ValueError, match="truncated bytes"):
+        _proto_to_pair(b"\x0a\x05ab", 1)
 
-    server = GrpcBlockServer(head=77)
-    node = GrpcNode({"grpc_target": f"{server.host}:{server.port}"})
-    mock = GrpcMockNode({"chain_id": "grpc-wire-1"})
+
+#: heights the gapped node has no block for / no block results for
+NO_BLOCK, NO_RESULTS = 5, 6
+#: 1 tx (h=1, 61), no txs (h=2, 3, 59, 60), a failing tx (h=10, code 1),
+#: a minute rollover (h=60)
+CONFORMANCE_HEIGHTS = (1, 2, 3, 10, 59, 60, 61)
+
+
+class _GappedNode(SyntheticNode):
+    """A synthetic chain with holes, to carry missing payloads across the
+    wire: ``(None, None)`` at NO_BLOCK, ``(block, None)`` at NO_RESULTS."""
+
+    def fetch(self, height):
+        block, results = super().fetch(height)
+        if height == NO_BLOCK:
+            return None, None
+        if height == NO_RESULTS:
+            return block, None
+        return block, results
+
+
+@pytest.mark.parametrize("transport", ["synthetic", "http", "grpc"])
+def test_transport_conformance(transport):
+    """Every node transport serves the same content node and returns its
+    (block_json, block_results_json) pairs byte for byte, including missing
+    blocks and missing results.  A new transport must pass this test."""
+    node = _GappedNode("conformance-1", head=77)
+    server = None
+    if transport == "synthetic":
+        client = node
+    elif transport == "http":
+        server = RpcNodeServer(node)
+        client = _make_node({"backend": "http", "rpc_url": server.url})
+    else:
+        server = GrpcBlockServer(node)
+        client = _make_node({"backend": "grpc",
+                             "grpc_target": f"{server.host}:{server.port}"})
     try:
-        assert node.head() == 77
-        for h in (1, 2, 59, 60, 61):  # odd/even tx counts, minute rollover
-            assert node.fetch(h) == mock.fetch(h)
-        # connection reuse: many calls, one dial, distinct odd stream ids
-        assert server.connections == 1
-        assert server.calls == 6
+        assert client.head() == 77
+        heights = CONFORMANCE_HEIGHTS + (NO_BLOCK, NO_RESULTS)
+        for h in heights:
+            assert client.fetch(h) == node.fetch(h)
+        calls = 1 + len(heights)
+        if transport == "http":
+            assert server.requests == 1 + 2 * (calls - 1)  # two GETs per height
+        elif transport == "grpc":
+            # connection reuse: many calls, one dial, distinct odd stream ids
+            assert server.connections == 1
+            assert server.calls == calls
     finally:
-        node.close()
+        if server is not None:
+            server.close()
+        if transport == "grpc":
+            client.close()
+
+
+def test_grpc_node_redials_after_server_closes_connection():
+    """A connection the server closed between calls is a transport fault:
+    the next call redials and succeeds instead of failing the read."""
+    node = SyntheticNode()
+    server = GrpcBlockServer(node)
+    client = GrpcNode({"grpc_target": f"{server.host}:{server.port}"})
+    try:
+        assert client.fetch(1) == node.fetch(1)
+        for sock in server._socks:
+            sock.shutdown(socket.SHUT_RDWR)
+        assert client.fetch(2) == node.fetch(2)
+        assert server.connections == 2
+    finally:
+        client.close()
         server.close()
 
 
 def test_unknown_method_gets_grpc_unimplemented():
-    server = GrpcBlockServer()
+    server = GrpcBlockServer(SyntheticNode())
     node = GrpcNode({"grpc_target": f"{server.host}:{server.port}"})
     try:
         with pytest.raises(GrpcStatusError) as exc:
@@ -132,26 +196,26 @@ def test_unknown_method_gets_grpc_unimplemented():
 
 def test_grpc_wire_backend_drives_spark_source(spark):
     """S10 end-to-end: the real-wire gRPC backend plugs into the same
-    offset-planned source via the NetAdapter dotted-path seam; heights,
-    chain id, and tx events all come over actual HTTP/2."""
+    offset-planned source as ``backend="grpc"``; heights, chain id, and tx
+    events all come over actual HTTP/2."""
     from event_stream_spark.operators import explode_tx_events
     from event_stream_spark.streaming import historical_stream
 
-    server = GrpcBlockServer(head=500)
+    server = GrpcBlockServer(SyntheticNode("grpc-wire-1", head=500))
     try:
         sb = historical_stream(
             spark,
             1,
             30,
             streaming=False,
-            backend="event_stream_spark.sources.grpcwire:GrpcNode",
+            backend="grpc",
             grpc_target=f"{server.host}:{server.port}",
             decode_tx_meta=False,
         )
         rows = sb.select("height", "chain_id").collect()
         assert sorted(r["height"] for r in rows) == list(range(1, 31))
         assert {r["chain_id"] for r in rows} == {"grpc-wire-1"}
-        assert explode_tx_events(sb).count() == 15
+        assert explode_tx_events(sb).count() == 10  # h % 3 == 1: one tx
         assert server.calls >= 30  # one GetBlockByHeight per height
     finally:
         server.close()

@@ -297,50 +297,61 @@ def test_kafka_fed_splay_roundtrip(spark, tmp_path):
     assert glob.glob(f"{corrupt_dir}/*/*.json") == []
 
 
-def test_grpc_shaped_backend(spark):
-    """S10: the NetAdapter seam accepts a dotted-path adapter class — the
-    gRPC-mock backend drives the same offset-planned source (GrpcBlockFlow's
-    poll→dedupe→gap-fill composition IS BlockStreamReader's contract), and
-    the shared decode path is transport-agnostic."""
-    from event_stream_spark.operators import explode_tx_events
+def test_grpc_backend_streaming_read(spark):
+    """S10 live tail over the real gRPC wire: the stream reader builds its
+    node per read() instead of pickling one to the executors (a GrpcNode
+    holds a lock and a socket), and offsets poll the served node's head."""
+    from event_stream_spark.sources.blockstream import SyntheticNode
+    from event_stream_spark.sources.grpcwire import GrpcBlockServer
     from event_stream_spark.streaming import historical_stream
 
-    sb = historical_stream(
-        spark,
-        1,
-        30,
-        streaming=False,
-        backend="event_stream_spark.sources.grpcmock:GrpcMockNode",
-        grpc_target="dns:///node.example:9090",
-        decode_tx_meta=False,
-    )
-    rows = sb.select("height", "chain_id").collect()
-    assert sorted(r["height"] for r in rows) == list(range(1, 31))
-    assert {r["chain_id"] for r in rows} == {"grpc-mock-1"}
-    te = explode_tx_events(sb)
-    assert te.count() == 15  # every other height carries one tx
-
-    # streaming: offsets poll the adapter's head (bounded by grpc_head)
-    stream = historical_stream(
-        spark,
-        1,
-        None,
-        backend="event_stream_spark.sources.grpcmock:GrpcMockNode",
-        grpc_head=25,
-        decode_tx_meta=False,
-    )
-    got = []
-    _drain(
-        stream.select("height").writeStream.foreachBatch(
-            lambda b, _id: got.extend(r["height"] for r in b.collect())
+    server = GrpcBlockServer(SyntheticNode(head=25))
+    try:
+        stream = historical_stream(
+            spark,
+            1,
+            None,
+            backend="grpc",
+            grpc_target=f"{server.host}:{server.port}",
+            decode_tx_meta=False,
         )
-    )
+        got = []
+        _drain(
+            stream.select("height").writeStream.foreachBatch(
+                lambda b, _id: got.extend(r["height"] for r in b.collect())
+            )
+        )
+    finally:
+        server.close()
     assert sorted(got) == list(range(1, 26))
 
-    with pytest.raises(Exception, match="unknown blockstream backend"):
-        historical_stream(
-            spark, 1, 5, streaming=False, backend="bogus", decode_tx_meta=False
-        ).count()
+
+def test_make_node_builds_fixtures_synthetic_http_grpc_only(tmp_path):
+    """The NetAdapter seam knows exactly the four built-in backends; any
+    other name, a dotted ``module:Class`` path included, is refused."""
+    from event_stream_spark.sources.blockstream import (
+        FixtureNode,
+        SyntheticNode,
+        _make_node,
+    )
+    from event_stream_spark.sources.grpcwire import GrpcNode
+    from event_stream_spark.sources.rpcnode import HttpNode
+
+    built = {
+        "fixtures": _make_node({"backend": "fixtures", "fixtures_dir": str(tmp_path)}),
+        "synthetic": _make_node({"backend": "synthetic"}),
+        "http": _make_node({"backend": "http", "rpc_url": "http://127.0.0.1:1"}),
+        "grpc": _make_node({"backend": "grpc", "grpc_target": "127.0.0.1:1"}),
+    }
+    assert {k: type(v) for k, v in built.items()} == {
+        "fixtures": FixtureNode,
+        "synthetic": SyntheticNode,
+        "http": HttpNode,
+        "grpc": GrpcNode,
+    }
+    for backend in ("bogus", "event_stream_spark.sources.grpcwire:GrpcNode"):
+        with pytest.raises(ValueError, match="unknown blockstream backend"):
+            _make_node({"backend": backend})
 
 
 def test_backoff_and_restarts():
@@ -747,27 +758,69 @@ def test_combined_flow_over_http_with_advancing_head(spark, templates_dir, tmp_p
     assert live_seen == list(range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1))
 
 
-def test_http_rpc_transport_retries_502(templates_dir):
+def test_http_rpc_transport_retries_502():
     """Transient 502s (the reference's retryable server-error class,
     EventStream.kt:222-233) are absorbed by exponential-backoff retry in
-    the executor-side fetch; a missing height degrades to None like the
-    other backends."""
-    from event_stream_spark.sources.blockstream import FixtureNode
+    the executor-side fetch."""
+    from event_stream_spark.sources.blockstream import SyntheticNode
     from event_stream_spark.sources.rpcnode import HttpNode, RpcNodeServer
 
-    server = RpcNodeServer(FixtureNode(templates_dir))
+    node = SyntheticNode()
+    server = RpcNodeServer(node)
     try:
-        node = HttpNode({"rpc_url": server.url, "rpc_base_backoff_millis": "5"})
+        client = HttpNode({"rpc_url": server.url})
         server.fail_next(3)
-        block, results = node.fetch(MIN_HIST_HEIGHT)  # 2 GETs, 3 injected 502s
-        assert block is not None and results is not None
-        assert json.loads(block)["result"]["block"]["header"]["height"] == str(
-            MIN_HIST_HEIGHT
-        )
-        missing, _ = node.fetch(1)  # height not in the corpus → 404 → None
-        assert missing is None
+        assert client.fetch(7) == node.fetch(7)  # 2 GETs, 3 injected 502s
+        assert server.requests == 5
     finally:
         server.close()
+
+
+def test_http_node_retries_429_instead_of_skipping_height():
+    """Only 404 means a missing block.  A throttled node (429) is retried,
+    so no height is skipped and no offset can be committed past it; a
+    fault that outlasts the retries raises instead of reading as a gap."""
+    import threading
+    import urllib.error
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from event_stream_spark.sources.blockstream import HeightRange, _read_range
+    from event_stream_spark.sources.rpcnode import HttpNode
+    from event_stream_spark.streaming.retry import NODE_MAX_RETRIES
+
+    stub = {"throttled": 2, "requests": 0}
+
+    class Throttling(BaseHTTPRequestHandler):
+        """429 to the first ``throttled`` GETs, then a payload."""
+
+        def log_message(self, *a):
+            pass
+
+        def do_GET(self):
+            stub["requests"] += 1
+            if stub["throttled"] > 0:
+                stub["throttled"] -= 1
+                self.send_error(429, "too many requests")
+                return
+            self.send_response(200)
+            self.send_header("Content-Length", "2")
+            self.end_headers()
+            self.wfile.write(b"{}")
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Throttling)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        client = HttpNode({"rpc_url": f"http://127.0.0.1:{server.server_address[1]}"})
+        got = [h for h, _b, _r in _read_range(client, HeightRange(1, 5))]
+        assert got == [1, 2, 3, 4, 5]
+
+        stub.update(throttled=NODE_MAX_RETRIES + 1, requests=0)
+        with pytest.raises(urllib.error.HTTPError, match="429"):
+            client.fetch(1)
+        assert stub["requests"] == NODE_MAX_RETRIES + 1
+    finally:
+        server.shutdown()
+        server.server_close()
 
 
 def test_push_feed_throttle_and_subscription(spark, templates_dir, tmp_path):
