@@ -9,10 +9,10 @@ source contract IS that loop, formalized:
 - ``initialOffset``    = the ``from`` height (reference: resolved once up
                          front, MultiplexBlockDataFlow.kt:207-215)
 - ``latestOffset``     = current chain head (reference: pollingFlow tick)
-- ``partitions(a, b)`` = page-size height ranges fetched in parallel
+- ``partitions(a, b)`` = core-sized height ranges fetched in parallel
                          (reference: chunking + bounded concurrency — here the
                          cluster scheduler does the fan-out)
-- ``read(partition)``  = the per-page RPC fetch (two calls per height, J1)
+- ``read(partition)``  = the per-range RPC fetch (two calls per height, J1)
 - checkpointed offsets subsume `Checkpoint(checkEvery=20)` (Checkpoint.kt:6-34)
 
 Rows are raw JSON pairs ``(height, block_json, block_results_json)`` — the
@@ -47,9 +47,9 @@ from pyspark.sql.datasource import (
 
 SCHEMA = "height BIGINT, block_json STRING, block_results_json STRING"
 
-#: heights per partition — the reference's TENDERMINT_MAX_QUERY_RANGE
-#: (EventStream.kt:73)
-PAGE_SIZE = 20
+#: fewest heights per partition: a live trigger of a dozen heights stays one
+#: task instead of paying the per-task set-up twice
+MIN_RANGE_HEIGHTS = 20
 
 
 class HeightRange(InputPartition):
@@ -202,15 +202,24 @@ def _make_node(options: dict):
     raise ValueError(f"unknown blockstream backend: {backend}")
 
 
-def _plan(lo: int, hi: int) -> Sequence[HeightRange]:
-    """[lo, hi] inclusive → page-size ranges (reference range chunking,
-    MetadataStream.kt:59-77)."""
-    out = []
-    h = lo
-    while h <= hi:
-        out.append(HeightRange(h, min(h + PAGE_SIZE - 1, hi)))
-        h += PAGE_SIZE
-    return out
+def _plan(lo: int, hi: int, cores: int) -> Sequence[HeightRange]:
+    """[lo, hi] inclusive → ``min(2 * cores, ceil(n / MIN_RANGE_HEIGHTS))``
+    contiguous ranges, sizes within one.  The reference's 20-height pages
+    (MetadataStream.kt:59-77) are an RPC range limit; this source fetches per
+    height, so the range count only sets the Spark task count."""
+    n = hi - lo + 1
+    if n <= 0:
+        return []
+    k = max(1, min(2 * cores, -(-n // MIN_RANGE_HEIGHTS)))
+    size, extra = divmod(n, k)
+    cuts = [lo + i * size + min(i, extra) for i in range(k + 1)]
+    return [HeightRange(a, b - 1) for a, b in zip(cuts, cuts[1:])]
+
+
+def _cores(options: dict) -> int:
+    # planning runs in a Python worker without a SparkContext: the driver-side
+    # builder passes defaultParallelism in; a bare read plans for this host
+    return int(options.get("_cores") or os.cpu_count() or 1)
 
 
 def _read_range(node, part: HeightRange) -> Iterator[tuple]:
@@ -241,7 +250,7 @@ class BlockBatchReader(DataSourceReader):
             raise ValueError(f"from ({self.lo}) must be <= to ({self.hi})")
 
     def partitions(self) -> Sequence[InputPartition]:
-        return _plan(self.lo, self.hi)
+        return _plan(self.lo, self.hi, _cores(self.options))
 
     def read(self, partition: HeightRange) -> Iterator[tuple]:
         return _read_range(_make_node(self.options), partition)
@@ -289,10 +298,7 @@ class BlockStreamReader(DataSourceStreamReader):
         # reader would otherwise report capped heads below the checkpoint
         # for a few empty triggers before catching up
         self._last = max(self._last, start["height"])
-        lo, hi = start["height"] + 1, end["height"]
-        if lo > hi:
-            return []
-        return _plan(lo, hi)
+        return _plan(start["height"] + 1, end["height"], _cores(self.options))
 
     def read(self, partition: HeightRange) -> Iterator[tuple]:
         return _read_range(_make_node(self.options), partition)

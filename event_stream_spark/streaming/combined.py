@@ -109,7 +109,8 @@ def _raw_source(spark: SparkSession, *, streaming: bool, **options) -> DataFrame
     blockstream.register(spark)
     reader = spark.readStream if streaming else spark.read
     return reader.format("blockstream").options(
-        **{k: str(v) for k, v in options.items() if v is not None}
+        **{k: str(v) for k, v in options.items() if v is not None},
+        _cores=str(spark.sparkContext.defaultParallelism),
     ).load()
 
 

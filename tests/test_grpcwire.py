@@ -197,25 +197,37 @@ def test_unknown_method_gets_grpc_unimplemented():
 def test_grpc_wire_backend_drives_spark_source(spark):
     """S10 end-to-end: the real-wire gRPC backend plugs into the same
     offset-planned source as ``backend="grpc"``; heights, chain id, and tx
-    events all come over actual HTTP/2."""
+    events all come over actual HTTP/2.  A read dials once per partition,
+    and partitions follow the cores: 400 heights take at most two dials per
+    core, not one per 20 heights."""
     from event_stream_spark.operators import explode_tx_events
     from event_stream_spark.streaming import historical_stream
 
     server = GrpcBlockServer(SyntheticNode("grpc-wire-1", head=500))
-    try:
-        sb = historical_stream(
+
+    def read(hi):
+        return historical_stream(
             spark,
             1,
-            30,
+            hi,
             streaming=False,
             backend="grpc",
             grpc_target=f"{server.host}:{server.port}",
             decode_tx_meta=False,
         )
+
+    try:
+        sb = read(30)
         rows = sb.select("height", "chain_id").collect()
         assert sorted(r["height"] for r in rows) == list(range(1, 31))
         assert {r["chain_id"] for r in rows} == {"grpc-wire-1"}
         assert explode_tx_events(sb).count() == 10  # h % 3 == 1: one tx
         assert server.calls >= 30  # one GetBlockByHeight per height
+
+        dials = server.connections
+        heights = [r["height"] for r in read(400).select("height").collect()]
+        assert sorted(heights) == list(range(1, 401))
+        cores = spark.sparkContext.defaultParallelism
+        assert 0 < server.connections - dials <= 2 * cores
     finally:
         server.close()

@@ -12,7 +12,7 @@ from typing import NamedTuple
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import MAX_HIST_HEIGHT, MIN_HIST_HEIGHT
+from tests.conftest import MAX_HIST_HEIGHT, MIN_HIST_HEIGHT, TEMPLATES
 
 
 def _drain(writer, timeout=120):
@@ -64,6 +64,58 @@ def test_batch_source_fixtures(spark, templates_dir):
         .load()
     )
     assert df.count() == 100
+
+
+def test_plan_core_sized_ranges():
+    """The height planner: [lo, hi] exactly once, contiguous and ascending,
+    no empty range, at most two per core, sizes within one of each other,
+    one range for a span of at most MIN_RANGE_HEIGHTS, none for lo > hi."""
+    from event_stream_spark.sources.blockstream import MIN_RANGE_HEIGHTS, _plan
+
+    for lo in (1, 7, 2_270_370):
+        for n in (*range(0, 45), 99, 100, 101, 399, 400, 1_200, 1_201, 9_999):
+            for cores in (1, 2, 3, 4, 8, 32):
+                hi = lo + n - 1
+                parts = _plan(lo, hi, cores)
+                heights = [h for p in parts for h in range(p.lo, p.hi + 1)]
+                assert heights == list(range(lo, hi + 1)), (lo, hi, cores)
+                sizes = [p.hi - p.lo + 1 for p in parts]
+                assert all(s > 0 for s in sizes)
+                assert len(parts) <= 2 * cores
+                assert not sizes or max(sizes) - min(sizes) <= 1
+                if 0 < n <= MIN_RANGE_HEIGHTS:
+                    assert len(parts) == 1
+    assert _plan(10, 5, 3) == []
+    assert _plan(10, 9, 3) == []
+
+
+def test_backfill_tasks_follow_cores(spark):
+    """A 1,200-height batch backfill runs at most two source tasks per core
+    (not one per 20 heights) and still emits every height exactly once."""
+    from event_stream_spark.streaming import historical_stream
+
+    sc = spark.sparkContext
+    group = "backfill-tasks"
+    sc.setJobGroup(group, group)
+    try:
+        heights = [
+            r["height"]
+            for r in historical_stream(
+                spark, 1, 1200, streaming=False, backend="synthetic"
+            )
+            .select("height")
+            .collect()
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    tasks = sum(
+        st.getStageInfo(sid).numTasks
+        for jid in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(jid).stageIds
+    )
+    assert 0 < tasks <= 2 * sc.defaultParallelism
+    assert sorted(heights) == list(range(1, 1201))
 
 
 def test_bad_range_rejected(spark):
@@ -1208,27 +1260,47 @@ def test_push_feed_restart_from_checkpoint(spark, templates_dir, tmp_path):
     assert expected <= set(seen)  # every message delivered (dups allowed)
 
 
-def test_blockstream_max_heights_per_trigger(spark, templates_dir, tmp_path):
+@pytest.fixture(
+    params=["synthetic", *(["fixtures"] if os.path.isdir(TEMPLATES) else [])]
+)
+def hist_corpus(request) -> tuple[dict, int, int, int]:
+    """(source options, from, to, heights present) of a historical range:
+    a hole-free ``SyntheticNode`` chain 1..100, or the golden corpus when
+    the reference templates exist."""
+    if request.param == "fixtures":
+        from tests.conftest import EXPECTED_HISTORICAL_BLOCK_COUNT
+
+        templates_dir = request.getfixturevalue("templates_dir")
+        return (
+            {"backend": "fixtures", "fixtures_dir": templates_dir},
+            MIN_HIST_HEIGHT,
+            MAX_HIST_HEIGHT,
+            EXPECTED_HISTORICAL_BLOCK_COUNT,
+        )
+    lo, hi = 1, 100
+    return {"backend": "synthetic"}, lo, hi, hi - lo + 1  # no holes
+
+
+def test_blockstream_max_heights_per_trigger(spark, hist_corpus, tmp_path):
     """O7 throttle on the polling source: each microbatch spans at most
     max_heights_per_trigger heights; the full range still arrives."""
-    from tests.conftest import EXPECTED_HISTORICAL_BLOCK_COUNT
     from event_stream_spark.streaming import historical_stream
 
+    options, lo, hi, expected = hist_corpus
     batch_sizes = []
     _drain(
         historical_stream(
             spark,
-            MIN_HIST_HEIGHT,
-            MAX_HIST_HEIGHT,
-            backend="fixtures",
-            fixtures_dir=templates_dir,
+            lo,
+            hi,
             decode_tx_meta=False,
             max_heights_per_trigger=25,
+            **options,
         )
         .writeStream.foreachBatch(lambda b, _id: batch_sizes.append(b.count()))
         .option("checkpointLocation", str(tmp_path / "ckpt")),
     )
-    assert sum(batch_sizes) == EXPECTED_HISTORICAL_BLOCK_COUNT
+    assert sum(batch_sizes) == expected
     assert max(batch_sizes) <= 25  # throttled
     assert len([s for s in batch_sizes if s]) >= 4  # drained in steps
 
