@@ -10,7 +10,7 @@ operator surface Spark-first:
 - Structured Streaming for the live/polling/combined sources
 - ``foreachBatch`` sinks for the splayed-file / Kafka / console observers
 - plus large-scale training-data-pipeline operators (dedup, similarity search,
-  text analysis, multimodal plumbing) that the 100 TB use case needs.
+  text analysis) that the 100 TB use case needs.
 
 Nothing here is a port: the reference's hand-rolled dataflow structure
 (chunking, fan-out, buffering) is replaced by Catalyst planning, partitioning

@@ -916,7 +916,7 @@ def dsir_model(spark: SparkSession, sf: str) -> DataFrame:
     target (high-quality slice) vs raw hashed-unigram distributions,
     rounded to integer micro-units per bucket.  Constant-size
     ({DSIR_BUCKETS} rows) — materialize/broadcast it once and score any
-    number of corpora or stream batches against it."""
+    number of corpora against it."""
     from event_stream_spark.datapipe.text import word_rows
     from event_stream_spark.datapipe.textstats import text_quality
 
@@ -960,8 +960,7 @@ def dsir_model(spark: SparkSession, sf: str) -> DataFrame:
 def dsir_score(docs: DataFrame, model: DataFrame) -> DataFrame:
     """Score (doc_id, text, …) rows against a frozen (b, lr_p6) model:
     (doc_id, n_words, dsir_p6, keep).  Pure map-side apart from the
-    per-doc integer sum — the shape that serves batch corpora and
-    streaming microbatches identically."""
+    per-doc integer sum."""
     from event_stream_spark.datapipe.text import word_rows
 
     wb = word_rows(docs).select("doc_id", _dsir_bucket(F.col("w")).alias("b"))

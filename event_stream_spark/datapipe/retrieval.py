@@ -79,9 +79,8 @@ def bm25_topk(
     bounded by its terms' df, not corpus size.
 
     N is defined as "documents with at least one token" — the corpus a
-    retrieval index can actually see — identically here, in the DuckDB
-    oracle, and in the streaming index's ``bm25_from_index``, so all three
-    agree even when a crawl batch carries empty/whitespace-only docs.
+    retrieval index can actually see — identically here and in the DuckDB
+    oracle, so both agree even when a crawl batch carries empty/whitespace-only docs.
     """
     from event_stream_spark.datapipe.matview import materialized
 
@@ -128,12 +127,11 @@ def score_postings(
     k: int = BM25_TOPK,
 ) -> DataFrame:
     """BM25 scoring over an existing (doc_id, term, tf) posting relation —
-    the ONE scorer shared by the batch index build (:func:`bm25_topk`) and
-    the incrementally-maintained streaming index
-    (``streaming/indexstream.py``).  Every statistic (dl, df, N, avgdl)
+    the scorer behind the batch index build (:func:`bm25_topk`), usable
+    over any posting relation.  Every statistic (dl, df, N, avgdl)
     derives from the postings themselves, computed once here — so N is
-    "documents with at least one token", identically in both paths (a
-    token-less crawl doc is invisible to the index and to the scorer), and
+    "documents with at least one token" (a token-less crawl doc is
+    invisible to the index and to the scorer), and
     no caller duplicates the corpus-wide dl aggregate."""
     # dl feeds BOTH the 1-row global stats aggregate and the scoring join;
     # persisted (doc-sized: two longs per doc) so the full posting scan +

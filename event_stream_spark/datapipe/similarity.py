@@ -1562,9 +1562,8 @@ def decontaminate_semantic(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def semantic_screen(vecs: DataFrame, eval_vecs: DataFrame) -> DataFrame:
-    """The screening core both the registry entry and the streaming twin
-    share: (vec_id, embedding) × frozen eval side → (vec_id,
-    max_eval_sim, contaminated).  Batch ≡ stream by construction.
+    """The screening core of the registry entry: (vec_id, embedding) ×
+    frozen eval side → (vec_id, max_eval_sim, contaminated).
 
     Execution is an Arrow ``mapInPandas`` kernel: the eval matrix is
     collected once on the driver (tiny by contract — benchmarks, not

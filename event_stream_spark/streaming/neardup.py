@@ -45,7 +45,7 @@ flagged (exactly the watermarked-dedup contract every bounded-state
 streaming dedup makes).  Pick the TTL from the dedup-recency SLO; the
 unbounded default keeps full-history semantics for bounded corpora, and
 a petabyte deployment that needs full history pushes claims into the
-snapshot log the way ``indexstream`` does.
+snapshot log.
 """
 
 from __future__ import annotations

@@ -1526,15 +1526,6 @@ def test_embedding_exact_single_payload_scan(spark):
     assert p.count("BroadcastHashJoin") == 1  # the memb attach
 
 
-def test_multimodal_meta_synthesizes_media_once(spark):
-    """r11: the five decode branches read the persisted media relation —
-    payload synthesis runs once per execution, not once per branch."""
-    from event_stream_spark.datapipe.multimodal import multimodal_meta
-
-    p = plan(multimodal_meta(spark, SF_CORRECT))
-    assert p.count("InMemoryTableScan") == 5
-
-
 def test_q30_cohort_single_scan_window_min(spark):
     """r11: the per-user first-event timestamp is a whole-partition window
     min over the one user_id exchange — ONE events scan, no join (the old

@@ -71,13 +71,13 @@ def test_never_witnessed_entries_lead():
 
 
 def test_window_rows_only_entries_are_by_design():
-    """Inside the window, only the two rows-only-by-design entries
-    (multimodal_meta: binary decode has no SQL twin; sketch_profile:
-    engine sketches hash-checked via sketch_exact) may lack an oracle."""
+    """Inside the window, only the rows-only-by-design entry
+    (sketch_profile: engine sketches hash-checked via sketch_exact) may
+    lack an oracle."""
     window = list(entry_mod.queries())[:DRIVER_WINDOW]
     oracles = entry_mod.oracle_sql()
     rows_only = {n for n in window if n not in oracles}
-    assert rows_only <= {"multimodal_meta", "sketch_profile"}, rows_only
+    assert rows_only <= {"sketch_profile"}, rows_only
 
 
 def test_witness_ages_reads_double_digit_rounds():

@@ -1747,92 +1747,6 @@ def test_streaming_anomaly_matches_batch(spark, tmp_path):
     assert [eid for eid, r in streamed.items() if r.is_anomaly] == [30]
 
 
-def test_streaming_heavy_hitters_space_saving(spark, tmp_path):
-    """Streaming heavy-hitters twin (streaming/topk.py): Space-Saving
-    summaries per hash bucket across microbatches — every true heavy
-    hitter (> bucket_total/capacity in its bucket) survives eviction, its
-    true count sits inside [count_lb, count_ub], and state stays hard-
-    bounded at `capacity` entries per bucket."""
-    import random
-
-    from event_stream_spark.streaming.topk import heavy_hitters_stream
-
-    rng = random.Random(7)
-    heavy = {"alpha": 400, "beta": 250, "gamma": 120}
-    words = [w for w, n in heavy.items() for _ in range(n)]
-    words += [f"rare{i}" for i in range(300)]  # eviction pressure
-    rng.shuffle(words)
-
-    src = str(tmp_path / "hh_feed")
-    os.makedirs(src)
-
-    def feed(name, ws):
-        tmp = str(tmp_path / (name + ".tmp"))
-        with open(tmp, "w") as fh:
-            for w in ws:
-                fh.write(json.dumps({"word": w}) + "\n")
-        os.replace(tmp, os.path.join(src, name + ".json"))
-
-    capacity, n_buckets = 16, 4
-    feed("b1", words[:400])
-    stream = spark.readStream.schema("word string").json(src)
-    latest: dict[tuple[int, str], tuple] = {}
-    sizes: list[int] = []
-
-    def absorb(b, _id):
-        rows = b.collect()
-        per_bucket: dict[int, int] = {}
-        for r in rows:
-            latest[(r["bucket"], r["word"])] = (
-                r["count_lb"], r["count_ub"], r["bucket_total"]
-            )
-            per_bucket[r["bucket"]] = per_bucket.get(r["bucket"], 0) + 1
-        sizes.extend(per_bucket.values())
-
-    q = (
-        heavy_hitters_stream(stream, capacity=capacity, n_buckets=n_buckets)
-        .writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", str(tmp_path / "ckpt_hh"))
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        feed("b2", words[400:])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    assert sizes and max(sizes) <= capacity  # hard state bound
-
-    # exact per-bucket truth with the operator's own bucketing
-    truth = {
-        (r["bucket"], r["word"]): (r["cnt"], r["btot"])
-        for r in spark.createDataFrame([(w,) for w in words], "word string")
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("word"), F.lit(n_buckets)).cast("int")
-        )
-        .groupBy("bucket", "word")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn(
-            "btot",
-            F.sum("cnt").over(
-                __import__("pyspark.sql.window", fromlist=["Window"])
-                .Window.partitionBy("bucket")
-            ),
-        )
-        .collect()
-    }
-    for (bucket, word), (cnt, btot) in truth.items():
-        if cnt > btot / capacity:  # the Space-Saving guarantee threshold
-            assert (bucket, word) in latest, (bucket, word, cnt, btot)
-            lb, ub, seen_total = latest[(bucket, word)]
-            assert lb <= cnt <= ub, (word, lb, cnt, ub)
-            assert seen_total == btot
-    for w in heavy:  # the actual hitters, specifically
-        assert any(k[1] == w for k in latest)
-
-
 def test_cli_table_admin_verbs(spark, tmp_path, capsys):
     """--table-admin drives the lakehouse maintenance loop end-to-end:
     history/count, branch + merge + branches + drop-branch, compact,
@@ -1918,9 +1832,14 @@ def test_cli_query_mode(spark, tmp_path, capsys):
     assert got.count() == 6
     assert "l_returnflag" in got.columns and "s_qty" in got.columns
 
+    from event_stream_spark.datapipe import DATAPIPE_QUERIES
+    from event_stream_spark.queries import QUERIES
+
+    capsys.readouterr()  # drop the q19 run's output
     run(["--list-queries"])
     listed = capsys.readouterr().out.split()
     assert "q19" in listed and "dedup_minhash" in listed and "bpe_learn" in listed
+    assert listed == sorted({*QUERIES, *DATAPIPE_QUERIES})
 
     # --explain prints the formatted physical plan, runs nothing
     run(["--query", "q1", "--sf-dir", "/root/testdata/sf0.001", "--explain"])
@@ -1931,74 +1850,9 @@ def test_cli_query_mode(spark, tmp_path, capsys):
 
     with _pytest.raises(SystemExit):
         run(["--query", "nope_not_a_query"])
-
-
-def test_streaming_posting_index_matches_batch_bm25(spark, tmp_path):
-    """Incrementally-maintained inverted index: documents stream in over
-    two microbatch rounds (plus a full checkpoint-loss replay that must be
-    a no-op), and BM25 over the live index returns exactly what the batch
-    scorer returns over the same corpus."""
-    from event_stream_spark.datapipe.retrieval import bm25_topk
-    from event_stream_spark.streaming.indexstream import (
-        posting_index_sink,
-        read_postings,
-        bm25_from_index,
-    )
-
-    src = str(tmp_path / "crawl")
-    index = str(tmp_path / "index")
-    sfdir = str(tmp_path / "sf")
-    os.makedirs(src)
-
-    docs = [
-        (1, "spark stream join fast spark"),
-        (2, "customer query fast table scan"),
-        (3, "hash table scan spark join"),
-        (4, "vector data window stream stream"),
-        (5, "query spark spark table"),
-    ]
-
-    def feed(name, rows):
-        tmp = str(tmp_path / (name + ".tmp"))
-        with open(tmp, "w") as fh:
-            for doc_id, text in rows:
-                fh.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-        os.replace(tmp, os.path.join(src, name + ".json"))
-
-    def start(ckpt):
-        stream = spark.readStream.schema("doc_id bigint, text string").json(src)
-        return (
-            posting_index_sink(stream, index, str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    feed("b1", docs[:3])
-    start("ck1").awaitTermination(120)
-    feed("b2", docs[3:])
-    start("ck1").awaitTermination(120)
-
-    n_postings = read_postings(spark, index).count()
-    assert read_postings(spark, index).select("doc_id").distinct().count() == 5
-
-    # checkpoint loss: full re-feed under a fresh checkpoint appends nothing
-    start("ck2_fresh").awaitTermination(120)
-    assert read_postings(spark, index).count() == n_postings
-
-    # batch twin over the identical corpus (as a documents table on disk)
-    qs = [(0, "spark table"), (1, "stream window")]
-    spark.createDataFrame(
-        [(i, t, "en", "s", len(t)) for i, t in docs],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(f"{sfdir}/documents.parquet")
-    batch = bm25_topk(spark, sfdir, queries=qs, k=3).collect()
-    live = bm25_from_index(spark, index, queries=qs, k=3).collect()
-    assert [tuple(r) for r in live] == [tuple(r) for r in batch]
-
-    # the term-bucketed layout prunes probes at plan time
-    import glob
-
-    assert glob.glob(f"{index}/postings/bucket=*")
+    # the deleted media entry is gone from the registry, not just unlisted
+    with _pytest.raises(SystemExit, match="unknown query"):
+        run(["--query", "multimodal_meta"])
 
 
 def test_snapshot_log_time_travel_and_atomicity(spark, tmp_path):
@@ -2179,44 +2033,6 @@ def test_snapshot_log_incremental_reads(spark, tmp_path):
     commit(rng(103, 105), table)    # snap 4
     inc34 = read_increment(spark, table, since=3)
     assert {r.id for r in inc34.collect()} == {103, 104}
-
-
-def test_incremental_index_from_snapshot_deltas(spark, tmp_path):
-    """Composition: the posting index maintained from snapshot-table DELTAS
-    (read_increment) equals the index built from the full corpus in one
-    shot — the incremental-consumer loop the CDC-lite feed exists for."""
-    from event_stream_spark.sources.snaplog import commit, read_increment, snapshots
-    from event_stream_spark.streaming.indexstream import index_batch, read_postings
-
-    corpus = str(tmp_path / "corpus")
-    inc_index = str(tmp_path / "inc_index")
-    full_index = str(tmp_path / "full_index")
-
-    batches = [
-        [(1, "spark stream join"), (2, "hash table scan")],
-        [(3, "customer query fast"), (4, "vector data window")],
-        [(5, "spark table query")],
-    ]
-
-    def df_of(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    last_seen = -1
-    for rows in batches:
-        commit(df_of(rows), corpus)
-        head = snapshots(corpus)[-1]
-        delta = (
-            read_increment(spark, corpus, since=last_seen)
-            if last_seen >= 0
-            else df_of(rows)
-        )
-        index_batch(spark, delta, inc_index)
-        last_seen = head
-
-    index_batch(spark, df_of([r for b in batches for r in b]), full_index)
-    inc = {(r.doc_id, r.term, r.tf) for r in read_postings(spark, inc_index).collect()}
-    full = {(r.doc_id, r.term, r.tf) for r in read_postings(spark, full_index).collect()}
-    assert inc == full and len(inc) > 0
 
 
 def test_snapshot_table_dml_roundtrip(spark, tmp_path):
@@ -2828,77 +2644,6 @@ def test_snaptable_stream_tails_commits(spark, tmp_path):
         q.awaitTermination(120)
 
 
-def test_table_is_the_bus_ingest_to_index(spark, tmp_path):
-    """The full loop with no bespoke plumbing: crawl files stream into a
-    snapshot table (atomic per-batch commits), a SECOND independent stream
-    tails that table via format("snaptable"), feeds the posting index, and
-    BM25 over the live index equals the batch operator over the corpus."""
-    from event_stream_spark.datapipe.retrieval import bm25_topk
-    from event_stream_spark.sources import snapstream
-    from event_stream_spark.streaming.dedupstream import corpus_snapshot_ingest_sink
-    from event_stream_spark.streaming.indexstream import (
-        bm25_from_index,
-        posting_index_sink,
-    )
-
-    snapstream.register(spark)
-    src = str(tmp_path / "crawl")
-    table = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    os.makedirs(src)
-
-    docs = [
-        (1, "spark stream join fast spark"),
-        (2, "customer query fast table scan"),
-        (3, "hash table scan spark join"),
-        (4, "vector data window stream stream"),
-    ]
-
-    def feed(name, rows):
-        tmp = str(tmp_path / (name + ".tmp"))
-        with open(tmp, "w") as fh:
-            for doc_id, text in rows:
-                fh.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-        os.replace(tmp, os.path.join(src, name + ".json"))
-
-    def ingest_round():
-        stream = spark.readStream.schema("doc_id bigint, text string").json(src)
-        q = (
-            corpus_snapshot_ingest_sink(stream, table, str(tmp_path / "ck_ingest"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def index_round():
-        stream = spark.readStream.format("snaptable").option(
-            "table_path", table
-        ).load()
-        q = (
-            posting_index_sink(stream, index, str(tmp_path / "ck_index"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    feed("b1", docs[:2])
-    ingest_round()
-    index_round()
-    feed("b2", docs[2:])
-    ingest_round()
-    index_round()
-
-    qs = [(0, "spark table"), (1, "stream fast")]
-    sfdir = str(tmp_path / "sf")
-    spark.createDataFrame(
-        [(i, t, "en", "s", len(t)) for i, t in docs],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(f"{sfdir}/documents.parquet")
-    batch = bm25_topk(spark, sfdir, queries=qs, k=3).collect()
-    live = bm25_from_index(spark, index, queries=qs, k=3).collect()
-    assert [tuple(r) for r in live] == [tuple(r) for r in batch] and live
-
-
 def test_snaptable_batch_read_time_travel(spark, tmp_path):
     """spark.read.format("snaptable") reads the latest snapshot by default
     and any pinned one via .option("snapshot", n)."""
@@ -3335,53 +3080,6 @@ def test_delete_where_prune_hint_targets_files(spark, tmp_path):
     assert df.filter("id = 1050").first().v == 2100
 
 
-def test_streaming_dsir_scoring_matches_batch(spark, tmp_path):
-    """Stream twin of dsir_weights: documents streamed in microbatches and
-    scored against the frozen model produce EXACTLY the batch operator's
-    rows, and a full at-least-once replay (fresh checkpoint, same files)
-    appends nothing — exactly-once per doc_id."""
-    from event_stream_spark.datapipe.corpusops import dsir_model, dsir_weights
-    from event_stream_spark.streaming.dsirstream import dsir_scoring_sink
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    src = str(tmp_path / "src")
-    # three files → three microbatches under maxFilesPerTrigger=1
-    for i in range(3):
-        docs.filter(f"doc_id % 3 = {i}").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    model = dsir_model(spark, sf)
-    out = str(tmp_path / "scored")
-
-    def run(checkpoint: str) -> None:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = dsir_scoring_sink(stream, model, out, checkpoint).trigger(
-            availableNow=True
-        ).start()
-        q.awaitTermination(120)
-
-    run(str(tmp_path / "ck1"))
-    got = {r.doc_id: r for r in spark.read.parquet(out).collect()}
-    want = {r.doc_id: r for r in dsir_weights(spark, sf).collect()}
-    assert set(got) == set(want)
-    for doc_id, w in want.items():
-        g = got[doc_id]
-        assert (g.n_words, g.dsir_p6, g.keep) == (
-            w.n_words, w.dsir_p6, w.keep
-        ), doc_id
-
-    # full replay with a FRESH checkpoint: every batch re-delivered, all
-    # absorbed by the doc_id ledger — no duplicates
-    run(str(tmp_path / "ck2"))
-    assert spark.read.parquet(out).count() == len(want)
-
-
 def test_snapshot_bloom_point_lookup_skips_files(spark, tmp_path):
     """Per-file bloom skipping: with keys SCATTERED across files every
     file's [min, max] spans the whole domain — range stats prune nothing —
@@ -3629,83 +3327,6 @@ def test_streaming_neardup_lsh_first_claim(spark, tmp_path):
     assert not any(d == 7 or f == 7 for d, _b, f in got)
 
 
-def test_streaming_pq_index_batch_stream_parity(spark, tmp_path):
-    """PQ index maintained from an embedding stream in atomic snapshot
-    commits: probing the streamed code table returns EXACTLY what the
-    inline ann_pq_topk computes over the same vectors and codebooks;
-    replays commit nothing; historical index states stay probe-able."""
-    import json as _json
-    import os as _os
-
-    from event_stream_spark.datapipe.similarity import (
-        ann_pq_topk,
-        pq_codebooks,
-        _query_vector,
-    )
-    from event_stream_spark.sources import snaplog
-    from event_stream_spark.streaming.pqstream import (
-        ann_from_pq_index,
-        pq_index_sink,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    cb = pq_codebooks(spark, sf)
-    q = _query_vector(spark, sf)
-    vecs = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in spark.read.parquet(f"{sf}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    ]
-
-    src = str(tmp_path / "pq_feed")
-    _os.makedirs(src)
-
-    def feed(name, rows):
-        tmp = str(tmp_path / (name + ".tmp"))
-        with open(tmp, "w") as fh:
-            for vid, emb in rows:
-                fh.write(_json.dumps({"vec_id": vid, "embedding": emb}) + "\n")
-        _os.replace(tmp, _os.path.join(src, name + ".json"))
-
-    half = len(vecs) // 2
-    feed("b1", vecs[:half])
-    table = str(tmp_path / "pq_table")
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>"
-    ).json(src)
-    qy = pq_index_sink(stream, table, str(tmp_path / "ckpt_pq"), cb).start()
-    try:
-        qy.processAllAvailable()
-        snap_half = snaplog.snapshots(table)[-1]
-        feed("b2", vecs[half:])
-        qy.processAllAvailable()
-        feed("b3", vecs[:10])  # replay: all already indexed → no commit
-        qy.processAllAvailable()
-    finally:
-        qy.stop()
-
-    # replay committed nothing: still exactly 2 snapshots
-    assert len(snaplog.snapshots(table)) == 2
-    assert snaplog.read_snapshot(spark, table).count() == len(vecs)
-
-    got = [
-        (r.vec_id, r.codes, r.adc_p6)
-        for r in ann_from_pq_index(spark, table, q, cb).collect()
-    ]
-    want = [
-        (r.vec_id, r.codes, r.adc_p6) for r in ann_pq_topk(spark, sf).collect()
-    ]
-    assert got == want
-
-    # time travel: the half-index probe sees only the first batch's vectors
-    early = ann_from_pq_index(spark, table, q, cb, snapshot=snap_half).collect()
-    assert all(r.vec_id < vecs[half][0] or r.vec_id <= vecs[half - 1][0]
-               for r in early)
-    assert {r.vec_id for r in early} <= {v for v, _e in vecs[:half]}
-
-
 # ---------------------------------------------------------------------------
 # deletion vectors
 # ---------------------------------------------------------------------------
@@ -3944,57 +3565,6 @@ def test_snap_count_metadata_only(spark, tmp_path):
         e.pop("rows", None)
     _json.dump(m, open(_manifest_path(table, 0), "w"))
     assert snap_count(table, snapshot=0) == 7
-
-
-def test_streaming_semantic_screen_matches_batch(spark, tmp_path):
-    """Stream twin of decontaminate_semantic: vectors streamed in
-    microbatches against the frozen eval set produce EXACTLY the batch
-    operator's rows; a full replay with a fresh checkpoint appends
-    nothing — exactly-once per vec_id."""
-    from pyspark.sql import functions as F
-
-    from event_stream_spark.datapipe.similarity import (
-        SEMDECON_EVAL_MOD,
-        decontaminate_semantic,
-    )
-    from event_stream_spark.streaming.semanticstream import semantic_screen_sink
-
-    sf = "/root/testdata/sf0.001"
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
-    is_eval = F.col("vec_id") % SEMDECON_EVAL_MOD == 0
-    eval_vecs = e.filter(is_eval).select(F.col("embedding").alias("ev"))
-    train = e.filter(~is_eval).select("vec_id", "embedding")
-    src = str(tmp_path / "src")
-    for i in range(3):
-        train.filter(f"vec_id % 3 = {i}").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    out = str(tmp_path / "screened")
-
-    def run(checkpoint: str) -> None:
-        stream = (
-            spark.readStream.schema(train.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = semantic_screen_sink(stream, eval_vecs, out, checkpoint).trigger(
-            availableNow=True
-        ).start()
-        q.awaitTermination(120)
-
-    run(str(tmp_path / "ck1"))
-    got = {r.vec_id: r for r in spark.read.parquet(out).collect()}
-    want = {r.vec_id: r for r in decontaminate_semantic(spark, sf).collect()}
-    assert set(got) == set(want)
-    for vid, w in want.items():
-        g = got[vid]
-        assert (g.max_eval_sim, g.contaminated) == (
-            w.max_eval_sim, w.contaminated
-        ), vid
-
-    run(str(tmp_path / "ck2"))
-    assert spark.read.parquet(out).count() == len(want)
 
 
 def test_snapshot_timestamp_travel_and_history(spark, tmp_path):
