@@ -17,7 +17,9 @@ The schema follows Config.kt:9-63 — an ``event-stream`` section with
 ``skip_empty_blocks``, ``ordered``, ``batch.size``; hoplite ``ConfigAlias``
 snake_case/camelCase key pairs are both accepted.  Spark-specific keys
 (``backend``, ``templates_dir``, sink options) replace the reference's
-node/websocket URIs, whose transport role the source backends own here.
+node/websocket URIs, whose transport role the source backends own here;
+``rpc_url`` (``--rpc-url``, backend ``http``) and ``grpc_target``
+(``--grpc-target``, backend ``grpc``) say where a real node is.
 """
 
 from __future__ import annotations
@@ -88,6 +90,8 @@ def load_config(path: str) -> dict:
     for key, names in {
         "backend": ("backend",),
         "templates_dir": ("templates_dir", "templates-dir", "fixtures_dir"),
+        "rpc_url": ("rpc_url", "rpc-url"),
+        "grpc_target": ("grpc_target", "grpc-target"),
         "splay_dir": ("splay_dir", "splay-dir"),
         "checkpoint": ("checkpoint",),
     }.items():
@@ -112,8 +116,10 @@ def build_parser() -> argparse.ArgumentParser:
     # source (Config.kt: node/from/to)
     p.add_argument("--from-height", type=int, default=1)
     p.add_argument("--to-height", type=int, default=None)
-    p.add_argument("--backend", default="synthetic", help="synthetic | fixtures")
+    p.add_argument("--backend", default="synthetic", help="synthetic | fixtures | http | grpc")
     p.add_argument("--templates-dir", default=None, help="fixtures backend root")
+    p.add_argument("--rpc-url", default=None, help="http backend: node RPC URL")
+    p.add_argument("--grpc-target", default=None, help="grpc backend: node host:port")
     p.add_argument("--batch", action="store_true", help="bounded batch run (no stream)")
     # options (BlockStreamOptions.kt)
     p.add_argument("--skip-empty-blocks", action="store_true")
@@ -164,8 +170,13 @@ def build_pipeline(spark, args) -> DataFrame:
     from event_stream_spark.streaming.combined import historical_stream
 
     options = {"backend": args.backend}
-    if args.templates_dir:
-        options["fixtures_dir"] = args.templates_dir
+    for key, value in (
+        ("fixtures_dir", args.templates_dir),
+        ("rpc_url", args.rpc_url),
+        ("grpc_target", args.grpc_target),
+    ):
+        if value:
+            options[key] = value
     to = args.to_height
     if to is None and args.batch:
         raise SystemExit("--batch needs --to-height (bounded scan)")

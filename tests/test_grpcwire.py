@@ -153,6 +153,8 @@ def test_transport_conformance(transport):
         calls = 1 + len(heights)
         if transport == "http":
             assert server.requests == 1 + 2 * (calls - 1)  # two GETs per height
+            # keep-alive: every GET, 404s included, on one connection
+            assert server.connections == 1
         elif transport == "grpc":
             # connection reuse: many calls, one dial, distinct odd stream ids
             assert server.connections == 1

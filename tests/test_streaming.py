@@ -584,6 +584,49 @@ def test_cli_batch_splay(spark, tmp_path):
     assert {f: os.path.getmtime(f) for f in files} == mtimes
 
 
+def test_cli_batch_reaches_node(spark, tmp_path):
+    """The CLI reaches a real node: ``--rpc-url`` (or the ``rpc_url`` config
+    key) with ``--backend http``, and ``--grpc-target`` with ``--backend
+    grpc``, scan the served chain and write exactly one splay file per
+    height."""
+    import hashlib
+
+    from event_stream_spark.cli import run
+    from event_stream_spark.sources.blockstream import SyntheticNode
+    from event_stream_spark.sources.grpcwire import GrpcBlockServer
+    from event_stream_spark.sources.rpcnode import RpcNodeServer
+
+    def scan(out, lo, hi, *flags):
+        run(["--from-height", str(lo), "--to-height", str(hi), "--batch",
+             "--no-tx-meta", "--splay-dir", out, *flags])
+        files = set(glob.glob(f"{out}/*/*.json"))
+        assert files == {
+            os.path.join(out, hashlib.sha256(str(h).encode()).hexdigest()[:4],
+                         f"{h:010d}.json")
+            for h in range(lo, hi + 1)
+        }
+        return {json.load(open(f))["chain_id"] for f in files}
+
+    server = RpcNodeServer(SyntheticNode("cli-http-1"))
+    grpc = GrpcBlockServer(SyntheticNode("cli-grpc-1"))
+    try:
+        chains = scan(str(tmp_path / "http"), 1, 30,
+                      "--backend", "http", "--rpc-url", server.url)
+        assert chains == {"cli-http-1"}  # served, not the synthetic default
+        assert server.requests == 60  # two GETs per height
+
+        cfg = tmp_path / "node.json"
+        cfg.write_text(json.dumps({"backend": "http", "rpc_url": server.url}))
+        assert scan(str(tmp_path / "cfg"), 31, 40, "--config", str(cfg)) == {"cli-http-1"}
+
+        chains = scan(str(tmp_path / "grpc"), 1, 10, "--backend", "grpc",
+                      "--grpc-target", f"{grpc.host}:{grpc.port}")
+        assert chains == {"cli-grpc-1"}
+    finally:
+        server.close()
+        grpc.close()
+
+
 def _live_fixture_payloads(templates_dir):
     """The 6 golden NewBlock ws messages, ordered by height."""
     import json as _json
@@ -713,69 +756,65 @@ def test_push_feed_combined_with_reconnect(spark, push_corpus, tmp_path):
     assert live_seen == list(push_corpus.live_heights)
 
 
-def test_http_rpc_transport_batch_scan(spark, templates_dir):
-    """S5/S7 over REAL HTTP: executors fetch the golden corpus with two
-    GETs per height from a localhost Tendermint-RPC-shaped server (the
-    reference's TendermintServiceOpenApiClient fetch model), and the
-    /status head probe resolves an open ``to``."""
+def test_http_rpc_transport_batch_scan(spark, hist_corpus):
+    """S5/S7 over REAL HTTP: executors fetch the corpus with two GETs per
+    height from a localhost Tendermint-RPC-shaped server (the reference's
+    TendermintServiceOpenApiClient fetch model), each task over one
+    keep-alive connection, and the /status head probe resolves an open
+    ``to``."""
     from event_stream_spark.operators.flatten import assemble_stream_blocks
     from event_stream_spark.sources import blockstream
-    from event_stream_spark.sources.blockstream import FixtureNode
     from event_stream_spark.sources.rpcnode import RpcNodeServer
-    from event_stream_spark.streaming import parse_source_rows
+    from event_stream_spark.streaming import parse_source_rows, resolve_heights
 
-    server = RpcNodeServer(FixtureNode(templates_dir))
+    node = blockstream._make_node(hist_corpus.options)
+    server = RpcNodeServer(node)
     try:
         blockstream.register(spark)
         df = (
             spark.read.format("blockstream")
             .option("backend", "http")
             .option("rpc_url", server.url)
-            .option("from_height", str(MIN_HIST_HEIGHT))
-            .option("to_height", str(MAX_HIST_HEIGHT))
+            .option("from_height", str(hist_corpus.lo))
+            .option("to_height", str(hist_corpus.hi))
             .load()
         )
         sb = assemble_stream_blocks(
             parse_source_rows(df), historical=True, decode_tx_meta=False
         )
-        assert sb.count() == 100  # golden corpus over the wire
-        assert server.requests >= 200  # two RPCs per height really happened
+        assert sb.count() == hist_corpus.expected  # the corpus over the wire
+        # two RPCs per height really happened, on one connection per task
+        assert server.requests >= 2 * (hist_corpus.hi - hist_corpus.lo + 1)
+        assert 0 < server.connections <= 2 * spark.sparkContext.defaultParallelism
 
         # open `to`: resolved via the /status head probe over HTTP
-        from event_stream_spark.streaming import resolve_heights
-
         frm, to, live = resolve_heights(
             "latest", None, backend="http", rpc_url=server.url
         )
-        assert frm == to == FixtureNode(templates_dir).head()
+        assert frm == to == node.head()
         assert live == to + 1
     finally:
         server.close()
 
 
-def test_combined_flow_over_http_with_advancing_head(spark, templates_dir, tmp_path):
+def test_combined_flow_over_http_with_advancing_head(spark, hist_corpus, tmp_path):
     """The flagship blockDataFlow shape with BOTH legs on a real wire:
-    historical backfill (paged GETs) ∪ live polling tail whose /status head
-    ADVANCES mid-stream (simulated block production) = the golden 100+6,
-    heights exact, no dupes — S3/S4/S11 over genuine HTTP."""
-    from tests.conftest import (
-        EXPECTED_HISTORICAL_BLOCK_COUNT,
-        EXPECTED_LIVE_COUNT,
-        MAX_LIVE_HEIGHT,
-        MIN_LIVE_HEIGHT,
-    )
-    from event_stream_spark.sources.blockstream import FixtureNode
+    historical backfill ∪ live polling tail whose /status head ADVANCES
+    mid-stream (simulated block production) = history + live, heights
+    exact, no dupes — S3/S4/S11 over genuine HTTP."""
+    from event_stream_spark.sources.blockstream import _make_node
     from event_stream_spark.sources.rpcnode import RpcNodeServer
     from event_stream_spark.streaming import combined_block_stream
 
-    server = RpcNodeServer(FixtureNode(templates_dir))
-    server.set_head(MIN_LIVE_HEIGHT + 2)  # chain head mid-live-corpus
+    live_heights = hist_corpus.live_heights
+    server = RpcNodeServer(_make_node(hist_corpus.options))
+    server.set_head(live_heights[0] + 2)  # chain head mid-live-corpus
     try:
         df = combined_block_stream(
             spark,
-            MIN_HIST_HEIGHT,
-            MAX_HIST_HEIGHT,
-            live_from=MIN_LIVE_HEIGHT,
+            hist_corpus.lo,
+            hist_corpus.hi,
+            live_from=live_heights[0],
             decode_tx_meta=False,
             backend="http",
             rpc_url=server.url,
@@ -795,8 +834,8 @@ def test_combined_flow_over_http_with_advancing_head(spark, templates_dir, tmp_p
         try:
             q.processAllAvailable()
             n_before = len(seen)
-            assert n_before == EXPECTED_HISTORICAL_BLOCK_COUNT + 3
-            server.set_head(MAX_LIVE_HEIGHT)  # three more blocks produced
+            assert n_before == hist_corpus.expected + 3
+            server.set_head(live_heights[-1])  # three more blocks produced
             q.processAllAvailable()
         finally:
             q.stop()
@@ -805,9 +844,9 @@ def test_combined_flow_over_http_with_advancing_head(spark, templates_dir, tmp_p
 
     heights = sorted(h for h, _ in seen)
     assert len(heights) == len(set(heights))  # no dupes across the handoff
-    assert len(heights) == EXPECTED_HISTORICAL_BLOCK_COUNT + EXPECTED_LIVE_COUNT
+    assert len(heights) == hist_corpus.expected + len(live_heights)
     live_seen = sorted(h for h, is_hist in seen if not is_hist)
-    assert live_seen == list(range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1))
+    assert live_seen == list(live_heights)
 
 
 def test_http_rpc_transport_retries_502():
@@ -873,6 +912,115 @@ def test_http_node_retries_429_instead_of_skipping_height():
     finally:
         server.shutdown()
         server.server_close()
+
+
+def test_http_node_redials_after_server_closes_connection():
+    """The node keeps one connection for all its GETs; a connection the
+    server closed between calls is a transport fault: the next fetch
+    redials and succeeds instead of failing the read."""
+    import socket
+
+    from event_stream_spark.sources.blockstream import SyntheticNode
+    from event_stream_spark.sources.rpcnode import HttpNode, RpcNodeServer
+
+    node = SyntheticNode()
+    server = RpcNodeServer(node)
+    client = HttpNode({"rpc_url": server.url})
+    try:
+        assert client.fetch(1) == node.fetch(1)
+        assert server.connections == 1
+        for sock in list(server._socks):
+            sock.shutdown(socket.SHUT_RDWR)
+        assert client.fetch(2) == node.fetch(2)
+        assert server.connections == 2
+    finally:
+        client.close()
+        server.close()
+
+
+def test_closed_rpc_server_stops_answering():
+    """``RpcNodeServer.close()`` shuts the open keep-alive connections too:
+    a client holding one gets no more answers, and its next fetch raises
+    once the retries are spent."""
+    import threading
+
+    from event_stream_spark.sources.blockstream import SyntheticNode
+    from event_stream_spark.sources.rpcnode import HttpNode, RpcNodeServer
+
+    node = SyntheticNode()
+    server = RpcNodeServer(node)
+    client = HttpNode({"rpc_url": server.url})
+    try:
+        assert client.fetch(1) == node.fetch(1)
+        assert server.connections == 1  # the client's connection is open
+        closer = threading.Thread(target=server.close, daemon=True)
+        closer.start()
+        closer.join(timeout=10)
+        assert not closer.is_alive()  # close() does not wait on the client
+        with pytest.raises(OSError):
+            client.fetch(2)
+        assert server.requests == 2
+    finally:
+        client.close()
+
+
+def test_http_node_rpc_url_scheme_and_path_prefix():
+    """``rpc_url`` keeps what a URL opener accepts: a path prefix is kept
+    on every GET, and ``https://`` selects a TLS connection."""
+    import http.client
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from event_stream_spark.sources.rpcnode import HttpNode
+
+    paths = []
+
+    class UnderRpc(BaseHTTPRequestHandler):
+        """Answers only under ``/rpc/`` (the payload names the path it was
+        asked for); anything else is a 400."""
+
+        def log_message(self, *a):
+            pass
+
+        def do_GET(self):
+            paths.append(self.path)
+            if not self.path.startswith("/rpc/"):
+                self.send_error(400, "outside /rpc/")
+                return
+            body = {"result": {"sync_info": {"latest_block_height": "42"}},
+                    "path": self.path}
+            data = json.dumps(body).encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(data)))
+            self.end_headers()
+            self.wfile.write(data)
+
+    stub = ThreadingHTTPServer(("127.0.0.1", 0), UnderRpc)
+    threading.Thread(target=stub.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{stub.server_address[1]}/rpc"
+    try:
+        for url in (base, base + "/"):
+            paths.clear()
+            client = HttpNode({"rpc_url": url})
+            assert client.head() == 42
+            block, results = client.fetch(7)
+            client.close()
+            assert json.loads(block)["path"] == "/rpc/block?height=7"
+            assert json.loads(results)["path"] == "/rpc/block_results?height=7"
+            assert paths == [
+                "/rpc/status", "/rpc/block?height=7", "/rpc/block_results?height=7",
+            ]
+    finally:
+        stub.shutdown()
+        stub.server_close()
+
+    # https: a TLS connection to the URL's host and port (nothing is dialled
+    # until the first GET)
+    tls = HttpNode({"rpc_url": "https://node.invalid:26657/rpc"})
+    assert isinstance(tls._conn, http.client.HTTPSConnection)
+    assert (tls._conn.host, tls._conn.port) == ("node.invalid", 26657)
+    with pytest.raises(ValueError, match="rpc_url"):
+        HttpNode({"rpc_url": "ftp://node.invalid/rpc"})
 
 
 def test_push_feed_throttle_and_subscription(spark, templates_dir, tmp_path):
@@ -1260,25 +1408,39 @@ def test_push_feed_restart_from_checkpoint(spark, templates_dir, tmp_path):
     assert expected <= set(seen)  # every message delivered (dups allowed)
 
 
+class HistCorpus(NamedTuple):
+    """A historical range on one content node, the count of heights it
+    holds, and the live heights that follow it on the same node."""
+
+    options: dict
+    lo: int
+    hi: int
+    expected: int
+    live_heights: range
+
+
 @pytest.fixture(
     params=["synthetic", *(["fixtures"] if os.path.isdir(TEMPLATES) else [])]
 )
-def hist_corpus(request) -> tuple[dict, int, int, int]:
-    """(source options, from, to, heights present) of a historical range:
-    a hole-free ``SyntheticNode`` chain 1..100, or the golden corpus when
-    the reference templates exist."""
+def hist_corpus(request) -> HistCorpus:
+    """A hole-free ``SyntheticNode`` chain (history 1..100, live 101..106),
+    or the golden corpus when the reference templates exist."""
     if request.param == "fixtures":
-        from tests.conftest import EXPECTED_HISTORICAL_BLOCK_COUNT
+        from tests.conftest import (
+            EXPECTED_HISTORICAL_BLOCK_COUNT,
+            MAX_LIVE_HEIGHT,
+            MIN_LIVE_HEIGHT,
+        )
 
         templates_dir = request.getfixturevalue("templates_dir")
-        return (
+        return HistCorpus(
             {"backend": "fixtures", "fixtures_dir": templates_dir},
             MIN_HIST_HEIGHT,
             MAX_HIST_HEIGHT,
             EXPECTED_HISTORICAL_BLOCK_COUNT,
+            range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1),
         )
-    lo, hi = 1, 100
-    return {"backend": "synthetic"}, lo, hi, hi - lo + 1  # no holes
+    return HistCorpus({"backend": "synthetic"}, 1, 100, 100, range(101, 107))
 
 
 def test_blockstream_max_heights_per_trigger(spark, hist_corpus, tmp_path):
@@ -1286,7 +1448,7 @@ def test_blockstream_max_heights_per_trigger(spark, hist_corpus, tmp_path):
     max_heights_per_trigger heights; the full range still arrives."""
     from event_stream_spark.streaming import historical_stream
 
-    options, lo, hi, expected = hist_corpus
+    options, lo, hi, expected, _live = hist_corpus
     batch_sizes = []
     _drain(
         historical_stream(
