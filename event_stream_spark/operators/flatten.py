@@ -127,9 +127,12 @@ def enrich_stream_blocks(
 ) -> DataFrame:
     """P1/J1: blocks ⋈ block_results on height → STREAM_BLOCK wide rows.
 
-    ``decode_tx_meta=False`` skips the (Python) protobuf fee/memo decode and
-    leaves fee/denom/note null — the only non-JVM step, off by choice when the
-    caller doesn't need fees (mirrors the reference's lazy decode).
+    The lake's txs come from parquet with no Python pass to share, so this
+    join adds ``tx_meta`` with the pandas UDF of ``operators/txmeta.py``
+    (the ``blockstream`` source decodes it in its fetch instead).
+    ``decode_tx_meta=False`` skips that Python step and leaves fee/denom/note
+    null, off by choice when the caller doesn't need fees (mirrors the
+    reference's lazy decode).
 
     LEFT OUTER on height: a block whose /block_results fetch yields nothing
     still streams, with empty event arrays — the reference's own golden corpus
@@ -139,7 +142,7 @@ def enrich_stream_blocks(
     """
     joined = blocks.join(block_results, on="height", how="left")
     return assemble_stream_blocks(
-        joined, historical=historical, decode_tx_meta=decode_tx_meta
+        with_tx_meta_column(joined, enabled=decode_tx_meta), historical=historical
     )
 
 
@@ -147,9 +150,11 @@ def assemble_stream_blocks(
     joined: DataFrame, *, historical: bool = True, decode_tx_meta: bool = True
 ) -> DataFrame:
     """P1 core: already-paired rows (height, chain_id, block_ts, block, txs,
-    txs_results, begin_block_events) → STREAM_BLOCK wide rows.  Shared
-    verbatim by the batch (join) and streaming (paired source) paths."""
-    joined = with_tx_meta_column(joined, enabled=decode_tx_meta)
+    tx_meta, txs_results, begin_block_events) → STREAM_BLOCK wide rows.
+    Shared verbatim by the lake join and the ``blockstream`` paths.
+    ``decode_tx_meta=False`` nulls the input's fee/denom/note."""
+    if not decode_tx_meta:
+        joined = with_tx_meta_column(joined, enabled=False)
 
     h, ts = F.col("height"), F.col("block_ts")
     txs, trs, meta = F.col("txs"), F.col("txs_results"), F.col("tx_meta")

@@ -15,9 +15,14 @@ so this implements a ~50-line reader of the public protobuf *wire format*
 Failure semantics mirror the reference: unparseable tx → null fee/denom/note
 (runCatching → null), amount string unparseable → 0 (InnerCoin.kt:6-8).
 
-This is the ONE Python step in the enrichment path; it runs as an
-Arrow-batched pandas UDF over the per-block tx array (vectorized transfer,
-no per-row Python round-trips).  tx_hash stays JVM-side (functions/hashing.py).
+A node read already holds each block's JSON in Python, so the
+``blockstream`` fetch (``sources/blockstream.py::read_batches``) decodes
+there and emits ``tx_meta`` as a source column: the batch backfill and the
+live tail run no tx-meta step of their own.  Only the lake join
+(``enrich_stream_blocks``), whose txs come from parquet with no Python pass
+to share, adds the column with an Arrow-batched pandas UDF over the
+per-block tx array.  Both go through ``tx_meta_list``.  tx_hash stays
+JVM-side (functions/hashing.py).
 """
 
 from __future__ import annotations
@@ -131,20 +136,23 @@ def decode_tx_meta(tx_b64: str | None) -> tuple[int | None, str | None, str | No
         return (None, None, None)
 
 
-def _tx_meta_batch(txs: pd.Series) -> pd.Series:
-    def per_block(arr):
-        if arr is None:
-            return []
-        return [
-            {"fee": (None if f is None else f), "denom": d, "note": m}
-            for (f, d, m) in (decode_tx_meta(t) for t in arr)
-        ]
+def tx_meta_list(txs) -> list[dict]:
+    """One block's tx payloads → its ``tx_meta`` array (empty for no txs)."""
+    if txs is None:
+        return []
+    return [
+        {"fee": f, "denom": d, "note": m}
+        for (f, d, m) in (decode_tx_meta(t) for t in txs)
+    ]
 
-    return txs.map(per_block)
+
+def _tx_meta_batch(txs: pd.Series) -> pd.Series:
+    return txs.map(tx_meta_list)
 
 
 def with_tx_meta_column(df: DataFrame, *, enabled: bool = True) -> DataFrame:
-    """Add ``tx_meta: array<struct<fee,denom,note>>`` aligned with ``txs``.
+    """Add ``tx_meta: array<struct<fee,denom,note>>`` aligned with ``txs``
+    (replacing any such column); ``enabled=False`` gives null entries.
 
     The pandas UDF is constructed lazily (a module-level decorator would parse
     the DDL type at import time, which fails on executors with no session).

@@ -15,11 +15,19 @@ source contract IS that loop, formalized:
 - ``read(partition)``  = the per-range RPC fetch (two calls per height, J1)
 - checkpointed offsets subsume `Checkpoint(checkEvery=20)` (Checkpoint.kt:6-34)
 
-Rows are raw JSON pairs ``(height, block_json, block_results_json)`` — the
-same decode/enrich DataFrame transforms serve batch and streaming unchanged.
+Rows are raw JSON pairs ``(height, block_json, block_results_json)`` plus
+``tx_meta``, each tx's (fee, denom, note) decoded where the block JSON
+already is in Python (P5) — the same enrich DataFrame transforms serve batch
+and streaming unchanged.  One function, ``read_batches``, is every node read:
+it builds the node, fetches a height range, decodes, closes the node and
+yields Arrow batches of ``SCHEMA``.
 
-Batch mode (``spark.read.format("blockstream")``) covers the bounded
-historical scan (S5); streaming mode covers polling live tail (S3/S4/S10).
+The streaming reader covers the polling live tail (S3/S4/S10): streaming
+needs replayable height offsets.  The bounded historical scan (S5) needs
+none, so ``streaming.historical_stream(streaming=False)`` reads it as
+``spark.range(from, to + 1)`` mapped through ``fetch_heights`` — no Python
+planner per job.  ``spark.read.format("blockstream")`` still reads the same
+bounded scan through ``BlockBatchReader``.
 
 Four built-in node backends stand behind one seam, like the reference's
 NetAdapter (NetAdapter.kt:13-30): ``fixtures`` replays the golden template
@@ -34,10 +42,13 @@ per ``read()`` from the options, so no node is pickled to executors.
 from __future__ import annotations
 
 import base64
+import itertools
 import json
 import os
 from collections.abc import Iterator, Sequence
+from contextlib import closing
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -45,7 +56,22 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-SCHEMA = "height BIGINT, block_json STRING, block_results_json STRING"
+from event_stream_spark.operators.txmeta import TX_META_ELEM, tx_meta_list
+
+SCHEMA = (
+    "height BIGINT, block_json STRING, block_results_json STRING, "
+    f"tx_meta array<{TX_META_ELEM}>"
+)
+#: ``tx_meta``'s Arrow type (``TX_META_ELEM``)
+_TX_META_ARROW = pa.list_(
+    pa.struct(
+        [("fee", pa.decimal128(38, 0)), ("denom", pa.string()), ("note", pa.string())]
+    )
+)
+
+#: rows per Arrow batch (Spark's default ``arrow.maxRecordsPerBatch``): a
+#: deep range streams out of a task instead of being held whole
+BATCH_ROWS = 10_000
 
 #: fewest heights per partition: a live trigger of a dozen heights stays one
 #: task instead of paying the per-task set-up twice
@@ -68,6 +94,9 @@ class FixtureNode:
 
     def __init__(self, root: str):
         self.root = root
+
+    def close(self) -> None:
+        pass  # no connection to release
 
     def head(self) -> int:
         heights = [
@@ -103,6 +132,9 @@ class SyntheticNode:
     def __init__(self, chain_id: str = "synthetic-1", head: int = SYNTHETIC_HEAD):
         self.chain_id = chain_id
         self._head = int(head)
+
+    def close(self) -> None:
+        pass  # no connection to release
 
     def head(self) -> int:
         return self._head
@@ -222,6 +254,19 @@ def _cores(options: dict) -> int:
     return int(options.get("_cores") or os.cpu_count() or 1)
 
 
+def _bounds(options: dict) -> tuple[int, int]:
+    """The bounded scan's ``[from, to]``, checked on the driver."""
+    if options.get("to_height") is None:
+        raise ValueError(
+            "batch blockstream scan is bounded: pass to_height "
+            "(use the streaming reader for an open-ended tail)"
+        )
+    lo, hi = int(options["from_height"]), int(options["to_height"])
+    if lo > hi:
+        raise ValueError(f"from ({lo}) must be <= to ({hi})")
+    return lo, hi
+
+
 def _read_range(node, part: HeightRange) -> Iterator[tuple]:
     for h in range(part.lo, part.hi + 1):
         block_json, results_json = node.fetch(h)
@@ -230,30 +275,64 @@ def _read_range(node, part: HeightRange) -> Iterator[tuple]:
         yield (h, block_json, results_json)
 
 
+def _block_txs(block_json: str) -> list | None:
+    try:
+        txs = json.loads(block_json)["result"]["block"]["data"]["txs"]
+    except (ValueError, KeyError, TypeError):
+        return None  # what from_json gives the enrich path: no txs
+    return txs if isinstance(txs, list) else None
+
+
+def read_batches(options: dict, part: HeightRange) -> Iterator[pa.RecordBatch]:
+    """Every node read: build the node, fetch ``part``, decode each block's
+    ``data.txs`` into ``tx_meta``, close the node.  Yields ``SCHEMA``
+    batches of at most ``BATCH_ROWS`` rows."""
+    with closing(_make_node(options)) as node:
+        rows = _read_range(node, part)
+        while chunk := list(itertools.islice(rows, BATCH_ROWS)):
+            heights, blocks, results = zip(*chunk)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(heights, pa.int64()),
+                    pa.array(blocks, pa.string()),
+                    pa.array(results, pa.string()),
+                    pa.array([tx_meta_list(_block_txs(b)) for b in blocks], _TX_META_ARROW),
+                ],
+                names=["height", "block_json", "block_results_json", "tx_meta"],
+            )
+
+
+def fetch_heights(options: dict):
+    """``mapInArrow`` body for ``spark.range(from, to + 1)``: a task's ids
+    are one contiguous range, read with one node."""
+
+    def fetch(id_batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ids = [b.column(0) for b in id_batches if b.num_rows]
+        if ids:
+            part = HeightRange(ids[0][0].as_py(), ids[-1][-1].as_py())
+            yield from read_batches(options, part)
+
+    return fetch
+
+
 # ---------------------------------------------------------------------------
 # Readers
 # ---------------------------------------------------------------------------
 
 class BlockBatchReader(DataSourceReader):
-    """S5 bounded historical scan."""
+    """S5 bounded historical scan as ``spark.read.format("blockstream")``.
+    The package's own batch read is ``spark.range`` + ``fetch_heights``;
+    both read through ``read_batches``."""
 
     def __init__(self, options: dict):
         self.options = options
-        if "to_height" not in options:
-            raise ValueError(
-                "batch blockstream scan is bounded: pass to_height "
-                "(use the streaming reader for an open-ended tail)"
-            )
-        self.lo = int(options["from_height"])
-        self.hi = int(options["to_height"])
-        if self.lo > self.hi:
-            raise ValueError(f"from ({self.lo}) must be <= to ({self.hi})")
+        self.lo, self.hi = _bounds(options)
 
     def partitions(self) -> Sequence[InputPartition]:
         return _plan(self.lo, self.hi, _cores(self.options))
 
-    def read(self, partition: HeightRange) -> Iterator[tuple]:
-        return _read_range(_make_node(self.options), partition)
+    def read(self, partition: HeightRange) -> Iterator[pa.RecordBatch]:
+        return read_batches(self.options, partition)
 
 
 class BlockStreamReader(DataSourceStreamReader):
@@ -282,7 +361,8 @@ class BlockStreamReader(DataSourceStreamReader):
         return {"height": self.start - 1}
 
     def latestOffset(self) -> dict:
-        head = _make_node(self.options).head()
+        with closing(_make_node(self.options)) as node:
+            head = node.head()
         if self.to is not None:
             head = min(head, self.to)
         if self.max_per_trigger is not None:
@@ -300,8 +380,8 @@ class BlockStreamReader(DataSourceStreamReader):
         self._last = max(self._last, start["height"])
         return _plan(start["height"] + 1, end["height"], _cores(self.options))
 
-    def read(self, partition: HeightRange) -> Iterator[tuple]:
-        return _read_range(_make_node(self.options), partition)
+    def read(self, partition: HeightRange) -> Iterator[pa.RecordBatch]:
+        return read_batches(self.options, partition)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the checkpoint log

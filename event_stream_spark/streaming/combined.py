@@ -22,6 +22,8 @@ out-of-order window is bounded by the backfill/live handoff.
 
 from __future__ import annotations
 
+from contextlib import closing
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +37,8 @@ from event_stream_spark.schemas import (
 
 
 def parse_source_rows(df: DataFrame) -> DataFrame:
-    """(height, block_json, block_results_json) → flat paired columns.
+    """(height, block_json, block_results_json, tx_meta) → flat paired
+    columns.
 
     Shared by batch and streaming reads of the `blockstream` source."""
     b = F.from_json(F.col("block_json"), BLOCK_RPC_RESPONSE)["result"]["block"]
@@ -45,6 +48,7 @@ def parse_source_rows(df: DataFrame) -> DataFrame:
         b["header"]["chain_id"].alias("chain_id"),
         header_datetime(b["header"]["time"]).alias("block_ts"),
         b["data"]["txs"].alias("txs"),
+        "tx_meta",
         b.alias("block"),
         r["txs_results"].alias("txs_results"),
         r["begin_block_events"].alias("begin_block_events"),
@@ -87,10 +91,10 @@ def resolve_heights(
     no Spark job."""
     from event_stream_spark.sources import blockstream
 
-    node = blockstream._make_node(
-        {k: str(v) for k, v in options.items() if v is not None}
-    )
-    head = node.head()
+    with closing(
+        blockstream._make_node({k: str(v) for k, v in options.items() if v is not None})
+    ) as node:
+        head = node.head()
     if from_height == "latest":
         from_height = head
     elif isinstance(from_height, str):
@@ -104,14 +108,21 @@ def resolve_heights(
 
 
 def _raw_source(spark: SparkSession, *, streaming: bool, **options) -> DataFrame:
+    """The node's SCHEMA rows.  A stream reads the `blockstream` source,
+    whose height offsets make it replayable.  A bounded batch scan has no
+    offsets to track: ``spark.range(from, to + 1)`` in core-sized
+    partitions, each fetched in one ``mapInArrow`` pass (S5), with no Python
+    planner per job."""
     from event_stream_spark.sources import blockstream
 
+    opts = {k: str(v) for k, v in options.items() if v is not None}
+    cores = spark.sparkContext.defaultParallelism
+    if not streaming:
+        lo, hi = blockstream._bounds(opts)
+        ids = spark.range(lo, hi + 1, numPartitions=len(blockstream._plan(lo, hi, cores)))
+        return ids.mapInArrow(blockstream.fetch_heights(opts), blockstream.SCHEMA)
     blockstream.register(spark)
-    reader = spark.readStream if streaming else spark.read
-    return reader.format("blockstream").options(
-        **{k: str(v) for k, v in options.items() if v is not None},
-        _cores=str(spark.sparkContext.defaultParallelism),
-    ).load()
+    return spark.readStream.format("blockstream").options(**opts, _cores=str(cores)).load()
 
 
 def _source(

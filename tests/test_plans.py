@@ -1588,3 +1588,33 @@ def test_curate_v2_no_redundant_base_scan(spark):
 
     p = plan(datapipe_curate_v2(spark, SF_CORRECT))
     assert p.count("documents.parquet") == 3
+
+
+def test_backfill_plan_is_one_python_pass(spark, tmp_path):
+    """A batch backfill reads heights through one ``MapInArrow`` over
+    ``spark.range`` that also decodes tx metadata: no pandas/Python UDF
+    node and no Python data-source scan (whose planner is a Python worker
+    per job).  The live stream decodes in its source too: no
+    ``ArrowEvalPython``."""
+    from event_stream_spark.streaming import historical_stream, live_stream
+
+    df = historical_stream(spark, 1, 60, streaming=False, backend="synthetic")
+    df.write.format("noop").mode("overwrite").save()
+    p = plan(df)
+    assert p.count("MapInArrow") == 1
+    for node in ("ArrowEvalPython", "BatchEvalPython", "BatchScan"):
+        assert node not in p, node
+
+    q = (
+        live_stream(spark, from_height=1, to_height=30, backend="synthetic")
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        sp = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    assert "MicroBatchScan" in sp
+    assert "ArrowEvalPython" not in sp and "BatchEvalPython" not in sp

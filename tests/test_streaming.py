@@ -120,6 +120,7 @@ def test_backfill_tasks_follow_cores(spark):
 
 def test_bad_range_rejected(spark):
     from event_stream_spark.sources import blockstream
+    from event_stream_spark.streaming import historical_stream
 
     blockstream.register(spark)
     with pytest.raises(Exception, match="must be <="):
@@ -130,6 +131,149 @@ def test_bad_range_rejected(spark):
             .load()
             .count()
         )
+    with pytest.raises(ValueError, match="must be <="):
+        historical_stream(spark, 10, 5, streaming=False)
+    with pytest.raises(ValueError, match="batch blockstream scan is bounded"):
+        historical_stream(spark, 10, None, streaming=False)
+
+
+def test_node_reads_close_their_connections():
+    """Every node a read builds is closed when the read ends: the batch
+    fetch, both stream-reader calls and ``resolve_heights`` over HTTP leave
+    no socket for the garbage collector to find open."""
+    import gc
+    import warnings
+
+    import pyarrow as pa
+
+    from event_stream_spark.sources.blockstream import (
+        BlockBatchReader,
+        BlockStreamReader,
+        HeightRange,
+        SyntheticNode,
+        fetch_heights,
+    )
+    from event_stream_spark.sources.rpcnode import RpcNodeServer
+    from event_stream_spark.streaming import resolve_heights
+
+    server = RpcNodeServer(SyntheticNode())
+    opts = {"backend": "http", "rpc_url": server.url}
+    try:
+        gc.collect()
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always", ResourceWarning)
+            ids = pa.RecordBatch.from_pydict({"id": pa.array([1, 2, 3], pa.int64())})
+            fetched = list(fetch_heights(opts)(iter([ids])))
+            batch = BlockBatchReader({**opts, "from_height": "1", "to_height": "3"})
+            read = list(batch.read(HeightRange(1, 3)))
+            stream = BlockStreamReader({**opts, "from_height": "1"})
+            head = stream.latestOffset()["height"]
+            streamed = list(stream.read(HeightRange(4, 6)))
+            resolved = resolve_heights("latest", None, **opts)
+            gc.collect()
+    finally:
+        server.close()
+    assert [b.num_rows for b in fetched + read + streamed] == [3, 3, 3]
+    assert head == resolved[0] == SyntheticNode().head()
+    leaked = [str(w.message) for w in caught if issubclass(w.category, ResourceWarning)]
+    assert leaked == []
+
+
+def _cosmos_tx(memo: str | None, denom: str, amount: str) -> str:
+    """A base64 cosmos ``Tx``: ``body.memo`` (left out when None, as proto3
+    leaves out an empty string) and ``auth_info.fee.amount[0]``."""
+    import base64
+
+    from event_stream_spark.sources.grpcwire import pb_msg, pb_str
+
+    body = pb_str(2, memo) if memo is not None else b""
+    coin = pb_str(1, denom) + pb_str(2, amount)
+    tx = pb_msg(1, body) + pb_msg(2, pb_msg(2, pb_msg(1, coin)))
+    return base64.b64encode(tx).decode()
+
+
+def _cosmos_tx_node():
+    """A SyntheticNode whose blocks carry real ``Tx`` payloads, one
+    transfer event per tx."""
+    import base64
+
+    from event_stream_spark.sources.blockstream import SyntheticNode
+
+    txs = {
+        1: [_cosmos_tx("fee above 2^63", "uatom", str(2**64 + 7))],
+        2: [_cosmos_tx("bad amount", "uosmo", "12abc"), _cosmos_tx(None, "ujuno", "250")],
+        3: [],  # a block without txs
+        4: [base64.b64encode(b"\xff\x01 not a Tx").decode(), _cosmos_tx("ok", "u", "1")],
+    }
+
+    class CosmosTxNode(SyntheticNode):
+        def fetch(self, height):
+            block, results = (json.loads(p) for p in super().fetch(height))
+            block["result"]["block"]["data"]["txs"] = txs.get(height, [])
+            results["result"]["txs_results"] = [
+                {"code": 0, "log": "", "events": [{"type": "transfer", "attributes": []}]}
+                for _ in txs.get(height, [])
+            ]
+            return json.dumps(block), json.dumps(results)
+
+    return CosmosTxNode(), txs
+
+
+def test_tx_meta_parity_real_cosmos_txs(spark, tmp_path):
+    """Fee/denom/note decoded in the node fetch (batch backfill and live
+    stream over HTTP) equal ``decode_tx_meta`` and the lake join's pandas
+    UDF (``enrich_stream_blocks``) over the same rows."""
+    from event_stream_spark.operators.flatten import (
+        block_results_from_rpc,
+        blocks_from_rpc,
+        enrich_stream_blocks,
+    )
+    from event_stream_spark.operators.txmeta import decode_tx_meta
+    from event_stream_spark.sources.rpcnode import RpcNodeServer
+    from event_stream_spark.streaming import historical_stream, live_stream
+
+    node, txs = _cosmos_tx_node()
+    expected = {
+        (h, i): decode_tx_meta(t) for h, block in txs.items() for i, t in enumerate(block)
+    }
+    assert expected == {
+        (1, 0): (2**64 + 7, "uatom", "fee above 2^63"),
+        (2, 0): (0, "uosmo", "bad amount"),
+        (2, 1): (250, "ujuno", ""),
+        (4, 0): (None, None, None),
+        (4, 1): (1, "u", "ok"),
+    }
+
+    def meta(rows) -> dict:
+        out = {}
+        for r in rows:
+            for i, e in enumerate(r["tx_events"]):
+                fee = None if e["fee"] is None else int(e["fee"])
+                out[(r["height"], i)] = (fee, e["denom"], e["note"])
+        return out
+
+    server = RpcNodeServer(node)
+    opts = {"backend": "http", "rpc_url": server.url}
+    try:
+        batch = historical_stream(spark, 1, 4, streaming=False, **opts).collect()
+        streamed: list = []
+        _drain(
+            live_stream(spark, from_height=1, to_height=4, **opts)
+            .writeStream.foreachBatch(lambda b, _id: streamed.extend(b.collect()))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
+    finally:
+        server.close()
+    pairs = [node.fetch(h) for h in range(1, 5)]
+    lake = enrich_stream_blocks(
+        blocks_from_rpc(spark.createDataFrame([(b,) for b, _ in pairs], "payload string")),
+        block_results_from_rpc(
+            spark.createDataFrame([(r,) for _, r in pairs], "payload string")
+        ),
+    ).collect()
+    for rows in (batch, streamed, lake):
+        assert sorted(r["height"] for r in rows) == [1, 2, 3, 4]
+        assert meta(rows) == expected
 
 
 def test_streaming_source_and_resume(spark, tmp_path):
