@@ -19,4 +19,53 @@ and AQE.
 
 __version__ = "0.1.0"
 
-from event_stream_spark.session import get_spark  # noqa: F401
+import os
+import sys
+import zipimport
+
+
+def _lazy_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive's stat signature changed since its last read.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task; before CPython 3.13 each ``zipimporter`` (14-16 per worker, all
+    over ``pyspark.zip``) then re-reads the whole zip directory, the largest
+    fixed cost of a short Python task.  3.13's importer is lazy already."""
+    eager = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or getattr(eager, "stat_keyed", False):
+        return
+    read_directory = zipimport._read_directory
+
+    def signature(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+    # directories cached before this installs count as current: in a Spark
+    # worker the running task's own invalidation read them a moment ago
+    read_at = {a: signature(a) for a in zipimport._zip_directory_cache}
+
+    def _read_directory(archive):
+        sig = signature(archive)  # before the read: a write mid-read re-reads
+        files = read_directory(archive)
+        read_at[archive] = sig
+        return files
+
+    def invalidate_caches(self):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        sig = signature(self.archive)
+        if files is None or sig is None or read_at.get(self.archive) != sig:
+            return eager(self)
+        self._files = files  # the archive's current directory, shared
+
+    invalidate_caches.stat_keyed = True
+    zipimport._read_directory = _read_directory
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_lazy_zip_invalidation()
+
+from event_stream_spark.session import get_spark  # noqa: E402, F401

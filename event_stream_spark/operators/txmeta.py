@@ -13,7 +13,10 @@ so this implements a ~50-line reader of the public protobuf *wire format*
     Coin          { 1: denom(string), 2: amount(string) }
 
 Failure semantics mirror the reference: unparseable tx → null fee/denom/note
-(runCatching → null), amount string unparseable → 0 (InnerCoin.kt:6-8).
+(runCatching → null), amount string not of Java ``BigInteger``'s ASCII form
+``[+-]?[0-9]+`` → 0 (InnerCoin.kt:6-8).  One deviation: an amount beyond
+``DECIMAL(38,0)`` (cosmos ``sdk.Int`` allows 256 bits) gives a null fee with
+denom and note kept, where the reference's ``BigInteger`` is unbounded.
 
 A node read already holds each block's JSON in Python, so the
 ``blockstream`` fetch (``sources/blockstream.py::read_batches``) decodes
@@ -28,6 +31,7 @@ JVM-side (functions/hashing.py).
 from __future__ import annotations
 
 import base64
+import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,6 +39,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 TX_META_ELEM = "struct<fee: decimal(38,0), denom: string, note: string>"
+
+#: what Java's ``BigInteger(String)`` parses, in ASCII
+_AMOUNT = re.compile(rb"[+-]?[0-9]+")
+#: the largest ``decimal(38,0)`` magnitude
+_MAX_FEE = 10**38 - 1
 
 
 def _fields(buf: bytes):
@@ -127,10 +136,10 @@ def decode_tx_meta(tx_b64: str | None) -> tuple[int | None, str | None, str | No
                     a = _first(coin, 2)
                     denom = d.decode("utf-8", errors="replace") if d is not None else None
                     if a is not None:
-                        try:
-                            fee_amount = int(a.decode("ascii"))
-                        except ValueError:
-                            fee_amount = 0  # InnerCoin.kt:6-8 ZERO-on-fail
+                        # InnerCoin.kt:6-8 ZERO-on-fail; null past decimal(38,0)
+                        fee_amount = int(a) if _AMOUNT.fullmatch(a) else 0
+                        if abs(fee_amount) > _MAX_FEE:
+                            fee_amount = None
         return (fee_amount, denom, memo)
     except Exception:
         return (None, None, None)

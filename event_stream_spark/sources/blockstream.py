@@ -361,6 +361,10 @@ class BlockStreamReader(DataSourceStreamReader):
         return {"height": self.start - 1}
 
     def latestOffset(self) -> dict:
+        if self.to is not None and self._last >= self.to:
+            # monotonic and capped at ``to``: a finished bounded stream's
+            # answer cannot change, so the head is not probed again
+            return {"height": self._last}
         with closing(_make_node(self.options)) as node:
             head = node.head()
         if self.to is not None:

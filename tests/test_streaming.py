@@ -179,6 +179,25 @@ def test_node_reads_close_their_connections():
     assert leaked == []
 
 
+def test_finished_bounded_stream_stops_probing_the_head():
+    """Once ``latestOffset`` reaches ``to`` it stays there without asking
+    the node: five more calls make no request."""
+    from event_stream_spark.sources.blockstream import BlockStreamReader, SyntheticNode
+    from event_stream_spark.sources.rpcnode import RpcNodeServer
+
+    server = RpcNodeServer(SyntheticNode())
+    try:
+        reader = BlockStreamReader(
+            {"backend": "http", "rpc_url": server.url, "from_height": "1", "to_height": "5"}
+        )
+        assert reader.latestOffset() == {"height": 5}
+        probed = server.requests
+        assert [reader.latestOffset() for _ in range(5)] == [{"height": 5}] * 5
+        assert server.requests == probed
+    finally:
+        server.close()
+
+
 def _cosmos_tx(memo: str | None, denom: str, amount: str) -> str:
     """A base64 cosmos ``Tx``: ``body.memo`` (left out when None, as proto3
     leaves out an empty string) and ``auth_info.fee.amount[0]``."""
@@ -200,8 +219,18 @@ def _cosmos_tx_node():
     from event_stream_spark.sources.blockstream import SyntheticNode
 
     txs = {
-        1: [_cosmos_tx("fee above 2^63", "uatom", str(2**64 + 7))],
-        2: [_cosmos_tx("bad amount", "uosmo", "12abc"), _cosmos_tx(None, "ujuno", "250")],
+        1: [
+            _cosmos_tx("fee above 2^63", "uatom", str(2**64 + 7)),
+            _cosmos_tx("39 digits", "uatom", "1" + "0" * 38),  # past decimal(38,0)
+            _cosmos_tx("77 digits", "uatom", "9" * 77),  # within sdk.Int
+        ],
+        2: [
+            _cosmos_tx("bad amount", "uosmo", "12abc"),
+            _cosmos_tx(None, "ujuno", "250"),
+            _cosmos_tx("underscore", "uosmo", "1_000"),
+            _cosmos_tx("spaces", "uosmo", " 12 "),
+            _cosmos_tx("plus sign", "uosmo", "+5"),
+        ],
         3: [],  # a block without txs
         4: [base64.b64encode(b"\xff\x01 not a Tx").decode(), _cosmos_tx("ok", "u", "1")],
     }
@@ -222,7 +251,9 @@ def _cosmos_tx_node():
 def test_tx_meta_parity_real_cosmos_txs(spark, tmp_path):
     """Fee/denom/note decoded in the node fetch (batch backfill and live
     stream over HTTP) equal ``decode_tx_meta`` and the lake join's pandas
-    UDF (``enrich_stream_blocks``) over the same rows."""
+    UDF (``enrich_stream_blocks``) over the same rows.  Amounts parse as
+    Java's ``BigInteger`` does (else 0), and one past ``decimal(38,0)``
+    gives a null fee instead of failing the read."""
     from event_stream_spark.operators.flatten import (
         block_results_from_rpc,
         blocks_from_rpc,
@@ -238,8 +269,13 @@ def test_tx_meta_parity_real_cosmos_txs(spark, tmp_path):
     }
     assert expected == {
         (1, 0): (2**64 + 7, "uatom", "fee above 2^63"),
+        (1, 1): (None, "uatom", "39 digits"),
+        (1, 2): (None, "uatom", "77 digits"),
         (2, 0): (0, "uosmo", "bad amount"),
         (2, 1): (250, "ujuno", ""),
+        (2, 2): (0, "uosmo", "underscore"),
+        (2, 3): (0, "uosmo", "spaces"),
+        (2, 4): (5, "uosmo", "plus sign"),
         (4, 0): (None, None, None),
         (4, 1): (1, "u", "ok"),
     }
