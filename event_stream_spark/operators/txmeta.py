@@ -132,14 +132,14 @@ def decode_tx_meta(tx_b64: str | None) -> tuple[int | None, str | None, str | No
             if fee is not None:
                 coin = _first(fee, 1)
                 if coin is not None:
-                    d = _first(coin, 1)
-                    a = _first(coin, 2)
-                    denom = d.decode("utf-8", errors="replace") if d is not None else None
-                    if a is not None:
-                        # InnerCoin.kt:6-8 ZERO-on-fail; null past decimal(38,0)
-                        fee_amount = int(a) if _AMOUNT.fullmatch(a) else 0
-                        if abs(fee_amount) > _MAX_FEE:
-                            fee_amount = None
+                    # an absent field is proto3's empty string: denom "",
+                    # amount "" (which BigInteger rejects, so fee 0)
+                    denom = (_first(coin, 1) or b"").decode("utf-8", errors="replace")
+                    a = _first(coin, 2) or b""
+                    # InnerCoin.kt:6-8 ZERO-on-fail; null past decimal(38,0)
+                    fee_amount = int(a) if _AMOUNT.fullmatch(a) else 0
+                    if abs(fee_amount) > _MAX_FEE:
+                        fee_amount = None
         return (fee_amount, denom, memo)
     except Exception:
         return (None, None, None)

@@ -6,8 +6,11 @@ StreamBlock.  Expressed as a (key, value) projection ready for
 callback) are provided by Structured Streaming's offset log: a batch's offsets
 commit only after the sink write succeeds.
 
-No broker exists in the test environment, so tests validate the frame; the
-writer itself is the stock kafka sink.
+No Kafka connector jar exists in the test environment, so tests validate
+the frame, and the read side runs over the localhost broker of
+``sources/kafkawire.py``; the writer itself is the stock kafka sink.
+Exactly-once delivery on top of that is the stock connector's concern
+(idempotent/transactional producers), not this module's.
 """
 
 from __future__ import annotations
@@ -56,199 +59,3 @@ def kafka_sink(
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
     )
-
-
-def write_kafka_wire_txn_batch(
-    records: DataFrame,
-    host: str,
-    port: int,
-    topic: str,
-    *,
-    txn_prefix: str,
-    codec: str = "none",
-    batch_rows: int = 500,
-    batch_id: str | None = None,
-    marker_wait_s: float = 30.0,
-    _crash_before_commit: bool = False,
-    _crash_after_commit: bool = False,
-    chaos_flag: str | None = None,
-) -> None:
-    """Write one (key, value) batch through the wire-protocol transport
-    as KIP-98 TRANSACTIONS — one transactional producer PER SPARK
-    PARTITION (``transactional.id = f"{txn_prefix}-p{partition}"``), all
-    records of a task produced inside a single transaction committed at
-    task end.  This is the Flink-KafkaSink shape: executor tasks dial the
-    broker themselves (nothing moves through the driver), and per-task
-    transactional ids make crash recovery self-fencing.
-
-    Guarantee: ATOMIC PER-TASK VISIBILITY, scoped precisely.  A task that
-    dies BEFORE EndTxn leaves an open transaction read_committed
-    consumers never see; its retry re-initializes the same
-    transactional.id, which fences the dead incarnation and aborts its
-    orphan — so pre-commit crashes can never surface partial or duplicate
-    output.  A task that dies AFTER its EndTxn succeeded broker-side
-    (lost ack, post-commit executor death) is still retried by Spark, and
-    fencing alone cannot detect the prior success — without ``batch_id``
-    the retry re-produces the rows in a fresh committed transaction
-    (duplicates under read_committed; this is exactly Kafka's own
-    producer-restart gap).  Pass ``batch_id`` (e.g. the foreachBatch
-    epoch id) to close it: the task then writes an ATTEMPT MARKER into
-    ``{topic}.__attempts`` inside the SAME transaction (atomic with the
-    data — the Flink resumeTransaction pattern), and a retried attempt
-    first scans that topic read_committed; a visible marker for
-    (transactional.id, batch_id) proves the prior attempt committed, and
-    the retry produces nothing.  With ``batch_id`` the sink is
-    exactly-once across BOTH crash windows; cross-RESTART replay of a
-    whole microbatch additionally composes with the K6 offset-log
-    contract (the reference's own sink is at-least-once;
-    KafkaBlockSink.kt:16-38).
-
-    ``_crash_before_commit`` / ``_crash_after_commit`` are the chaos
-    hooks for the two windows (test/validation use only).
-
-    Scale shape: O(1) driver work; per-task one connection, one txn,
-    ``batch_rows``-sized produce calls; Kafka partition = spark partition
-    id mod the topic's partition count.  The marker scan is O(committed
-    markers on one partition) — one tiny record per (task, batch), and a
-    real deployment would bound it with topic retention/compaction keyed
-    on transactional.id."""
-    from event_stream_spark.sources.kafkawire import (
-        KafkaWireClient,
-        TransactionalProducer,
-    )
-
-    marker_topic = f"{topic}.__attempts"
-
-    def _sink(rows) -> None:
-        from pyspark import TaskContext
-        from event_stream_spark.sources.kafkawire import READ_COMMITTED
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        txn_id = f"{txn_prefix}-p{pid}"
-        client = KafkaWireClient(host, port)
-        try:
-            md = client.metadata(topic)
-            kparts = len(md["topics"][topic]["partitions"])
-            # fences any prior incarnation and ABORTS its open txn — must
-            # happen BEFORE the marker scan, so a pre-commit crash's
-            # un-committed marker is already invisible when we look
-            prod = TransactionalProducer(
-                client, topic, txn_id, codec=codec
-            )
-            target = pid % kparts
-            if batch_id is not None:
-                import time as _time
-
-                mkey = txn_id.encode()
-                mval = batch_id.encode()
-                off = 0
-                done = False
-                waited = 0.0
-                while not done:
-                    hw, lso, recs = client.fetch(
-                        marker_topic, target, off,
-                        isolation=READ_COMMITTED, return_lso=True,
-                    )
-                    if recs:
-                        waited = 0.0
-                        for o, _ts, k, v in recs:
-                            off = o + 1
-                            if k == mkey and v == mval:
-                                done = True
-                        continue
-                    # An empty read_committed fetch is NOT end-of-log:
-                    # the broker stops at the LSO, and the marker
-                    # partition is SHARED across tasks (target = pid %
-                    # kparts), so another task's still-open transaction
-                    # can hold the LSO below OUR committed marker.  Only
-                    # the high watermark proves exhaustion.
-                    if off >= hw:
-                        break  # scanned the whole log: no prior commit
-                    if off < lso:
-                        # [off, lso) held only control/aborted slots in
-                        # THIS response's snapshot (fetch serves every
-                        # committed record below the LSO, and lso here is
-                        # the same snapshot as the empty record set — a
-                        # separate list_offsets call would observe a
-                        # LATER lso, and a foreign txn aborting between
-                        # the fetch and that call moves our committed
-                        # marker into [off, later_lso): skipping there
-                        # re-produces, the full-suite-load duplicate the
-                        # r11 stress run caught); safe to skip past them
-                        off = lso
-                        continue
-                    # cursor at the LSO with hw ahead: an open txn masks
-                    # the tail [lso, hw).  Peek it READ_UNCOMMITTED: a
-                    # committed marker for THIS (txn_id, batch_id) would
-                    # be a physical record there, so if none matches, no
-                    # prior commit can exist — produce immediately (the
-                    # common case: the open txn is a foreign task's and
-                    # our marker was never written).
-                    u_off, masked_match = off, False
-                    while u_off < hw:
-                        _h2, urecs = client.fetch(
-                            marker_topic, target, u_off,
-                        )
-                        if not urecs:
-                            break  # only control slots remain
-                        for o, _ts, k, v in urecs:
-                            u_off = o + 1
-                            if k == mkey and v == mval:
-                                masked_match = True
-                    if not masked_match:
-                        break  # this batch's marker is nowhere in the log
-                    # OUR marker sits in the masked tail and its fate
-                    # (committed vs aborted) is unreadable until the
-                    # foreign open txn resolves (owner commits, or its
-                    # retry's InitProducerId fences + aborts it) — wait,
-                    # never guess; guessing "no prior commit" here is
-                    # exactly the duplicate window.
-                    if waited >= marker_wait_s:
-                        raise RuntimeError(
-                            f"attempt-marker scan blocked {waited:.1f}s "
-                            f"at offset {off} (lso={lso} < hw={hw}) on "
-                            f"{marker_topic}/{target} by an unresolved "
-                            "open transaction; refusing to assume no "
-                            "prior commit (exactly-once guard)"
-                        )
-                    _time.sleep(0.05)
-                    waited += 0.05
-                if done:
-                    return  # a prior attempt of THIS batch committed
-            buf: list = []
-            wrote = False
-            for row in rows:
-                key = bytes(row.key) if row.key is not None else None
-                value = bytes(row.value) if row.value is not None else None
-                buf.append((key, value, 0))
-                if len(buf) >= batch_rows:
-                    prod.send(target, buf)
-                    buf, wrote = [], True
-            if buf:
-                prod.send(target, buf)
-                wrote = True
-            if _crash_before_commit:
-                raise RuntimeError("injected crash between produce and EndTxn")
-            # task-retry chaos seam: dies AFTER produce, BEFORE EndTxn —
-            # the retried attempt's InitProducerId fences this incarnation
-            # and aborts its open transaction (see scripts/chaos_sinks.py)
-            from event_stream_spark.chaos import claim_once
-
-            claim_once(chaos_flag)
-            if wrote:
-                if batch_id is not None:
-                    # atomic with the data: visible iff the txn committed
-                    prod.send_to(
-                        marker_topic, target,
-                        [(txn_id.encode(), batch_id.encode(), 0)],
-                    )
-                prod.commit()
-                if _crash_after_commit:
-                    raise RuntimeError(
-                        "injected crash after EndTxn commit succeeded"
-                    )
-        finally:
-            client.close()
-
-    records.select("key", "value").foreachPartition(_sink)

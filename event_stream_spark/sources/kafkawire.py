@@ -13,24 +13,22 @@ Spark Kafka connector jar exists:
 - **Framing**: 4-byte length-prefixed request/response; request header
   v1 (api_key, api_version, correlation_id, nullable client_id) —
   responses matched to requests by correlation id.
-- **APIs** (public protocol, versions pinned and advertised honestly):
-  ApiVersions v0 (key 18), Metadata v0 (key 3), Produce v0-3 (key 0),
-  Fetch v0-4 (key 1), ListOffsets v1 (key 2, -1 latest / -2 earliest).
-- **Record formats**, BOTH real and CRC-verified on read:
-  - message-set v1 (Produce/Fetch ≤2): per record ``offset • size •
-    crc32 (IEEE, over magic..value) • magic=1 • attributes •
-    timestamp(ms) • key • value`` with nullable (-1) key/value;
-  - RecordBatch v2 (Produce 3 / Fetch 4 — what every current broker
-    speaks): zigzag-varint record framing, per-batch CRC32C over
-    attributes..end, base+delta offsets/timestamps, headers.  The magic
-    byte sits at offset 16 in both framings, so decode sniffs it — a
-    mixed-format log reads correctly through either API version.
+- **APIs**, one version each, advertised exactly: ApiVersions v0 (key
+  18), Metadata v0 (key 3), Produce v3 (key 0), Fetch v4 (key 1) and
+  ListOffsets v1 (key 2, -1 latest / -2 earliest).  Any other (api,
+  version) closes the connection, as a real broker does, so no request
+  is ever read with another version's layout.  A fetch past the high
+  watermark answers OFFSET_OUT_OF_RANGE.
+- **Record format**: uncompressed RecordBatch v2 — zigzag-varint record
+  framing, per-batch CRC32C over attributes..end, base+delta
+  offsets/timestamps.  A batch whose attributes name a compression codec
+  raises :class:`KafkaWireError` naming it; nothing decodes it wrongly.
 - **Spark source** (``format("kafkawire")``): offsets are per-partition
   next-positions ``{partition: n}`` — exactly Kafka's model, so the
   checkpointed offset log gives the same at-least-once ack contract as
-  the stock reader; ``max_offsets_per_trigger`` throttles per poll (O7).
-  Executor tasks dial the broker themselves (one connection per task) —
-  reads happen cluster-side, never through the driver.
+  the stock reader (K6); ``max_offsets_per_trigger`` throttles per poll
+  (O7).  Executor tasks dial the broker themselves (one connection per
+  task), so records never pass through the planning process.
 
 Rows match the stock Kafka reader's schema (key/value binary, topic,
 partition, offset, timestamp, timestampType), so ``decode_kafka_records``
@@ -43,8 +41,6 @@ import datetime as dt
 import socket
 import struct
 import threading
-import time
-import zlib
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -57,46 +53,31 @@ API_PRODUCE = 0
 API_FETCH = 1
 API_LIST_OFFSETS = 2
 API_METADATA = 3
-API_OFFSET_COMMIT = 8
-API_OFFSET_FETCH = 9
-API_FIND_COORDINATOR = 10
-API_JOIN_GROUP = 11
-API_HEARTBEAT = 12
-API_LEAVE_GROUP = 13
-API_SYNC_GROUP = 14
 API_VERSIONS = 18
-API_INIT_PRODUCER_ID = 22
-API_ADD_PARTITIONS_TO_TXN = 24
-API_END_TXN = 26
+
+#: the one version the broker speaks per api key (ApiVersions answers
+#: min == max == this)
+ADVERTISED_VERSION = {
+    API_PRODUCE: 3,
+    API_FETCH: 4,
+    API_LIST_OFFSETS: 1,
+    API_METADATA: 0,
+    API_VERSIONS: 0,
+}
 
 ERR_NONE = 0
-ERR_UNKNOWN_TOPIC = 3
 ERR_OFFSET_OUT_OF_RANGE = 1
-ERR_OUT_OF_ORDER_SEQUENCE = 45
-ERR_DUPLICATE_SEQUENCE = 46
-ERR_INVALID_PRODUCER_EPOCH = 47
-ERR_INVALID_TXN_STATE = 48
-ERR_ILLEGAL_GENERATION = 22
-ERR_UNKNOWN_MEMBER_ID = 25
-ERR_REBALANCE_IN_PROGRESS = 27
-
-#: fetch request isolation levels (KIP-98)
-READ_UNCOMMITTED = 0
-READ_COMMITTED = 1
+ERR_CORRUPT_MESSAGE = 2
 
 TS_LATEST = -1
 TS_EARLIEST = -2
 
+#: RecordBatch attribute compression types (bits 0-2)
+_CODEC_NAMES = {1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
+
 
 class KafkaWireError(RuntimeError):
     pass
-
-
-class KafkaConnectionError(KafkaWireError):
-    """Transport-level failure (socket closed mid-request) — the ONLY
-    error class an idempotent producer retries: the broker may or may
-    not have applied the batch, and re-sending the same (pid, epoch,
-    sequence) is safe either way (KIP-98)."""
 
 
 # ---------------------------------------------------------------------------
@@ -173,152 +154,6 @@ class _Cursor:
         self.pos += n
         return b
 
-    def remaining(self) -> bool:
-        return self.pos < len(self.data)
-
-
-# ---------------------------------------------------------------------------
-# message-set v1
-# ---------------------------------------------------------------------------
-
-#: message-set / RecordBatch compression attribute values (Kafka protocol)
-_CODEC_IDS = {"none": 0, "gzip": 1, "snappy": 2, "lz4": 3, "zstd": 4}
-
-
-def _codec_compress(codec: str, payload: bytes, *, v1: bool = False) -> bytes:
-    """Compress ``payload`` with a named codec.  v1 message sets wrap
-    snappy in the xerial stream framing (what snappy-java emits there);
-    RecordBatch v2 carries the raw snappy block."""
-    if codec == "gzip":
-        import gzip as _gzip
-
-        return _gzip.compress(payload, mtime=0)
-    if codec == "snappy":
-        from event_stream_spark.sources.kafkacodecs import (
-            snappy_compress, xerial_frame,
-        )
-
-        return xerial_frame(payload) if v1 else snappy_compress(payload)
-    if codec == "lz4":
-        from event_stream_spark.sources.kafkacodecs import lz4_frame_compress
-
-        return lz4_frame_compress(payload)
-    if codec == "zstd":
-        if v1:  # Kafka only ever pairs zstd with RecordBatch v2 (KIP-110)
-            raise NotImplementedError("zstd in a v1 message set")
-        from event_stream_spark.sources.zstdenc import zstd_compress
-
-        return zstd_compress(payload)
-    raise NotImplementedError(f"codec {codec!r}")
-
-
-def _codec_decompress(ctype: int, payload: bytes, *, v1: bool = False) -> bytes:
-    if ctype == 1:
-        import gzip as _gzip
-
-        return _gzip.decompress(payload)
-    if ctype == 2:
-        from event_stream_spark.sources.kafkacodecs import (
-            snappy_decompress, xerial_unframe,
-        )
-
-        return xerial_unframe(payload) if v1 else snappy_decompress(payload)
-    if ctype == 3:
-        from event_stream_spark.sources.kafkacodecs import lz4_frame_decompress
-
-        return lz4_frame_decompress(payload)
-    if ctype == 4:
-        # zstd (only ever used with RecordBatch v2): pure-python RFC 8878
-        # decoder, every entropy path ground-truthed against the
-        # reference CLI (tests/test_zstdcodec.py)
-        from event_stream_spark.sources.zstdcodec import zstd_decompress_fast
-
-        # C binding when present; record batches under _CLI_MIN_BYTES stay
-        # on the pure decoder (a subprocess spawn per batch would dominate)
-        return zstd_decompress_fast(payload)
-    raise KafkaWireError(
-        f"compression type {ctype} unsupported "
-        "(none/gzip/snappy/lz4/zstd reads are implemented)"
-    )
-
-
-def encode_message_set(
-    records: list[tuple[int, int, bytes | None, bytes | None]],
-    *,
-    codec: str = "none",
-) -> bytes:
-    """``(offset, timestamp_ms, key, value)`` entries → wire message set.
-    crc32 covers magic..value (everything after the crc field).
-
-    ``codec`` other than "none" emits the v1 COMPRESSED form: the whole
-    inner message set becomes the value of ONE wrapper message whose
-    attributes carry the codec id; inner offsets are 0..n-1 and the
-    wrapper's offset is the LAST inner absolute offset (the magic-1
-    relative-offset contract brokers enforce)."""
-    if codec not in _CODEC_IDS:
-        raise NotImplementedError(f"codec {codec!r}")
-    if codec != "none" and records:
-        inner = encode_message_set(
-            [(i, ts, k, v) for i, (_o, ts, k, v) in enumerate(records)]
-        )
-        wrapper_offset = records[-1][0]
-        ts0 = records[0][1]
-        body = (
-            _i8(1) + _i8(_CODEC_IDS[codec]) + _i64(ts0)
-            + _bytes(None) + _bytes(_codec_compress(codec, inner, v1=True))
-        )
-        msg = struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF) + body
-        return _i64(wrapper_offset) + _i32(len(msg)) + msg
-    out = bytearray()
-    for offset, ts, key, value in records:
-        body = _i8(1) + _i8(0) + _i64(ts) + _bytes(key) + _bytes(value)
-        # crc32 is an UNSIGNED 32-bit value carried in the int32 slot
-        # (two's-complement wraparound), per the wire format
-        msg = struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF) + body
-        out += _i64(offset) + _i32(len(msg)) + msg
-    return bytes(out)
-
-
-def decode_message_set(
-    data: bytes,
-) -> list[tuple[int, int, bytes | None, bytes | None]]:
-    out = []
-    pos = 0
-    while pos + 12 <= len(data):
-        offset = struct.unpack_from(">q", data, pos)[0]
-        size = struct.unpack_from(">i", data, pos + 8)[0]
-        pos += 12
-        if pos + size > len(data):
-            break  # partial trailing message (legal in Kafka fetches)
-        msg = data[pos:pos + size]
-        pos += size
-        crc = struct.unpack_from(">I", msg, 0)[0]
-        body = msg[4:]
-        if crc != zlib.crc32(body) & 0xFFFFFFFF:
-            raise KafkaWireError(f"crc mismatch at offset {offset}")
-        c = _Cursor(body)
-        magic = c.i8()
-        attrs = c.i8()
-        ts = c.i64() if magic >= 1 else -1
-        key = c.bytes()
-        value = c.bytes()
-        ctype = attrs & 0x07
-        if ctype == 0:
-            out.append((offset, ts, key, value))
-            continue
-        # compressed wrapper: the value is a whole inner message set.
-        # magic>=1: inner offsets are RELATIVE 0..n-1 and the wrapper
-        # offset is the last ABSOLUTE inner offset; magic=0 inner offsets
-        # are already absolute.
-        inner = decode_message_set(
-            _codec_decompress(ctype, value or b"", v1=True)
-        )
-        if magic >= 1 and inner:
-            base = offset - inner[-1][0]
-            inner = [(base + io, its, ik, iv) for io, its, ik, iv in inner]
-        out.extend(inner)
-    return out
-
 
 # ---------------------------------------------------------------------------
 # RecordBatch v2 (magic=2) — the format every current broker speaks
@@ -333,9 +168,9 @@ def decode_message_set(
 #   offsetDelta varint · keyLen varint · key · valueLen varint · value ·
 #   headerCount varint · headers) — all varints ZIGZAG.
 #
-# The crc is CRC32C (Castagnoli, reflected poly 0x82F63B78), NOT the IEEE
-# crc32 message-set v1 uses.  Table-driven pure-python below; a production
-# client would bind a C implementation, but batches here are test-sized.
+# The crc is CRC32C (Castagnoli, reflected poly 0x82F63B78).  Table-driven
+# pure-python below; a production client would bind a C implementation,
+# but batches here are test-sized.
 
 _CRC32C_TABLE = []
 for _i in range(256):
@@ -380,27 +215,9 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
 
 def encode_record_batch(
     records: list[tuple[int, int, bytes | None, bytes | None]],
-    *,
-    codec: str = "none",
-    producer: tuple[int, int, int] | None = None,
-    transactional: bool = False,
 ) -> bytes:
-    """``(offset, timestamp_ms, key, value)`` entries → ONE RecordBatch v2
-    (no transactional state, no headers).  ``producer=(pid, epoch,
-    base_sequence)`` stamps KIP-98 idempotent-producer identity into the
-    batch header; None writes the non-idempotent sentinel (-1, -1, -1).
-    ``codec`` compresses
-    the records section: "gzip" (type 1, deterministic mtime=0 stream),
-    "snappy" (type 2, raw block — v2 drops the xerial framing v1 used),
-    "lz4" (type 3, frame format), or "zstd" (type 4) — all implemented
-    from the public format specs (``kafkacodecs``/``zstdcodec``/
-    ``zstdenc``).  The zstd writer emits real LZ77 + entropy-coded
-    frames (``zstdenc.zstd_compress``); the reader decodes frames from
-    any conformant producer."""
-    if codec not in _CODEC_IDS:
-        raise NotImplementedError(
-            f"codec {codec!r} (none/gzip/snappy/lz4)"
-        )
+    """``(offset, timestamp_ms, key, value)`` entries → ONE uncompressed
+    RecordBatch v2 (no producer identity, no headers)."""
     if not records:
         return b""
     base_off = records[0][0]
@@ -418,17 +235,11 @@ def encode_record_batch(
                 body += _varint(len(blob)) + blob
         body += _varint(0)  # headers
         recs += _varint(len(body)) + body
-    if codec != "none":
-        recs = _codec_compress(codec, bytes(recs))
-    pid, epoch, base_seq = producer if producer is not None else (-1, -1, -1)
-    if transactional and producer is None:
-        raise KafkaWireError("a transactional batch needs producer identity")
-    attrs = _CODEC_IDS[codec] | (0x10 if transactional else 0)
     post_crc = (
-        _i16(attrs)  # attrs: compression type, CREATE_TIME, txn bit 4
+        _i16(0)  # attrs: no compression, CREATE_TIME
         + _i32(records[-1][0] - base_off)  # lastOffsetDelta
         + _i64(base_ts) + _i64(max_ts)
-        + _i64(pid) + _i16(epoch) + _i32(base_seq)
+        + _i64(-1) + _i16(-1) + _i32(-1)  # producer id/epoch/base sequence
         + _i32(len(records)) + recs
     )
     # batchLength counts everything after itself: leaderEpoch(4) + magic(1)
@@ -444,7 +255,7 @@ def decode_record_batches(
 ) -> list[tuple[int, int, bytes | None, bytes | None]]:
     """Concatenated RecordBatch v2 set → ``(offset, ts, key, value)``
     entries.  CRC32C verified per batch; a partial trailing batch (legal in
-    Kafka fetch responses) is dropped."""
+    Kafka fetch responses) is dropped.  A compressed batch raises."""
     out = []
     pos = 0
     while pos + 12 <= len(data):
@@ -460,12 +271,17 @@ def decode_record_batches(
         if magic != 2:
             raise KafkaWireError(f"expected magic 2, got {magic}")
         crc = struct.unpack_from(">I", batch, 5)[0]
-        rest = batch[9:]
-        if crc != crc32c(rest):
+        raw = batch[9:]
+        if crc != crc32c(raw):
             raise KafkaWireError(f"crc32c mismatch in batch at {base}")
-        c = _Cursor(rest)
-        attrs = c.i16()
-        compression = attrs & 0x07
+        c = _Cursor(raw)
+        compression = c.i16() & 0x07
+        if compression:
+            name = _CODEC_NAMES.get(compression, "unknown")
+            raise KafkaWireError(
+                f"batch at {base} is compressed ({name}, type {compression}); "
+                "only uncompressed RecordBatch v2 is read"
+            )
         c.i32()  # lastOffsetDelta
         base_ts = c.i64()
         c.i64()  # maxTimestamp
@@ -473,10 +289,7 @@ def decode_record_batches(
         c.i16()  # producerEpoch
         c.i32()  # baseSequence
         count = c.i32()
-        if compression:
-            raw, p = _codec_decompress(compression, rest[c.pos:]), 0
-        else:
-            raw, p = rest, c.pos
+        p = c.pos
         for _ in range(count):
             rlen, p = _read_varint(raw, p)
             end = p + rlen
@@ -503,42 +316,6 @@ def decode_record_batches(
     return out
 
 
-def batch_producer_meta(mset: bytes) -> tuple[int, int, int, int] | None:
-    """(producer_id, producer_epoch, base_sequence, record_count) of the
-    FIRST RecordBatch v2 in ``mset``, or None for a v1 message set or a
-    non-idempotent batch (pid -1).  Fixed header offsets per the spec:
-    pid at 43, epoch at 51, baseSequence at 53, count at 57."""
-    if len(mset) < 61 or mset[16] != 2:
-        return None
-    pid = struct.unpack_from(">q", mset, 43)[0]
-    if pid < 0:
-        return None
-    epoch = struct.unpack_from(">h", mset, 51)[0]
-    base_seq = struct.unpack_from(">i", mset, 53)[0]
-    count = struct.unpack_from(">i", mset, 57)[0]
-    return pid, epoch, base_seq, count
-
-
-def batch_is_transactional(mset: bytes) -> bool:
-    """The KIP-98 transactional bit (attributes bit 4) of the first
-    RecordBatch v2 in ``mset``.  Attributes sit at fixed offset 21:
-    baseOffset(8) + batchLength(4) + leaderEpoch(4) + magic(1) + crc(4)."""
-    if len(mset) < 23 or mset[16] != 2:
-        return False
-    return bool(struct.unpack_from(">h", mset, 21)[0] & 0x10)
-
-
-def decode_any_record_set(
-    data: bytes,
-) -> list[tuple[int, int, bytes | None, bytes | None]]:
-    """Sniff the record format by the magic byte — at offset 16 in BOTH
-    framings (messageset: offset8+size4+crc4 · batch: offset8+len4+epoch4),
-    which is exactly why Kafka pinned it there."""
-    if len(data) > 16 and data[16] == 2:
-        return decode_record_batches(data)
-    return decode_message_set(data)
-
-
 # ---------------------------------------------------------------------------
 # broker
 # ---------------------------------------------------------------------------
@@ -548,59 +325,23 @@ class KafkaWireBroker:
     partition count, append-only logs.  Thread-per-connection."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0, *,
-                 num_partitions: int = 1, fetch_codec: str = "none"):
+                 num_partitions: int = 1):
         self._srv = socket.create_server((host, port))
         self.host, self.port = self._srv.getsockname()[:2]
         self.num_partitions = num_partitions
-        # codec for OUTGOING fetch record sets (a real broker serves
-        # whatever compression.type / the producer chose; this exercises
-        # the client's decompression path end-to-end over the socket)
-        self.fetch_codec = fetch_codec
         # topic → partition → list[(timestamp_ms, key, value)]
         self._logs: dict[str, list[list[tuple[int, bytes | None, bytes | None]]]] = {}
-        # KIP-98 idempotent-producer state: (topic, partition) →
-        # pid → (epoch, last_base_seq, next_seq, last_base_offset);
-        # a replayed batch (same pid/epoch/base_seq) returns the cached
-        # base offset WITHOUT re-appending
-        self._next_pid = 1000
-        self._producers: dict[tuple[str, int], dict[int, tuple[int, int, int, int]]] = {}
-        # KIP-98 transactional state:
-        # transactional.id → (pid, epoch) — InitProducerId(txn_id) reuses
-        # the pid and BUMPS the epoch, fencing the previous incarnation
-        # and aborting its in-flight transaction (exactly the real
-        # coordinator's recovery contract)
-        self._txn_pids: dict[str, tuple[int, int]] = {}
-        # CONSUMER-GROUP offsets (the group coordinator's __consumer_offsets
-        # ledger): group_id → (topic, partition) → (offset, metadata).
-        # Both paths of the classic protocol are spoken: the
-        # manual-assignment contract (generation -1 / empty member —
-        # Kafka's "simple consumer" rule), and since r11 COORDINATED
-        # groups via JoinGroup/SyncGroup/Heartbeat/LeaveGroup (commits
-        # validated against the live generation + member id).
-        self._group_offsets: dict[str, dict[tuple[str, int], tuple[int, str | None]]] = {}
-        # classic-protocol GROUP MEMBERSHIP state machine (r11):
-        # group_id → {state, generation, members, joined, leader,
-        # protocol, assignments, member_seq, rebalance_deadline}.
-        # Guarded by _group_cond's lock (NOT self._lock — JoinGroup and
-        # SyncGroup BLOCK on the condition while other APIs proceed).
-        self._groups: dict[str, dict] = {}
-        self._group_cond = threading.Condition()
-        # pid → partitions registered via AddPartitionsToTxn
-        self._txn_parts: dict[int, set[tuple[str, int]]] = {}
-        # (topic, p) → pid → first offset of the OPEN transaction — the
-        # partition's LSO is the min of these (or the high watermark)
-        self._txn_open: dict[tuple[str, int], dict[int, int]] = {}
-        # (topic, p) → pid → [(first, last)] record ranges of the open txn
-        self._txn_ranges: dict[tuple[str, int], dict[int, list[tuple[int, int]]]] = {}
-        # (topic, p) → offsets of ABORTED records (never served under
-        # read_committed) and of CONTROL markers (never served as data)
-        self._aborted: dict[tuple[str, int], set[int]] = {}
-        self._ctrl: dict[tuple[str, int], set[int]] = {}
         self._lock = threading.Lock()
         self._stopped = threading.Event()
         self._socks: list[socket.socket] = []
         self.connections = 0
-        self.requests: dict[int, int] = {}  # api_key → count
+        self._handlers = {
+            API_VERSIONS: self._api_versions,
+            API_METADATA: self._metadata,
+            API_PRODUCE: self._produce,
+            API_FETCH: self._fetch,
+            API_LIST_OFFSETS: self._list_offsets,
+        }
         threading.Thread(target=self._accept_loop, daemon=True).start()
 
     # -- log primitives ----------------------------------------------------
@@ -611,13 +352,6 @@ class KafkaWireBroker:
         if not 0 <= partition < len(log):
             raise KafkaWireError(f"no partition {partition} for {topic}")
         return log[partition]
-
-    def append(self, topic: str, partition: int, ts: int,
-               key: bytes | None, value: bytes | None) -> int:
-        with self._lock:
-            plog = self._partition(topic, partition)
-            plog.append((ts, key, value))
-            return len(plog) - 1
 
     def high_watermark(self, topic: str, partition: int) -> int:
         with self._lock:
@@ -661,53 +395,17 @@ class KafkaWireBroker:
         api_key, api_version = c.i16(), c.i16()
         corr = c.i32()
         c.string()  # client_id
-        self.requests[api_key] = self.requests.get(api_key, 0) + 1
-        if api_key == API_VERSIONS:
-            body = _i16(ERR_NONE) + _i32(15) + b"".join(
-                _i16(k) + _i16(lo) + _i16(hi)
-                for k, lo, hi in [
-                    (API_PRODUCE, 0, 3), (API_FETCH, 0, 4),
-                    (API_LIST_OFFSETS, 0, 2), (API_METADATA, 0, 0),
-                    (API_VERSIONS, 0, 0), (API_INIT_PRODUCER_ID, 0, 0),
-                    (API_ADD_PARTITIONS_TO_TXN, 0, 0), (API_END_TXN, 0, 0),
-                    (API_OFFSET_COMMIT, 2, 2), (API_OFFSET_FETCH, 1, 1),
-                    (API_FIND_COORDINATOR, 0, 0), (API_JOIN_GROUP, 0, 1),
-                    (API_SYNC_GROUP, 0, 0), (API_HEARTBEAT, 0, 0),
-                    (API_LEAVE_GROUP, 0, 0),
-                ]
-            )
-        elif api_key == API_FIND_COORDINATOR:
-            body = self._find_coordinator(c)
-        elif api_key == API_JOIN_GROUP:
-            body = self._join_group(c, api_version)
-        elif api_key == API_SYNC_GROUP:
-            body = self._sync_group(c)
-        elif api_key == API_HEARTBEAT:
-            body = self._heartbeat(c)
-        elif api_key == API_LEAVE_GROUP:
-            body = self._leave_group(c)
-        elif api_key == API_OFFSET_COMMIT:
-            body = self._offset_commit(c)
-        elif api_key == API_OFFSET_FETCH:
-            body = self._offset_fetch(c)
-        elif api_key == API_INIT_PRODUCER_ID:
-            body = self._init_producer_id(c)
-        elif api_key == API_ADD_PARTITIONS_TO_TXN:
-            body = self._add_partitions_to_txn(c)
-        elif api_key == API_END_TXN:
-            body = self._end_txn(c)
-        elif api_key == API_METADATA:
-            body = self._metadata(c)
-        elif api_key == API_PRODUCE:
-            body = self._produce(c, api_version)
-        elif api_key == API_FETCH:
-            body = self._fetch(c, api_version)
-        elif api_key == API_LIST_OFFSETS:
-            body = self._list_offsets(c, api_version)
-        else:
-            raise KafkaWireError(f"unsupported api key {api_key}")
-        resp = _i32(corr) + body
+        if ADVERTISED_VERSION.get(api_key) != api_version:
+            # a real broker closes the connection on an unsupported
+            # request; _serve does on this error
+            raise KafkaWireError(f"unsupported api {api_key} v{api_version}")
+        resp = _i32(corr) + self._handlers[api_key](c)
         return _i32(len(resp)) + resp
+
+    def _api_versions(self, c: _Cursor) -> bytes:
+        return _i16(ERR_NONE) + _i32(len(ADVERTISED_VERSION)) + b"".join(
+            _i16(k) + _i16(v) + _i16(v) for k, v in ADVERTISED_VERSION.items()
+        )
 
     def _metadata(self, c: _Cursor) -> bytes:
         n = c.i32()
@@ -732,409 +430,8 @@ class KafkaWireBroker:
             )
         return brokers + bytes(topics)
 
-    def _find_coordinator(self, c: _Cursor) -> bytes:
-        """FindCoordinator v0: a single-node broker is every group's
-        coordinator — the API exists so a client written against the
-        real protocol (lookup, THEN commit/fetch against the returned
-        node) composes without special-casing."""
-        c.string()  # coordinator_key (group id)
-        return (
-            _i16(ERR_NONE) + _i32(0) + _string(self.host) + _i32(self.port)
-        )
-
-    def _offset_commit(self, c: _Cursor) -> bytes:
-        """OffsetCommit v2, both classic contracts: the manual-assignment
-        rule (generation -1 + empty member — Kafka's simple consumer),
-        and coordinated members whose (generation, member_id) must match
-        the live group state — a fenced zombie (old generation after a
-        rebalance) gets ILLEGAL_GENERATION, an evicted member
-        UNKNOWN_MEMBER_ID, a mid-rebalance commit
-        REBALANCE_IN_PROGRESS; its offsets are never recorded."""
-        group = c.string() or ""
-        generation = c.i32()
-        member = c.string() or ""
-        c.i64()  # retention_time_ms
-        if generation == -1 and member == "":
-            err = ERR_NONE  # manual assignment
-        else:
-            with self._group_cond:
-                g = self._groups.get(group)
-                if g is not None:
-                    self._gc_group(g, time.time())
-                if g is None or member not in g["members"]:
-                    err = ERR_UNKNOWN_MEMBER_ID
-                elif generation != g["generation"]:
-                    err = ERR_ILLEGAL_GENERATION
-                elif g["state"] != "Stable":
-                    err = ERR_REBALANCE_IN_PROGRESS
-                else:
-                    err = ERR_NONE
-                    g["members"][member]["last_hb"] = time.time()
-        n_topics = c.i32()
-        topics = bytearray(_i32(n_topics))
-        with self._lock:
-            ledger = self._group_offsets.setdefault(group, {})
-            for _ in range(n_topics):
-                name = c.string()
-                n_parts = c.i32()
-                parts = bytearray(_i32(n_parts))
-                for _ in range(n_parts):
-                    pidx = c.i32()
-                    off = c.i64()
-                    meta = c.string()
-                    if err == ERR_NONE:
-                        ledger[(name, pidx)] = (off, meta)
-                    parts += _i32(pidx) + _i16(err)
-                topics += _string(name) + bytes(parts)
-        return bytes(topics)
-
-    def _offset_fetch(self, c: _Cursor) -> bytes:
-        """OffsetFetch v1 (offsets read from the coordinator's ledger —
-        v0 read ZooKeeper, which never existed here).  Unknown
-        partitions return offset -1 (the consumer falls back to its
-        auto.offset.reset policy), matching the real broker."""
-        group = c.string() or ""
-        n_topics = c.i32()
-        topics = bytearray(_i32(n_topics))
-        with self._lock:
-            ledger = self._group_offsets.get(group, {})
-            for _ in range(n_topics):
-                name = c.string()
-                n_parts = c.i32()
-                parts = bytearray(_i32(n_parts))
-                for _ in range(n_parts):
-                    pidx = c.i32()
-                    off, meta = ledger.get((name, pidx), (-1, None))
-                    parts += (
-                        _i32(pidx) + _i64(off) + _string(meta) + _i16(ERR_NONE)
-                    )
-                topics += _string(name) + bytes(parts)
-        return bytes(topics)
-
-
-    # -- classic group membership (r11: JoinGroup/SyncGroup/Heartbeat) ------
-
-    def _group(self, gid: str) -> dict:
-        """Group record under _group_cond's lock."""
-        return self._groups.setdefault(gid, {
-            "state": "Empty", "generation": 0, "members": {},
-            "joined": set(), "leader": None, "protocol": None,
-            "assignments": {}, "member_seq": 0, "deadline": None,
-        })
-
-    def _gc_group(self, g: dict, now: float) -> None:
-        """Lazily evict members whose session timed out (no heartbeat
-        within session_timeout) and trigger a rebalance if the group was
-        Stable — the coordinator's expiration rule, applied on every
-        group API instead of by a timer thread."""
-        dead = [
-            m for m, rec in g["members"].items()
-            if now - rec["last_hb"] > rec["session_timeout"] / 1000.0
-        ]
-        for m in dead:
-            del g["members"][m]
-            g["joined"].discard(m)
-            g["assignments"].pop(m, None)
-        if dead and g["members"] and g["state"] in ("Stable", "CompletingRebalance"):
-            g["state"] = "PreparingRebalance"
-            g["joined"].clear()
-            g["deadline"] = None
-        if not g["members"]:
-            g["state"] = "Empty"
-            g["joined"].clear()
-            g["leader"] = None
-
-    def _join_group(self, c: _Cursor, version: int) -> bytes:
-        """JoinGroup v0/v1: the rebalance BARRIER.  Every (re)join moves
-        the group to PreparingRebalance; the call blocks until all live
-        members have rejoined (or the rebalance deadline evicts the
-        stragglers), then one generation is formed — the first joiner
-        (sorted) becomes leader and receives every member's subscription
-        metadata to run the client-side assignor."""
-        gid = c.string() or ""
-        session_timeout = c.i32()
-        rebalance_timeout = c.i32() if version >= 1 else session_timeout
-        member_id = c.string() or ""
-        proto_type = c.string() or ""
-        n = c.i32()
-        protocols = [(c.string() or "", c.bytes() or b"") for _ in range(n)]
-        now = time.time()
-        with self._group_cond:
-            g = self._group(gid)
-            self._gc_group(g, now)
-            if member_id and member_id not in g["members"]:
-                return (
-                    _i16(ERR_UNKNOWN_MEMBER_ID) + _i32(-1) + _string("")
-                    + _string("") + _string(member_id) + _i32(0)
-                )
-            if not member_id:
-                g["member_seq"] += 1
-                member_id = f"{gid}-{g['member_seq']:04d}"
-            pname, pmeta = protocols[0] if protocols else ("", b"")
-            g["members"][member_id] = {
-                "metadata": pmeta, "last_hb": now,
-                "session_timeout": session_timeout,
-                "protocol_type": proto_type, "protocol": pname,
-            }
-            # any (re)join interrupts a stable generation
-            if g["state"] in ("Empty", "Stable", "CompletingRebalance"):
-                g["state"] = "PreparingRebalance"
-                g["joined"] = set()
-                g["deadline"] = None
-            g["joined"].add(member_id)
-            if g["deadline"] is None:
-                # wait briefly for the rest of the known members; cap so
-                # a dead member cannot park the whole group
-                g["deadline"] = now + min(rebalance_timeout, 3000) / 1000.0
-            self._group_cond.notify_all()
-            # barrier: all live members rejoined, or deadline eviction
-            while (
-                g["state"] == "PreparingRebalance"
-                and g["joined"] != set(g["members"])
-                and time.time() < g["deadline"]
-            ):
-                self._group_cond.wait(0.05)
-            if g["state"] == "PreparingRebalance":
-                for m in list(g["members"]):
-                    if m not in g["joined"]:
-                        del g["members"][m]
-                        g["assignments"].pop(m, None)
-                g["generation"] += 1
-                g["leader"] = sorted(g["joined"])[0]
-                g["protocol"] = g["members"][g["leader"]]["protocol"]
-                g["assignments"] = {}
-                g["state"] = "CompletingRebalance"
-                g["deadline"] = None
-                self._group_cond.notify_all()
-            if member_id not in g["members"]:
-                return (
-                    _i16(ERR_UNKNOWN_MEMBER_ID) + _i32(-1) + _string("")
-                    + _string("") + _string(member_id) + _i32(0)
-                )
-            members = b""
-            n_members = 0
-            if member_id == g["leader"]:
-                n_members = len(g["members"])
-                members = b"".join(
-                    _string(m) + _bytes(rec["metadata"])
-                    for m, rec in sorted(g["members"].items())
-                )
-            return (
-                _i16(ERR_NONE) + _i32(g["generation"])
-                + _string(g["protocol"] or "") + _string(g["leader"] or "")
-                + _string(member_id) + _i32(n_members) + members
-            )
-
-    def _sync_group(self, c: _Cursor) -> bytes:
-        """SyncGroup v0: the leader delivers the assignment map; every
-        follower blocks until the group is Stable and reads its slice."""
-        gid = c.string() or ""
-        generation = c.i32()
-        member_id = c.string() or ""
-        n = c.i32()
-        assigns = [(c.string() or "", c.bytes() or b"") for _ in range(n)]
-        with self._group_cond:
-            g = self._groups.get(gid)
-            if g is None or member_id not in g["members"]:
-                return _i16(ERR_UNKNOWN_MEMBER_ID) + _bytes(b"")
-            if generation != g["generation"]:
-                return _i16(ERR_ILLEGAL_GENERATION) + _bytes(b"")
-            if g["state"] == "PreparingRebalance":
-                return _i16(ERR_REBALANCE_IN_PROGRESS) + _bytes(b"")
-            if member_id == g["leader"] and g["state"] == "CompletingRebalance":
-                g["assignments"] = dict(assigns)
-                g["state"] = "Stable"
-                self._group_cond.notify_all()
-            sync_deadline = time.time() + 5.0
-            while (
-                g["state"] == "CompletingRebalance"
-                and generation == g["generation"]
-                and time.time() < sync_deadline
-            ):
-                self._group_cond.wait(0.05)
-            if generation != g["generation"] or g["state"] != "Stable":
-                # leader never delivered (died mid-rebalance) or a new
-                # round started — the member must rejoin
-                return _i16(ERR_REBALANCE_IN_PROGRESS) + _bytes(b"")
-            g["members"][member_id]["last_hb"] = time.time()
-            return _i16(ERR_NONE) + _bytes(g["assignments"].get(member_id, b""))
-
-    def _heartbeat(self, c: _Cursor) -> bytes:
-        gid = c.string() or ""
-        generation = c.i32()
-        member_id = c.string() or ""
-        with self._group_cond:
-            g = self._groups.get(gid)
-            if g is None or member_id not in g["members"]:
-                return _i16(ERR_UNKNOWN_MEMBER_ID)
-            self._gc_group(g, time.time())
-            if member_id not in g["members"]:
-                return _i16(ERR_UNKNOWN_MEMBER_ID)
-            if generation != g["generation"]:
-                return _i16(ERR_ILLEGAL_GENERATION)
-            if g["state"] != "Stable":
-                return _i16(ERR_REBALANCE_IN_PROGRESS)
-            g["members"][member_id]["last_hb"] = time.time()
-            return _i16(ERR_NONE)
-
-    def _leave_group(self, c: _Cursor) -> bytes:
-        gid = c.string() or ""
-        member_id = c.string() or ""
-        with self._group_cond:
-            g = self._groups.get(gid)
-            if g is None or member_id not in g["members"]:
-                return _i16(ERR_UNKNOWN_MEMBER_ID)
-            del g["members"][member_id]
-            g["joined"].discard(member_id)
-            g["assignments"].pop(member_id, None)
-            if g["members"]:
-                g["state"] = "PreparingRebalance"
-                g["joined"].clear()
-                g["deadline"] = None
-            else:
-                g["state"] = "Empty"
-                g["leader"] = None
-            self._group_cond.notify_all()
-            return _i16(ERR_NONE)
-
-    def _init_producer_id(self, c: _Cursor) -> bytes:
-        txn_id = c.string()  # transactional_id (nullable)
-        c.i32()  # transaction_timeout_ms
-        with self._lock:
-            if txn_id is None:
-                pid = self._next_pid
-                self._next_pid += 1
-                epoch = 0
-            else:
-                cur = self._txn_pids.get(txn_id)
-                if cur is None:
-                    pid, epoch = self._next_pid, 0
-                    self._next_pid += 1
-                else:
-                    # same transactional.id re-initializing: keep the pid,
-                    # BUMP the epoch (fences the previous incarnation) and
-                    # abort whatever transaction it left open — a producer
-                    # that crashed between produce and EndTxn can never
-                    # leak its records to read_committed consumers
-                    pid, epoch = cur[0], cur[1] + 1
-                    self._abort_open_txn(pid)
-                self._txn_pids[txn_id] = (pid, epoch)
-        # v0: throttle_time, error, producer_id, producer_epoch
-        return _i32(0) + _i16(ERR_NONE) + _i64(pid) + _i16(epoch)
-
-    def _abort_open_txn(self, pid: int) -> None:
-        """Write ABORT markers for ``pid``'s open transaction on every
-        partition it produced to.  Must be called under self._lock."""
-        for tp, open_pids in list(self._txn_open.items()):
-            if pid not in open_pids:
-                continue
-            for first, last in self._txn_ranges.get(tp, {}).get(pid, []):
-                self._aborted.setdefault(tp, set()).update(
-                    range(first, last + 1)
-                )
-            self._append_marker(tp)
-            del open_pids[pid]
-            self._txn_ranges.get(tp, {}).pop(pid, None)
-        self._txn_parts.pop(pid, None)
-
-    def _append_marker(self, tp: tuple[str, int]) -> None:
-        """Append a control-marker slot: it occupies a real offset (the
-        consumer-visible offset arithmetic matches real Kafka, where
-        COMMIT/ABORT markers live in the log) but is never served as
-        data.  Must be called under self._lock."""
-        import time as _time
-
-        plog = self._partition(*tp)
-        plog.append((int(_time.time() * 1000), None, None))
-        self._ctrl.setdefault(tp, set()).add(len(plog) - 1)
-
-    def _txn_auth(self, c: _Cursor) -> tuple[str, int, int, int]:
-        """Parse (txn_id, pid, epoch) and validate against coordinator
-        state; returns (txn_id, pid, epoch, error_code)."""
-        txn_id = c.string() or ""
-        pid = c.i64()
-        epoch = c.i16()
-        cur = self._txn_pids.get(txn_id)
-        if cur is None or cur[0] != pid:
-            return txn_id, pid, epoch, ERR_INVALID_TXN_STATE
-        if cur[1] != epoch:
-            return txn_id, pid, epoch, ERR_INVALID_PRODUCER_EPOCH
-        return txn_id, pid, epoch, ERR_NONE
-
-    def _add_partitions_to_txn(self, c: _Cursor) -> bytes:
-        with self._lock:
-            _txn_id, pid, _epoch, err = self._txn_auth(c)
-            n_topics = c.i32()
-            topics = bytearray(_i32(n_topics))
-            for _ in range(n_topics):
-                name = c.string()
-                n_parts = c.i32()
-                parts = bytearray(_i32(n_parts))
-                for _ in range(n_parts):
-                    p = c.i32()
-                    if err == ERR_NONE:
-                        self._txn_parts.setdefault(pid, set()).add((name, p))
-                    parts += _i32(p) + _i16(err)
-                topics += _string(name) + bytes(parts)
-        return _i32(0) + bytes(topics)
-
-    def _end_txn(self, c: _Cursor) -> bytes:
-        with self._lock:
-            _txn_id, pid, _epoch, err = self._txn_auth(c)
-            committed = bool(c.i8())
-            if err == ERR_NONE:
-                for tp in sorted(self._txn_parts.get(pid, ())):
-                    open_pids = self._txn_open.get(tp, {})
-                    if pid not in open_pids:
-                        continue  # registered but never produced
-                    if not committed:
-                        for first, last in self._txn_ranges.get(tp, {}).get(
-                            pid, []
-                        ):
-                            self._aborted.setdefault(tp, set()).update(
-                                range(first, last + 1)
-                            )
-                    self._append_marker(tp)
-                    del open_pids[pid]
-                    self._txn_ranges.get(tp, {}).pop(pid, None)
-                self._txn_parts.pop(pid, None)
-        return _i32(0) + _i16(err)
-
-    def _check_producer(
-        self, name: str, pidx: int, mset: bytes
-    ) -> tuple[int, int | None, tuple | None]:
-        """KIP-98 sequence check for one partition's batch: returns
-        (error_code, cached_base_offset_for_duplicates, state_update).
-        Must be called under self._lock."""
-        meta = batch_producer_meta(mset)
-        if meta is None:
-            return ERR_NONE, None, None
-        prod_id, epoch, base_seq, count = meta
-        state = self._producers.setdefault((name, pidx), {})
-        cur = state.get(prod_id)
-        if cur is not None:
-            cur_epoch, last_bs, next_seq, last_off = cur
-            if epoch < cur_epoch:
-                return ERR_INVALID_PRODUCER_EPOCH, None, None
-            if epoch == cur_epoch:
-                if base_seq == last_bs:
-                    # the retried batch: already appended — ack with the
-                    # ORIGINAL base offset, append nothing
-                    return ERR_NONE, last_off, None
-                if base_seq < next_seq:
-                    return ERR_DUPLICATE_SEQUENCE, None, None
-                if base_seq > next_seq:
-                    return ERR_OUT_OF_ORDER_SEQUENCE, None, None
-                return ERR_NONE, None, (prod_id, epoch, base_seq, count)
-        # new producer on this partition, or a bumped epoch: must start
-        # its sequence at 0 (KIP-98)
-        if base_seq != 0:
-            return ERR_OUT_OF_ORDER_SEQUENCE, None, None
-        return ERR_NONE, None, (prod_id, epoch, base_seq, count)
-
-    def _produce(self, c: _Cursor, version: int) -> bytes:
-        if version >= 3:
-            c.string()  # transactional_id (nullable)
+    def _produce(self, c: _Cursor) -> bytes:
+        c.string()  # transactional_id (nullable)
         c.i16()  # acks
         c.i32()  # timeout
         n_topics = c.i32()
@@ -1146,81 +443,27 @@ class KafkaWireBroker:
             for _ in range(n_parts):
                 pid = c.i32()
                 mset = c.bytes() or b""
-                txn_batch = batch_is_transactional(mset)
-                with self._lock:
-                    err, cached, update = self._check_producer(name, pid, mset)
-                    if err == ERR_NONE and txn_batch:
-                        # a transactional batch must come from a pid that
-                        # registered this partition (AddPartitionsToTxn)
-                        meta = batch_producer_meta(mset)
-                        prod = meta[0] if meta else -1
-                        bepoch = meta[1] if meta else -1
-                        # coordinator-side fence: validate the batch epoch
-                        # against the COORDINATOR's current epoch for this
-                        # pid, not just the per-partition producer state —
-                        # else a fenced zombie could append into the new
-                        # incarnation's open txn on a partition the new
-                        # incarnation registered but has not produced to
-                        # yet, and the retry's EndTxn would commit the
-                        # zombie's records (real brokers reject stale-epoch
-                        # transactional writes unconditionally)
-                        coord_epoch = next(
-                            (
-                                e
-                                for (p, e) in self._txn_pids.values()
-                                if p == prod
-                            ),
-                            None,
-                        )
-                        if coord_epoch is not None and bepoch < coord_epoch:
-                            err = ERR_INVALID_PRODUCER_EPOCH
-                        elif (name, pid) not in self._txn_parts.get(prod, ()):
-                            err = ERR_INVALID_TXN_STATE
-                    if err == ERR_NONE and cached is None:
+                try:
+                    records = decode_record_batches(mset)
+                except KafkaWireError:
+                    err, base = ERR_CORRUPT_MESSAGE, -1
+                else:
+                    err = ERR_NONE
+                    with self._lock:
                         plog = self._partition(name, pid)
                         base = len(plog)
-                        # v3+ officially carries RecordBatch v2, v0-2
-                        # message sets; sniff the magic byte so either
-                        # decodes (brokers do the same for down-converted
-                        # producers)
-                        n_recs = 0
-                        for _off, ts, key, value in decode_any_record_set(mset):
-                            plog.append((ts, key, value))
-                            n_recs += 1
-                        if update is not None:
-                            prod_id, epoch, base_seq, count = update
-                            self._producers[(name, pid)][prod_id] = (
-                                epoch, base_seq, base_seq + count, base
-                            )
-                        if txn_batch and n_recs:
-                            prod = batch_producer_meta(mset)[0]
-                            tp = (name, pid)
-                            self._txn_open.setdefault(tp, {}).setdefault(
-                                prod, base
-                            )
-                            self._txn_ranges.setdefault(tp, {}).setdefault(
-                                prod, []
-                            ).append((base, base + n_recs - 1))
-                    else:
-                        base = cached if cached is not None else -1
-                parts += _i32(pid) + _i16(err) + _i64(base)
-                if version >= 2:
-                    parts += _i64(-1)  # log_append_time (producer time kept)
+                        plog.extend((ts, key, value) for _o, ts, key, value in records)
+                # log_append_time -1: the producer's timestamps are kept
+                parts += _i32(pid) + _i16(err) + _i64(base) + _i64(-1)
             topics += _string(name) + bytes(parts)
-        out = bytes(topics)
-        if version >= 1:
-            out += _i32(0)  # throttle_time_ms
-        return out
+        return bytes(topics) + _i32(0)  # throttle_time_ms
 
-    def _fetch(self, c: _Cursor, version: int) -> bytes:
+    def _fetch(self, c: _Cursor) -> bytes:
         c.i32()  # replica_id
         c.i32()  # max_wait
         c.i32()  # min_bytes
-        if version >= 3:
-            c.i32()  # max_bytes (response-level cap)
-        isolation = READ_UNCOMMITTED
-        if version >= 4:
-            isolation = c.i8()  # isolation_level (KIP-98)
+        c.i32()  # max_bytes (response-level cap)
+        c.i8()  # isolation_level: no transactions, so both levels agree
         n_topics = c.i32()
         topics = bytearray(_i32(n_topics))
         for _ in range(n_topics):
@@ -1232,57 +475,28 @@ class KafkaWireBroker:
                 max_bytes = c.i32()
                 with self._lock:
                     plog = list(self._partition(name, pid))
-                    tp = (name, pid)
-                    ctrl = set(self._ctrl.get(tp, ()))
-                    aborted = set(self._aborted.get(tp, ()))
-                    lso = min(
-                        self._txn_open.get(tp, {}).values(),
-                        default=len(plog),
-                    )
                 hw = len(plog)
-                # read_committed: nothing past the LAST STABLE OFFSET (the
-                # first offset of any still-open transaction) is served,
-                # and aborted transactions' records are skipped — the
-                # client-visible semantics of Kafka's aborted_transactions
-                # + control-batch protocol, enforced broker-side here.
-                # Control-marker slots are never data under EITHER level
-                # (real consumers drop control batches too).
-                end = lso if isolation == READ_COMMITTED else hw
-                records, size = [], 0
-                for o in range(max(0, off), end):
-                    if o in ctrl:
-                        continue
-                    if isolation == READ_COMMITTED and o in aborted:
-                        continue
-                    ts, key, value = plog[o]
-                    records.append((o, ts, key, value))
-                    size += 26 + len(key or b"") + len(value or b"")
-                    if size >= max_bytes:
-                        break
-                # v4+ responses carry RecordBatch v2 (varints + CRC32C),
-                # older versions the v1 message set
-                mset = (
-                    encode_record_batch(records, codec=self.fetch_codec)
-                    if version >= 4
-                    else encode_message_set(records, codec=self.fetch_codec)
+                err, records, size = ERR_NONE, [], 0
+                if not 0 <= off <= hw:
+                    err = ERR_OFFSET_OUT_OF_RANGE
+                else:
+                    for o in range(off, hw):
+                        ts, key, value = plog[o]
+                        records.append((o, ts, key, value))
+                        size += 26 + len(key or b"") + len(value or b"")
+                        if size >= max_bytes:
+                            break
+                # last_stable_offset == hw (no transactions) and an empty
+                # aborted_transactions array
+                parts += (
+                    _i32(pid) + _i16(err) + _i64(hw) + _i64(hw) + _i32(0)
+                    + _bytes(encode_record_batch(records))
                 )
-                parts += _i32(pid) + _i16(ERR_NONE) + _i64(hw)
-                if version >= 4:
-                    # last_stable_offset + aborted_transactions (empty:
-                    # the broker already filtered aborted records above,
-                    # so clients need not skip by pid — a declared
-                    # simplification of the client half of KIP-98)
-                    parts += _i64(lso) + _i32(0)
-                parts += _bytes(mset)
             topics += _string(name) + bytes(parts)
-        head = _i32(0) if version >= 1 else b""  # throttle_time_ms
-        return head + bytes(topics)
+        return _i32(0) + bytes(topics)  # throttle_time_ms
 
-    def _list_offsets(self, c: _Cursor, version: int) -> bytes:
+    def _list_offsets(self, c: _Cursor) -> bytes:
         c.i32()  # replica_id
-        isolation = READ_UNCOMMITTED
-        if version >= 2:
-            isolation = c.i8()  # isolation_level (v2+, KIP-98)
         n_topics = c.i32()
         topics = bytearray(_i32(n_topics))
         for _ in range(n_topics):
@@ -1292,31 +506,10 @@ class KafkaWireBroker:
             for _ in range(n_parts):
                 pid = c.i32()
                 ts = c.i64()
-                if version == 0:
-                    c.i32()  # max_num_offsets
-                hw = self.high_watermark(name, pid)
-                if isolation == READ_COMMITTED:
-                    # the "latest" a committed consumer may plan to is the
-                    # LAST STABLE OFFSET — open-transaction records past
-                    # it would otherwise be acked-but-never-served
-                    with self._lock:
-                        hw = min(
-                            self._txn_open.get((name, pid), {}).values(),
-                            default=hw,
-                        )
-                offset = hw if ts == TS_LATEST else 0
-                if version == 0:
-                    parts += (
-                        _i32(pid) + _i16(ERR_NONE) + _i32(1) + _i64(offset)
-                    )
-                else:
-                    parts += (
-                        _i32(pid) + _i16(ERR_NONE) + _i64(-1) + _i64(offset)
-                    )
+                offset = self.high_watermark(name, pid) if ts == TS_LATEST else 0
+                parts += _i32(pid) + _i16(ERR_NONE) + _i64(-1) + _i64(offset)
             topics += _string(name) + bytes(parts)
-        # v2+ responses lead with throttle_time_ms (KIP-219 shape)
-        head = _i32(0) if version >= 2 else b""
-        return head + bytes(topics)
+        return bytes(topics)
 
     def close(self) -> None:
         self._stopped.set()
@@ -1350,30 +543,29 @@ class KafkaWireClient:
             )
         return self._sock
 
-    def _request(self, api_key: int, api_version: int, body: bytes) -> _Cursor:
+    def _recv(self, sock: socket.socket, buf: bytes, n: int) -> bytes:
+        while len(buf) < n:
+            chunk = sock.recv(65536)
+            if not chunk:
+                sock.close()
+                self._sock = None
+                raise KafkaWireError("connection closed by the broker")
+            buf += chunk
+        return buf
+
+    def _request(self, api_key: int, body: bytes) -> _Cursor:
         with self._lock:
             sock = self._connect()
             self._corr += 1
             corr = self._corr
             req = (
-                _i16(api_key) + _i16(api_version) + _i32(corr)
+                _i16(api_key) + _i16(ADVERTISED_VERSION[api_key]) + _i32(corr)
                 + _string(self.client_id) + body
             )
             sock.sendall(_i32(len(req)) + req)
-            buf = b""
-            while len(buf) < 4:
-                chunk = sock.recv(65536)
-                if not chunk:
-                    self._sock = None
-                    raise KafkaConnectionError("connection closed")
-                buf += chunk
+            buf = self._recv(sock, b"", 4)
             n = struct.unpack_from(">i", buf, 0)[0]
-            while len(buf) < 4 + n:
-                chunk = sock.recv(65536)
-                if not chunk:
-                    self._sock = None
-                    raise KafkaConnectionError("connection closed")
-                buf += chunk
+            buf = self._recv(sock, buf, 4 + n)
             c = _Cursor(buf[4:4 + n])
             got = c.i32()
             if got != corr:
@@ -1381,7 +573,7 @@ class KafkaWireClient:
             return c
 
     def api_versions(self) -> dict[int, tuple[int, int]]:
-        c = self._request(API_VERSIONS, 0, b"")
+        c = self._request(API_VERSIONS, b"")
         err = c.i16()
         if err:
             raise KafkaWireError(f"ApiVersions error {err}")
@@ -1393,10 +585,9 @@ class KafkaWireClient:
         }
 
     def metadata(self, *topics: str) -> dict:
-        """Metadata v0 for one or more topics (the leader-side assignor
-        needs every subscribed topic's partition count in one shot)."""
+        """Metadata v0 for one or more topics."""
         body = _i32(len(topics)) + b"".join(_string(t) for t in topics)
-        c = self._request(API_METADATA, 0, body)
+        c = self._request(API_METADATA, body)
         n_brokers = c.i32()
         brokers = [
             (c.i32(), c.string(), c.i32()) for _ in range(n_brokers)
@@ -1417,91 +608,18 @@ class KafkaWireClient:
             topics[name] = {"error": err, "partitions": parts}
         return {"brokers": brokers, "topics": topics}
 
-    def init_producer_id(
-        self, transactional_id: str | None = None
-    ) -> tuple[int, int]:
-        """InitProducerId v0 → (producer_id, producer_epoch) — the
-        identity an idempotent producer stamps into every batch.  With a
-        ``transactional_id`` the broker keeps the pid stable across
-        re-initializations and BUMPS the epoch, fencing the previous
-        incarnation and aborting its in-flight transaction."""
-        c = self._request(
-            API_INIT_PRODUCER_ID, 0, _string(transactional_id) + _i32(60000)
-        )
-        c.i32()  # throttle_time_ms
-        err = c.i16()
-        if err:
-            raise KafkaWireError(f"InitProducerId error {err}")
-        return c.i64(), c.i16()
-
-    def add_partitions_to_txn(
-        self, transactional_id: str, pid: int, epoch: int,
-        topic: str, partitions: list[int],
-    ) -> None:
-        """AddPartitionsToTxn v0: register partitions with the ongoing
-        transaction so EndTxn knows where to write markers."""
-        body = (
-            _string(transactional_id) + _i64(pid) + _i16(epoch)
-            + _i32(1) + _string(topic)
-            + _i32(len(partitions))
-            + b"".join(_i32(p) for p in partitions)
-        )
-        c = self._request(API_ADD_PARTITIONS_TO_TXN, 0, body)
-        c.i32()  # throttle_time_ms
-        for _ in range(c.i32()):
-            c.string()
-            for _p in range(c.i32()):
-                c.i32()
-                err = c.i16()
-                if err:
-                    raise KafkaWireError(f"AddPartitionsToTxn error {err}")
-
-    def end_txn(
-        self, transactional_id: str, pid: int, epoch: int, *, commit: bool
-    ) -> None:
-        """EndTxn v0: commit or abort the ongoing transaction — the broker
-        writes COMMIT/ABORT markers to every registered partition."""
-        body = (
-            _string(transactional_id) + _i64(pid) + _i16(epoch)
-            + _i8(1 if commit else 0)
-        )
-        c = self._request(API_END_TXN, 0, body)
-        c.i32()  # throttle_time_ms
-        err = c.i16()
-        if err:
-            raise KafkaWireError(f"EndTxn error {err}")
-
     def produce(self, topic: str, partition: int,
-                records: list[tuple[bytes | None, bytes | None, int]],
-                *, version: int = 3, codec: str = "none",
-                producer: tuple[int, int, int] | None = None,
-                transactional_id: str | None = None) -> int:
-        """``(key, value, timestamp_ms)`` records → base offset assigned.
-        ``version>=3`` (default — what current brokers speak) sends
-        RecordBatch v2; lower versions the v1 message set (compressed
-        wrapper form when a codec is named).  Codecs: none/gzip/snappy/
-        lz4 in both framings.  ``producer=(pid, epoch, base_sequence)``
-        stamps idempotent-producer identity (RecordBatch v2 only)."""
+                records: list[tuple[bytes | None, bytes | None, int]]) -> int:
+        """``(key, value, timestamp_ms)`` records → base offset assigned
+        (Produce v3, one uncompressed RecordBatch v2)."""
         entries = [(i, ts, key, value) for i, (key, value, ts) in enumerate(records)]
-        if version >= 3:
-            mset = encode_record_batch(
-                entries, codec=codec, producer=producer,
-                transactional=transactional_id is not None,
-            )
-        else:
-            if producer is not None or transactional_id is not None:
-                raise KafkaWireError(
-                    "idempotent/transactional produce needs RecordBatch v2 "
-                    "(version >= 3)"
-                )
-            mset = encode_message_set(entries, codec=codec)
         body = (
-            (_string(transactional_id) if version >= 3 else b"")
+            _string(None)  # transactional_id
             + _i16(1) + _i32(10000)  # acks=1, timeout
             + _i32(1) + _string(topic)
-            + _i32(1) + _i32(partition) + _bytes(mset)
+            + _i32(1) + _i32(partition) + _bytes(encode_record_batch(entries))
         )
-        c = self._request(API_PRODUCE, version, body)
+        c = self._request(API_PRODUCE, body)
         c.i32()  # topic count (1)
         c.string()
         c.i32()  # partition count (1)
@@ -1512,36 +630,17 @@ class KafkaWireClient:
         return c.i64()
 
     def fetch(self, topic: str, partition: int, offset: int,
-              max_bytes: int = 1 << 20, *, version: int = 4,
-              isolation: int = READ_UNCOMMITTED,
-              return_lso: bool = False,
-              ):
-        """→ (high_watermark, [(offset, timestamp, key, value), …]).
-        ``version>=4`` (default) reads RecordBatch v2 responses; lower
-        versions the v1 message set.  Decode sniffs the magic byte, so a
-        mixed-format log reads correctly either way.
-        ``isolation=READ_COMMITTED`` (v4+) serves only rows of committed
-        transactions, capped at the last stable offset.
-
-        ``return_lso=True`` → (high_watermark, last_stable_offset,
-        records): the LSO comes from the SAME broker-side snapshot as the
-        record set (the v4 response field), which is what makes it safe
-        to reason "this fetch was empty AND the LSO was X" — a separate
-        ``list_offsets`` call observes a LATER state, and a transaction
-        resolving between the two calls can move committed records into
-        the gap (the exactly-once marker-scan race).  For version<4 the
-        LSO field does not exist; hw is returned (uncommitted semantics,
-        where lso == hw)."""
-        if isolation == READ_COMMITTED and version < 4:
-            raise KafkaWireError("read_committed needs fetch version >= 4")
+              max_bytes: int = 1 << 20):
+        """Fetch v4 → (high_watermark, [(offset, timestamp, key, value), …]).
+        An offset past the high watermark raises (OFFSET_OUT_OF_RANGE);
+        one equal to it answers an empty list."""
         body = (
-            _i32(-1) + _i32(0) + _i32(0)
-            + (_i32(max_bytes) if version >= 3 else b"")
-            + (_i8(isolation) if version >= 4 else b"")
+            _i32(-1) + _i32(0) + _i32(0) + _i32(max_bytes)
+            + _i8(0)  # isolation_level: read_uncommitted
             + _i32(1) + _string(topic)
             + _i32(1) + _i32(partition) + _i64(offset) + _i32(max_bytes)
         )
-        c = self._request(API_FETCH, version, body)
+        c = self._request(API_FETCH, body)
         c.i32()  # throttle_time
         c.i32()  # topic count
         c.string()
@@ -1549,33 +648,21 @@ class KafkaWireClient:
         c.i32()  # partition id
         err = c.i16()
         if err:
-            raise KafkaWireError(f"fetch error {err}")
+            raise KafkaWireError(f"fetch error {err} at offset {offset}")
         hw = c.i64()
-        lso = hw
-        if version >= 4:
-            lso = c.i64()  # last_stable_offset
-            for _ in range(c.i32()):  # aborted_transactions
-                c.i64(), c.i64()
-        mset = c.bytes() or b""
-        recs = decode_any_record_set(mset)
-        if return_lso:
-            return hw, lso, recs
-        return hw, recs
+        c.i64()  # last_stable_offset
+        for _ in range(c.i32()):  # aborted_transactions
+            c.i64(), c.i64()
+        return hw, decode_record_batches(c.bytes() or b"")
 
-    def list_offsets(self, topic: str, partition: int, ts: int = TS_LATEST,
-                     *, isolation: int = READ_UNCOMMITTED) -> int:
-        """Latest/earliest offset; ``isolation=READ_COMMITTED`` returns
-        the LAST STABLE OFFSET for "latest" (ListOffsets v2 semantics)."""
-        version = 2 if isolation != READ_UNCOMMITTED else 1
+    def list_offsets(self, topic: str, partition: int,
+                     ts: int = TS_LATEST) -> int:
+        """ListOffsets v1: the latest (``TS_LATEST``) or earliest offset."""
         body = (
-            _i32(-1)
-            + (_i8(isolation) if version >= 2 else b"")
-            + _i32(1) + _string(topic)
+            _i32(-1) + _i32(1) + _string(topic)
             + _i32(1) + _i32(partition) + _i64(ts)
         )
-        c = self._request(API_LIST_OFFSETS, version, body)
-        if version >= 2:
-            c.i32()  # throttle_time_ms
+        c = self._request(API_LIST_OFFSETS, body)
         c.i32()  # topic count
         c.string()
         c.i32()  # partition count
@@ -1586,470 +673,10 @@ class KafkaWireClient:
         c.i64()  # timestamp
         return c.i64()
 
-    def find_coordinator(self, group: str) -> tuple[int, str, int]:
-        """FindCoordinator v0 → (node_id, host, port) of the group's
-        coordinator (this broker — single node)."""
-        c = self._request(API_FIND_COORDINATOR, 0, _string(group))
-        err = c.i16()
-        if err:
-            raise KafkaWireError(f"FindCoordinator error {err}")
-        return c.i32(), c.string() or "", c.i32()
-
-    def offset_commit(
-        self, group: str, offsets: dict[tuple[str, int], int],
-        *, metadata: str | None = None,
-        generation: int = -1, member: str = "",
-    ) -> None:
-        """OffsetCommit v2: durably record ``{(topic, partition):
-        offset}`` for the group.  Default (generation -1, empty member)
-        is the manual-assignment contract — the K6 per-record ack lands
-        here (es-kafka stream/Extensions.kt:10-17: ack = commit
-        offset+1).  Coordinated members pass their live (generation,
-        member_id); the broker fences stale generations."""
-        by_topic: dict[str, list[tuple[int, int]]] = {}
-        for (topic, p), off in offsets.items():
-            by_topic.setdefault(topic, []).append((p, off))
-        body = bytearray(
-            _string(group) + _i32(generation) + _string(member) + _i64(-1)
-            + _i32(len(by_topic))
-        )
-        for topic, parts in by_topic.items():
-            body += _string(topic) + _i32(len(parts))
-            for p, off in parts:
-                body += _i32(p) + _i64(off) + _string(metadata)
-        c = self._request(API_OFFSET_COMMIT, 2, bytes(body))
-        for _ in range(c.i32()):
-            c.string()
-            for _p in range(c.i32()):
-                c.i32()
-                err = c.i16()
-                if err:
-                    raise KafkaWireError(f"OffsetCommit error {err}")
-
-    def offset_fetch(
-        self, group: str, parts: list[tuple[str, int]]
-    ) -> dict[tuple[str, int], int]:
-        """OffsetFetch v1 → committed offset per (topic, partition);
-        -1 where the group never committed (auto.offset.reset applies)."""
-        by_topic: dict[str, list[int]] = {}
-        for topic, p in parts:
-            by_topic.setdefault(topic, []).append(p)
-        body = bytearray(_string(group) + _i32(len(by_topic)))
-        for topic, ps in by_topic.items():
-            body += _string(topic) + _i32(len(ps))
-            for p in ps:
-                body += _i32(p)
-        c = self._request(API_OFFSET_FETCH, 1, bytes(body))
-        out: dict[tuple[str, int], int] = {}
-        for _ in range(c.i32()):
-            topic = c.string() or ""
-            for _p in range(c.i32()):
-                p = c.i32()
-                off = c.i64()
-                c.string()  # metadata
-                err = c.i16()
-                if err:
-                    raise KafkaWireError(f"OffsetFetch error {err}")
-                out[(topic, p)] = off
-        return out
-
-    def join_group(
-        self, group: str, member_id: str, protocols: list[tuple[str, bytes]],
-        *, session_timeout_ms: int = 10000, rebalance_timeout_ms: int = 3000,
-        protocol_type: str = "consumer",
-    ) -> dict:
-        """JoinGroup v1 → {error, generation, protocol, leader,
-        member_id, members: {id: metadata}} (members only for the
-        leader).  Blocks broker-side until the rebalance barrier forms
-        the new generation."""
-        body = (
-            _string(group) + _i32(session_timeout_ms)
-            + _i32(rebalance_timeout_ms) + _string(member_id)
-            + _string(protocol_type) + _i32(len(protocols))
-            + b"".join(_string(n) + _bytes(m) for n, m in protocols)
-        )
-        c = self._request(API_JOIN_GROUP, 1, body)
-        err = c.i16()
-        gen = c.i32()
-        proto = c.string() or ""
-        leader = c.string() or ""
-        mid = c.string() or ""
-        members = {}
-        for _ in range(c.i32()):
-            # explicit sequencing: Python evaluates an assignment's RHS
-            # before the subscript key, which would read bytes-then-string
-            m = c.string() or ""
-            members[m] = c.bytes() or b""
-        return {
-            "error": err, "generation": gen, "protocol": proto,
-            "leader": leader, "member_id": mid, "members": members,
-        }
-
-    def sync_group(
-        self, group: str, generation: int, member_id: str,
-        assignments: dict[str, bytes] | None = None,
-    ) -> tuple[int, bytes]:
-        """SyncGroup v0 → (error, my_assignment).  The leader passes the
-        full assignment map; followers pass none and block until the
-        leader has delivered."""
-        assigns = assignments or {}
-        body = (
-            _string(group) + _i32(generation) + _string(member_id)
-            + _i32(len(assigns))
-            + b"".join(_string(m) + _bytes(a) for m, a in assigns.items())
-        )
-        c = self._request(API_SYNC_GROUP, 0, body)
-        return c.i16(), c.bytes() or b""
-
-    def heartbeat(self, group: str, generation: int, member_id: str) -> int:
-        """Heartbeat v0 → error code (0 alive; 27 = rebalance in
-        progress, rejoin; 25 = evicted; 22 = stale generation)."""
-        c = self._request(
-            API_HEARTBEAT, 0,
-            _string(group) + _i32(generation) + _string(member_id),
-        )
-        return c.i16()
-
-    def leave_group(self, group: str, member_id: str) -> int:
-        c = self._request(
-            API_LEAVE_GROUP, 0, _string(group) + _string(member_id)
-        )
-        return c.i16()
-
     def close(self) -> None:
         if self._sock is not None:
             self._sock.close()
             self._sock = None
-
-
-def encode_subscription(topics: list[str], user_data: bytes = b"") -> bytes:
-    """ConsumerProtocolSubscription v0 (the bytes real consumers put in
-    JoinGroup protocol metadata): version, topics, user_data."""
-    return (
-        _i16(0) + _i32(len(topics))
-        + b"".join(_string(t) for t in topics) + _bytes(user_data)
-    )
-
-
-def decode_subscription(data: bytes) -> list[str]:
-    c = _Cursor(data)
-    c.i16()  # version
-    return [c.string() or "" for _ in range(c.i32())]
-
-
-def encode_assignment(parts: dict[str, list[int]]) -> bytes:
-    """ConsumerProtocolAssignment v0: version, [topic, [partition]],
-    user_data."""
-    out = bytearray(_i16(0) + _i32(len(parts)))
-    for topic, ps in sorted(parts.items()):
-        out += _string(topic) + _i32(len(ps))
-        for p in sorted(ps):
-            out += _i32(p)
-    return bytes(out) + _bytes(b"")
-
-
-def decode_assignment(data: bytes) -> dict[str, list[int]]:
-    if not data:
-        return {}
-    c = _Cursor(data)
-    c.i16()  # version
-    out: dict[str, list[int]] = {}
-    for _ in range(c.i32()):
-        topic = c.string() or ""
-        out[topic] = [c.i32() for _ in range(c.i32())]
-    return out
-
-
-class GroupMember:
-    """A COORDINATED classic-protocol group member (VERDICT r10 #7 —
-    the boundary the manual-assignment ``GroupConsumer`` declared):
-    JoinGroup forms the generation, the elected leader runs the RANGE
-    assignor client-side over every member's subscription (Kafka's
-    client-side-assignment design), SyncGroup distributes the slices,
-    Heartbeat keeps the session and learns of rebalances, and offset
-    commits carry (generation, member_id) so a fenced zombie can never
-    move the group's position.
-
-    ``ensure_active()`` is the poll-loop contract: heartbeat, and
-    rejoin + resync on REBALANCE_IN_PROGRESS / eviction — returns the
-    current assignment {topic: [partition, ...]}."""
-
-    def __init__(self, client: KafkaWireClient, group: str,
-                 topics: list[str], *, session_timeout_ms: int = 10000,
-                 rebalance_timeout_ms: int = 3000):
-        self.client = client
-        self.group = group
-        self.topics = list(topics)
-        self.session_timeout_ms = session_timeout_ms
-        self.rebalance_timeout_ms = rebalance_timeout_ms
-        self.member_id = ""
-        self.generation = -1
-        self.assignment: dict[str, list[int]] = {}
-        client.find_coordinator(group)
-
-    def _range_assign(self, members: dict[str, bytes]) -> dict[str, bytes]:
-        """Leader-side range assignor: per topic, contiguous partition
-        ranges across the subscribed members in member-id order."""
-        md = self.client.metadata(*sorted({
-            t for m in members.values() for t in decode_subscription(m)
-        }))
-        plan: dict[str, dict[str, list[int]]] = {m: {} for m in members}
-        subs = {m: set(decode_subscription(b)) for m, b in members.items()}
-        for topic in sorted(md["topics"]):
-            want = sorted(m for m, ts in subs.items() if topic in ts)
-            if not want:
-                continue
-            nparts = len(md["topics"][topic]["partitions"])
-            base, extra = divmod(nparts, len(want))
-            p = 0
-            for i, m in enumerate(want):
-                take = base + (1 if i < extra else 0)
-                if take:
-                    plan[m][topic] = list(range(p, p + take))
-                    p += take
-        return {m: encode_assignment(t) for m, t in plan.items()}
-
-    def join(self) -> dict[str, list[int]]:
-        """One full join→(assign)→sync round; returns the assignment."""
-        sub = encode_subscription(self.topics)
-        res = self.client.join_group(
-            self.group, self.member_id, [("range", sub)],
-            session_timeout_ms=self.session_timeout_ms,
-            rebalance_timeout_ms=self.rebalance_timeout_ms,
-        )
-        if res["error"] == ERR_UNKNOWN_MEMBER_ID and self.member_id:
-            self.member_id = ""  # evicted: rejoin as a new member
-            return self.join()
-        if res["error"]:
-            raise KafkaWireError(f"JoinGroup error {res['error']}")
-        self.member_id = res["member_id"]
-        self.generation = res["generation"]
-        assigns = (
-            self._range_assign(res["members"])
-            if res["member_id"] == res["leader"]
-            else None
-        )
-        err, mine = self.client.sync_group(
-            self.group, self.generation, self.member_id, assigns
-        )
-        if err == ERR_REBALANCE_IN_PROGRESS:
-            return self.join()  # a member joined mid-sync: next round
-        if err:
-            raise KafkaWireError(f"SyncGroup error {err}")
-        self.assignment = decode_assignment(mine)
-        return self.assignment
-
-    def ensure_active(self) -> dict[str, list[int]]:
-        """Heartbeat; rejoin when the group moved (rebalance, eviction,
-        stale generation).  The poll-loop entry point."""
-        if self.generation < 0:
-            return self.join()
-        err = self.client.heartbeat(
-            self.group, self.generation, self.member_id
-        )
-        if err == ERR_NONE:
-            return self.assignment
-        if err == ERR_UNKNOWN_MEMBER_ID:
-            self.member_id = ""
-        if err in (ERR_REBALANCE_IN_PROGRESS, ERR_ILLEGAL_GENERATION,
-                   ERR_UNKNOWN_MEMBER_ID):
-            return self.join()
-        raise KafkaWireError(f"Heartbeat error {err}")
-
-    def commit(self, offsets: dict[tuple[str, int], int]) -> None:
-        """Offset commit under this member's live (generation, id) —
-        the broker fences it the moment a new generation forms."""
-        self.client.offset_commit(
-            self.group, offsets,
-            generation=self.generation, member=self.member_id,
-        )
-
-    def leave(self) -> None:
-        if self.member_id:
-            self.client.leave_group(self.group, self.member_id)
-            self.member_id, self.generation = "", -1
-            self.assignment = {}
-
-
-class GroupConsumer:
-    """The reference's K6 ack contract for an EXTERNAL consumer of this
-    broker (es-kafka stream/Extensions.kt:10-17: ``ack(record)`` =
-    commit ``record.offset + 1`` to the consumer group), spoken on the
-    wire: FindCoordinator → OffsetFetch resumes from the group's
-    committed position (earliest when none) → fetch → per-record
-    ``ack`` commits durably.  Manual assignment, classic group path —
-    single-member groups never rebalance, so no join/sync protocol is
-    needed (Kafka's own simple-consumer rule: generation -1, empty
-    member).  ``isolation=READ_COMMITTED`` composes: an aborted
-    transaction's records are neither delivered nor acked, and the
-    committed position can never land inside an open transaction
-    because fetch stops at the LSO."""
-
-    def __init__(self, client: KafkaWireClient, group: str, topic: str,
-                 partition: int, *, isolation: int = READ_UNCOMMITTED):
-        self.client = client
-        self.group = group
-        self.topic = topic
-        self.partition = partition
-        self.isolation = isolation
-        client.find_coordinator(group)  # protocol-faithful lookup
-        committed = client.offset_fetch(group, [(topic, partition)])[
-            (topic, partition)
-        ]
-        self._pos = committed if committed >= 0 else 0
-
-    def poll(self, max_bytes: int = 1 << 20) -> list[tuple]:
-        """Next records from the in-memory position (advances on
-        delivery; durability comes only from :meth:`ack`)."""
-        _hw, recs = self.client.fetch(
-            self.topic, self.partition, self._pos,
-            max_bytes, isolation=self.isolation,
-        )
-        if recs:
-            self._pos = recs[-1][0] + 1
-        return recs
-
-    def ack(self, offset: int) -> None:
-        """Per-record ack: commit ``offset + 1`` — a consumer restarted
-        from the group resumes AFTER the last acked record, re-seeing
-        only unacked ones (at-least-once, the reference's contract)."""
-        self.client.offset_commit(
-            self.group, {(self.topic, self.partition): offset + 1}
-        )
-
-
-class IdempotentProducer:
-    """KIP-98 idempotent producer over :class:`KafkaWireClient` —
-    upgrading the K4 sink's produce from at-least-once to exactly-once
-    per producer session (the guarantee the reference's native client
-    provides via ``enable.idempotence``; KafkaBlockSink.kt:16-38).
-
-    One InitProducerId fetches a (pid, epoch); every batch then carries
-    a per-partition monotone base sequence.  On a TRANSPORT failure
-    (response lost — the broker may or may not have appended) the same
-    batch is re-sent with the SAME sequence: the broker recognizes a
-    replay and acks the original base offset without re-appending, so a
-    retry can never double-write.  Broker-side errors (fencing, sequence
-    gaps) surface immediately — retrying those is never safe.
-
-    Scope note: idempotence covers retries WITHIN this producer session.
-    A restarted process gets a fresh pid, so cross-restart replay
-    (foreachBatch re-running a microbatch) still needs the ack/offset-log
-    contract (K6) or a txn sink — same division of labor as Kafka."""
-
-    def __init__(self, client: KafkaWireClient, topic: str, *,
-                 codec: str = "none", retries: int = 3):
-        self.client = client
-        self.topic = topic
-        self.codec = codec
-        self.retries = retries
-        self.pid, self.epoch = client.init_producer_id()
-        self._seq: dict[int, int] = {}  # partition → next base sequence
-
-    def send(self, partition: int,
-             records: list[tuple[bytes | None, bytes | None, int]]) -> int:
-        """Produce one batch exactly-once; returns its base offset."""
-        if not records:
-            raise ValueError("empty batch")
-        seq = self._seq.get(partition, 0)
-        last: Exception | None = None
-        for _ in range(self.retries + 1):
-            try:
-                off = self.client.produce(
-                    self.topic, partition, records,
-                    codec=self.codec,
-                    producer=(self.pid, self.epoch, seq),
-                )
-            except (KafkaConnectionError, OSError) as exc:
-                last = exc
-                self.client.close()  # reconnect on the next request
-                continue
-            self._seq[partition] = seq + len(records)
-            return off
-        raise last  # type: ignore[misc]
-
-
-class TransactionalProducer:
-    """KIP-98 TRANSACTIONAL producer over :class:`KafkaWireClient` — the
-    full exactly-once produce contract the reference's sink relies on its
-    native client for (es-kafka KafkaBlockSink.kt:16-38 is at-least-once;
-    Kafka's own transactions are what upgrade it).  Composes idempotence
-    (per-partition sequences, inherited behavior) with atomic multi-batch
-    visibility:
-
-    - construction = ``initTransactions()``: InitProducerId with the
-      ``transactional.id`` — the broker keeps the pid stable, bumps the
-      epoch (fencing any previous incarnation), and ABORTS a transaction
-      that incarnation left open, so a producer that crashed between
-      produce and EndTxn can never leak records to read_committed
-      consumers;
-    - ``send`` registers the partition (AddPartitionsToTxn, once per txn)
-      and produces with the transactional bit + idempotent sequence;
-    - ``commit()`` / ``abort()`` = EndTxn: the broker writes COMMIT/ABORT
-      markers to every registered partition; only then do the records
-      become visible to (or permanently hidden from) read_committed
-      fetches.
-    """
-
-    def __init__(self, client: KafkaWireClient, topic: str,
-                 transactional_id: str, *, codec: str = "none",
-                 retries: int = 3):
-        self.client = client
-        self.topic = topic
-        self.txn_id = transactional_id
-        self.codec = codec
-        self.retries = retries
-        self.pid, self.epoch = client.init_producer_id(transactional_id)
-        # both keyed by (topic, partition): a transaction may span topics
-        # (e.g. data + the sink's attempt-marker topic, committed
-        # atomically — the Flink resumeTransaction shape)
-        self._seq: dict[tuple[str, int], int] = {}
-        self._in_txn: set[tuple[str, int]] = set()
-
-    def send(self, partition: int,
-             records: list[tuple[bytes | None, bytes | None, int]]) -> int:
-        """Produce one batch inside the current transaction; returns its
-        base offset.  Transport retries reuse the sequence (idempotent),
-        so a lost ack can never double-write even inside the txn."""
-        return self.send_to(self.topic, partition, records)
-
-    def send_to(self, topic: str, partition: int,
-                records: list[tuple[bytes | None, bytes | None, int]]) -> int:
-        """`send` with an explicit topic — all sends before `commit()`
-        belong to ONE transaction regardless of topic."""
-        if not records:
-            raise ValueError("empty batch")
-        tp = (topic, partition)
-        if tp not in self._in_txn:
-            self.client.add_partitions_to_txn(
-                self.txn_id, self.pid, self.epoch, topic, [partition]
-            )
-            self._in_txn.add(tp)
-        seq = self._seq.get(tp, 0)
-        last: Exception | None = None
-        for _ in range(self.retries + 1):
-            try:
-                off = self.client.produce(
-                    topic, partition, records,
-                    codec=self.codec,
-                    producer=(self.pid, self.epoch, seq),
-                    transactional_id=self.txn_id,
-                )
-            except (KafkaConnectionError, OSError) as exc:
-                last = exc
-                self.client.close()
-                continue
-            self._seq[tp] = seq + len(records)
-            return off
-        raise last  # type: ignore[misc]
-
-    def commit(self) -> None:
-        self.client.end_txn(self.txn_id, self.pid, self.epoch, commit=True)
-        self._in_txn.clear()
-
-    def abort(self) -> None:
-        self.client.end_txn(self.txn_id, self.pid, self.epoch, commit=False)
-        self._in_txn.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -2064,13 +691,10 @@ SCHEMA = (
 
 class _FetchRange(InputPartition):
     def __init__(self, host: str, port: int, topic: str, partition: int,
-                 start: int, end: int, fetch_version: int = 4,
-                 isolation: int = READ_UNCOMMITTED):
+                 start: int, end: int):
         self.host, self.port = host, port
         self.topic, self.partition = topic, partition
         self.start, self.end = start, end
-        self.isolation = isolation
-        self.fetch_version = fetch_version
 
 
 class KafkaWireStreamReader(DataSourceStreamReader):
@@ -2091,18 +715,6 @@ class KafkaWireStreamReader(DataSourceStreamReader):
             raise ValueError("kafkawire needs topic")
         self.starting = options.get("starting_offsets", "earliest")
         self.max_per_trigger = int(options.get("max_offsets_per_trigger", 0)) or None
-        # 4 = RecordBatch v2 (the modern default); 2 = message-set v1
-        self.fetch_version = int(options.get("fetch_version", 4))
-        # "read_committed" plans offsets against the LSO and fetches only
-        # committed-transaction records (KIP-98); default matches Kafka's
-        # consumer default of read_uncommitted
-        self.isolation = (
-            READ_COMMITTED
-            if options.get("isolation", "").lower() == "read_committed"
-            else READ_UNCOMMITTED
-        )
-        if self.isolation == READ_COMMITTED and self.fetch_version < 4:
-            raise ValueError("read_committed needs fetch_version >= 4")
         self._client: KafkaWireClient | None = None
         self._n_parts: int | None = None
         self._last: dict[str, int] = {}  # last offsets reported to the planner
@@ -2121,9 +733,7 @@ class KafkaWireStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         ts = TS_EARLIEST if self.starting == "earliest" else TS_LATEST
         self._last = {
-            str(p): self._c().list_offsets(
-                self.topic, p, ts, isolation=self.isolation
-            )
+            str(p): self._c().list_offsets(self.topic, p, ts)
             for p in range(self._partitions())
         }
         return dict(self._last)
@@ -2133,9 +743,7 @@ class KafkaWireStreamReader(DataSourceStreamReader):
         the planner checkpoints whatever this returns as the batch end, so
         clamping later would silently skip the gap (an offset is an ack)."""
         for p in range(self._partitions()):
-            head = self._c().list_offsets(
-                self.topic, p, TS_LATEST, isolation=self.isolation
-            )
+            head = self._c().list_offsets(self.topic, p, TS_LATEST)
             prev = self._last.get(str(p), 0)
             if self.max_per_trigger is not None:
                 head = min(head, prev + self.max_per_trigger)
@@ -2149,24 +757,25 @@ class KafkaWireStreamReader(DataSourceStreamReader):
             if hi > lo:
                 out.append(_FetchRange(
                     self.host, self.port, self.topic, int(p_str), lo, hi,
-                    self.fetch_version, self.isolation,
                 ))
         return out
 
     def read(self, partition: _FetchRange) -> Iterator[tuple]:
+        """Rows at offsets ``[start, end)``.  A log that ends before
+        ``end`` raises: the batch must fail, not commit ``end`` as read."""
         client = KafkaWireClient(partition.host, partition.port)
         try:
             offset = partition.start
             while offset < partition.end:
                 _hw, records = client.fetch(
-                    partition.topic, partition.partition, offset,
-                    version=getattr(partition, "fetch_version", 4),
-                    isolation=getattr(
-                        partition, "isolation", READ_UNCOMMITTED
-                    ),
+                    partition.topic, partition.partition, offset
                 )
                 if not records:
-                    return  # log truncated below the requested span
+                    raise KafkaWireError(
+                        f"{partition.topic}/{partition.partition} ends at "
+                        f"offset {offset}, before the planned end "
+                        f"{partition.end}"
+                    )
                 for off, ts, key, value in records:
                     if off >= partition.end:
                         return
@@ -2209,14 +818,10 @@ def kafka_wire_block_source(
     starting_offsets: str = "earliest",
     max_offsets_per_trigger: int | None = None,
     drop_corrupt: bool = False,
-    isolation: str | None = None,
 ):
     """S9 over the real wire: stream the topic through the kafkawire
     source and decode with the same fixed-schema path as the stock reader
-    (KafkaBlockSource.kt:15-30 parity, transport included).
-    ``isolation="read_committed"`` consumes only committed transactions
-    (KIP-98) — pair it with the transactional sink for end-to-end
-    exactly-once block delivery."""
+    (KafkaBlockSource.kt:15-30 parity, transport included)."""
     from event_stream_spark.sources.kafka import decode_kafka_records
 
     register(spark)
@@ -2230,6 +835,4 @@ def kafka_wire_block_source(
         reader = reader.option(
             "max_offsets_per_trigger", str(max_offsets_per_trigger)
         )
-    if isolation is not None:
-        reader = reader.option("isolation", isolation)
     return decode_kafka_records(reader.load(), drop_corrupt=drop_corrupt)

@@ -1,10 +1,8 @@
-"""Pure-python Zstandard DECODER (RFC 8878) — the Kafka zstd read path.
+"""Pure-python Zstandard DECODER (RFC 8878) — the read path of the
+``.jsonl.zst`` dumps (``sources/dumps.py``, ``sources/dumpstream.py``).
 
-The reference consumes zstd-compressed Kafka topics through a stock client
-(es-kafka/src/main/kotlin/tech/figure/kafka/stream/KafkaBlockSource.kt:15-30);
-this engine's hand-rolled wire transport previously refused compression
-type 4 by name because a zstd decoder needs real entropy coding.  This
-module implements that decoder from the PUBLIC specification (RFC 8878 /
+A zstd decoder needs real entropy coding and no zstd library is assumed,
+so this module implements one from the PUBLIC specification (RFC 8878 /
 zstd Compression Format), decode-only:
 
 - frame parsing (magic, frame-header descriptor, window descriptor,
@@ -23,7 +21,7 @@ zstd Compression Format), decode-only:
   present).
 
 Deliberately refused, loudly: dictionaries (``Dictionary_ID != 0`` —
-Kafka never uses them).  The COMPRESS direction lives in ``zstdenc``
+no dump writer uses them).  The COMPRESS direction lives in ``zstdenc``
 (real LZ77 + FSE/Huffman frames); :func:`zstd_store_frame` remains as
 the zero-cost STORE-mode writer (raw blocks + checksum, the stored-zip
 trade) for bulk fixture writes on hosts without libzstd.
@@ -817,7 +815,7 @@ def zstd_decompress(data: bytes) -> bytes:
 # --------------------------------------------------------------------------
 
 #: below this size the pure decoder beats a CLI subprocess spawn (~5 ms);
-#: Kafka record batches sit here, dump shards sit far above it
+#: small frames sit here, dump shards sit far above it
 _CLI_MIN_BYTES = 16384
 
 _FAST_BACKEND: "tuple[str, object] | None" = None
@@ -864,8 +862,8 @@ def zstd_decompress_fast(data: bytes) -> bytes:
     - ``zstandard`` (C binding), via ``stream_reader(read_across_frames
       =True)`` — same concatenated-frame contract as the pure decoder;
     - the ``zstd`` CLI, one subprocess per call (spawn cost amortizes
-      over multi-MB shards; inputs under ``_CLI_MIN_BYTES`` — e.g. Kafka
-      record batches — stay on the pure decoder where it is faster);
+      over multi-MB shards; inputs under ``_CLI_MIN_BYTES`` stay on the
+      pure decoder where it is faster);
     - :func:`zstd_decompress` (pure Python).
 
     Failures raise :class:`ZstdError` in every backend.
@@ -905,8 +903,8 @@ def zstd_store_frame(data: bytes) -> bytes:
     of raw blocks + content checksum — the zstd analogue of a stored-mode
     zip entry (any conformant decoder accepts it; zstd itself emits raw
     blocks for incompressible input).  Kept for bulk fixture writes where
-    compression CPU would be wasted; the Kafka produce direction and any
-    caller that wants real compression use ``zstdenc.zstd_compress``.
+    compression CPU would be wasted; a caller that wants real compression
+    uses ``zstdenc.zstd_compress``.
     """
     n = len(data)
     if n <= 0xFF:

@@ -24,11 +24,9 @@ Every frame round-trips through ``zstdcodec.zstd_decompress`` (the
 verification oracle) and is accepted by the ``zstd`` CLI — see
 ``tests/test_zstdenc.py``.
 
-Provenance: the reference consumes and produces compressed Kafka topics
-through a native client (es-kafka KafkaBlockSource.kt:15-30 /
-KafkaBlockSink.kt:16-38); this module gives the wire-level producer
-(``sources/kafkawire.py``) a real zstd compress direction with zero
-dependencies, mirroring the decoder's stance.
+Caller: the ``.jsonl.zst`` dump writer (``sources/dumps.py``) — a real
+zstd compress direction with zero dependencies, mirroring the decoder's
+stance.
 """
 from __future__ import annotations
 

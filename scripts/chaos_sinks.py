@@ -16,9 +16,6 @@ Covered sinks:
 - snaplog.commit          (Spark parquet task-commit protocol upstream
   of the manifest claim; a once-failing mapInPandas stage rides the
   same tasks as the file write)
-- transactional Kafka sink (KIP-98: a task dying between produce and
-  EndTxn is fenced by its retry's InitProducerId, its open transaction
-  aborted — read_committed consumers end with exactly one copy)
 - vacuum racing branch merges (the hard-linked merge files' TTL guard:
   an aggressive vacuum loop runs through eight diverge→merge→drop
   cycles with the relink→commit window widened and one divergent
@@ -140,46 +137,7 @@ def main() -> None:
     assert got == list(range(1000)), "duplicate or missing rows after retry"
     results["snap_rows"] = 1000
 
-    # ---- 4. transactional Kafka sink (KIP-98, task-retry chaos) ---------
-    from event_stream_spark.sinks.kafka import write_kafka_wire_txn_batch
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-
-    broker = KafkaWireBroker(num_partitions=2)
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        recs = spark.range(0, 64).selectExpr(
-            "CAST(CAST(id AS STRING) AS BINARY) AS key",
-            "CAST(CAST(id * 7 AS STRING) AS BINARY) AS value",
-        ).repartition(8)
-        flag = arm("txnsink")
-        # one task dies AFTER produce, BEFORE EndTxn; its retry re-inits
-        # the same transactional.id, which fences the dead attempt and
-        # aborts its open transaction — read_committed consumers must end
-        # with exactly one copy of every record
-        write_kafka_wire_txn_batch(
-            recs, broker.host, broker.port, "t",
-            txn_prefix="chaos", chaos_flag=flag,
-        )
-        fired(flag)
-        keys = []
-        for p in range(2):
-            _hw, fetched = client.fetch(
-                "t", p, 0, isolation=READ_COMMITTED
-            )
-            keys += [int(r[2]) for r in fetched]
-        assert sorted(keys) == list(range(64)), (
-            "duplicate/missing records after txn-sink task retry"
-        )
-        results["txn_sink_records"] = len(keys)
-    finally:
-        client.close()
-        broker.close()
-
-    # ---- 5. vacuum racing branch merges (and branch/clone divergence) ----
+    # ---- 4. vacuum racing branch merges (and branch/clone divergence) ----
     # r9's most serious advisory was the vacuum-TTL hole on hard-linked
     # merge files: a merge links branch files into main's merge dir, and
     # until the metadata commit publishes they are UNREFERENCED by any

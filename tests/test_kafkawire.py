@@ -1,52 +1,43 @@
-"""Real Kafka wire protocol (S9): message-set codec, broker/client
-protocol exchange, and the Spark streaming source end-to-end with corrupt
-routing and throttling.
+"""Real Kafka wire protocol (S9): RecordBatch v2 codec, broker/client
+protocol exchange over the five advertised APIs, and the Spark streaming
+source end-to-end with corrupt routing, throttling and checkpoint resume.
 
 Parity targets: es-kafka/.../KafkaBlockSource.kt:15-30 (consume + decode),
-KafkaSourceTests.kt:37-286 (SerializationException → corrupt routing).
+KafkaSourceTests.kt:37-286 (SerializationException → corrupt routing),
+stream/Extensions.kt:10-17 (at-least-once ack, here the offset log).
 """
 
 from __future__ import annotations
 
 import json
+import os
+import socket
+import struct
 import time
 
 import pytest
 
 from event_stream_spark.sources.kafkawire import (
+    API_PRODUCE,
+    ERR_CORRUPT_MESSAGE,
     TS_EARLIEST,
     TS_LATEST,
     KafkaWireBroker,
     KafkaWireClient,
     KafkaWireError,
+    KafkaWireStreamReader,
+    _bytes,
+    _FetchRange,
+    _i16,
+    _i32,
     _read_varint,
+    _string,
     _varint,
     crc32c,
-    decode_message_set,
     decode_record_batches,
-    encode_message_set,
     encode_record_batch,
     kafka_wire_block_source,
 )
-
-
-def test_message_set_roundtrip_and_crc():
-    records = [
-        (0, 1650000000000, b"k0", b"v0"),
-        (1, 1650000000001, None, b"null-key"),
-        (2, 1650000000002, b"k2", None),
-    ]
-    blob = encode_message_set(records)
-    assert decode_message_set(blob) == records
-
-    # corrupt a payload byte → CRC catches it
-    bad = bytearray(blob)
-    bad[-1] ^= 0xFF
-    with pytest.raises(KafkaWireError, match="crc"):
-        decode_message_set(bytes(bad))
-
-    # partial trailing message (a mid-message fetch cut) parses the prefix
-    assert decode_message_set(blob[:len(blob) - 3]) == records[:2]
 
 
 def test_crc32c_spec_vectors():
@@ -82,15 +73,14 @@ def test_record_batch_v2_layout_and_roundtrip():
     blob = encode_record_batch(records)
     # fixed-header layout: baseOffset i64 · batchLength i32 ·
     # partitionLeaderEpoch i32 · magic i8(=2)
-    import struct as _struct
-
-    assert _struct.unpack_from(">q", blob, 0)[0] == 100  # baseOffset
-    blen = _struct.unpack_from(">i", blob, 8)[0]
+    assert struct.unpack_from(">q", blob, 0)[0] == 100  # baseOffset
+    blen = struct.unpack_from(">i", blob, 8)[0]
     assert 12 + blen == len(blob)  # batchLength covers the rest exactly
-    assert blob[16] == 2  # magic — same offset as message-set v1's magic
+    assert blob[16] == 2  # magic
+    assert struct.unpack_from(">h", blob, 21)[0] == 0  # attributes: uncompressed
     # recordCount at fixed offset 57 (after crc4+attrs2+delta4+ts8+ts8+
     # pid8+epoch2+seq4 from byte 21)
-    assert _struct.unpack_from(">i", blob, 57)[0] == 3
+    assert struct.unpack_from(">i", blob, 57)[0] == 3
 
     assert decode_record_batches(blob) == records
 
@@ -111,43 +101,46 @@ def test_record_batch_v2_layout_and_roundtrip():
     assert decode_record_batches(two[:-5]) == records
 
 
-def test_produce_v3_fetch_v4_and_mixed_format_log():
+def test_produce_v3_fetch_v4_roundtrip():
     """RecordBatch v2 end-to-end through the broker: Produce v3 appends,
-    Fetch v4 serves v2 batches; a log fed through BOTH producer formats
-    reads whole through either fetch version (magic-byte sniffing)."""
+    Fetch v4 serves the log back as v2 batches."""
     broker = KafkaWireBroker()
     client = KafkaWireClient(broker.host, broker.port)
     try:
         assert client.produce(
-            "blocks", 0, [(b"k1", b"v1", 1000), (None, b"v2", 2000)],
-            version=3,
+            "blocks", 0, [(b"k1", b"v1", 1000), (None, b"v2", 2000)]
         ) == 0
-        # old producer on the same log
-        assert client.produce(
-            "blocks", 0, [(b"k3", None, 3000)], version=2
-        ) == 2
+        assert client.produce("blocks", 0, [(b"k3", None, 3000)]) == 2
 
-        hw, recs = client.fetch("blocks", 0, 0, version=4)
+        hw, recs = client.fetch("blocks", 0, 0)
         assert hw == 3
         assert recs == [
             (0, 1000, b"k1", b"v1"),
             (1, 2000, None, b"v2"),
             (2, 3000, b"k3", None),
         ]
-        # legacy consumer still reads the same log via message sets
-        hw2, recs2 = client.fetch("blocks", 0, 0, version=2)
-        assert (hw2, recs2) == (hw, recs)
     finally:
         client.close()
         broker.close()
+
+
+def _raw_request(broker, api_key: int, version: int, body: bytes) -> bytes:
+    """Send one request on a fresh connection; the broker's answer, or
+    b"" when it closed the connection instead."""
+    with socket.create_connection((broker.host, broker.port), timeout=10) as s:
+        req = _i16(api_key) + _i16(version) + _i32(7) + _string("raw") + body
+        s.sendall(_i32(len(req)) + req)
+        return s.recv(65536)
 
 
 def test_broker_client_protocol_exchange():
     broker = KafkaWireBroker(num_partitions=2)
     client = KafkaWireClient(broker.host, broker.port)
     try:
-        versions = client.api_versions()
-        assert versions[0] == (0, 3) and versions[1] == (0, 4)
+        # exactly the five (api, version) pairs, one version each
+        assert client.api_versions() == {
+            0: (3, 3), 1: (4, 4), 2: (1, 1), 3: (0, 0), 18: (0, 0),
+        }
 
         md = client.metadata("blocks")
         assert md["brokers"] == [(0, broker.host, broker.port)]
@@ -173,6 +166,97 @@ def test_broker_client_protocol_exchange():
         assert (hw, records) == (3, [])
         # one TCP connection served every request
         assert broker.connections == 1
+
+        # an unadvertised version is refused (connection closed, no
+        # answer), never read with another version's layout: Produce v2
+        # has no transactional_id, v4 has v3's layout
+        batch = encode_record_batch([(0, 5000, b"x", b"y")])
+        topics = _i32(1) + _string("blocks") + _i32(1) + _i32(0) + _bytes(batch)
+        v2 = _i16(1) + _i32(10000) + topics
+        v4 = _string(None) + v2
+        assert _raw_request(broker, API_PRODUCE, 2, v2) == b""
+        assert _raw_request(broker, API_PRODUCE, 4, v4) == b""
+        assert broker.high_watermark("blocks", 0) == 3
+        # the same body at the advertised version is answered
+        assert _raw_request(broker, API_PRODUCE, 3, v4) != b""
+        assert broker.high_watermark("blocks", 0) == 4
+    finally:
+        client.close()
+        broker.close()
+
+
+def test_fetch_past_the_log_end_fails_loud():
+    """A fetch offset past the high watermark answers OFFSET_OUT_OF_RANGE
+    (error 1), and a planned range the log cannot serve fails the read
+    instead of ending it early — else the batch would commit its planned
+    end offset as read."""
+    broker = KafkaWireBroker()
+    client = KafkaWireClient(broker.host, broker.port)
+    try:
+        client.produce("t", 0, [(b"k", b"v", 1000)])
+        assert client.fetch("t", 0, 1) == (1, [])  # at the head: empty
+        with pytest.raises(KafkaWireError, match="fetch error 1 "):
+            client.fetch("t", 0, 9)
+
+        reader = KafkaWireStreamReader(
+            {"bootstrap": f"{broker.host}:{broker.port}", "topic": "t"}
+        )
+        covered = _FetchRange(broker.host, broker.port, "t", 0, 0, 1)
+        assert [r[4] for r in reader.read(covered)] == [0]
+        rows = []
+        short = _FetchRange(broker.host, broker.port, "t", 0, 0, 5)
+        with pytest.raises(KafkaWireError, match="before the planned end 5"):
+            for row in reader.read(short):
+                rows.append(row)
+        assert [r[4] for r in rows] == [0]
+        past = _FetchRange(broker.host, broker.port, "t", 0, 3, 5)
+        with pytest.raises(KafkaWireError, match="fetch error 1 "):
+            list(reader.read(past))
+    finally:
+        client.close()
+        broker.close()
+
+
+def _with_compression(batch: bytes, ctype: int) -> bytes:
+    """``batch`` with its attributes naming compression ``ctype`` (records
+    left as they are) and a CRC32C that matches again."""
+    post = bytearray(batch[21:])  # attributes..end
+    struct.pack_into(">h", post, 0, ctype)
+    return batch[:17] + struct.pack(">I", crc32c(bytes(post))) + bytes(post)
+
+
+@pytest.mark.parametrize(
+    "ctype,name", [(1, "gzip"), (2, "snappy"), (3, "lz4"), (4, "zstd")]
+)
+def test_compressed_batch_fails_loud_without_poisoning_prior_records(
+    ctype, name
+):
+    """A batch whose attributes name a compression type raises
+    ``KafkaWireError`` naming it — an exception, not skipped or misread
+    records, so a streaming microbatch that hits it fails and its offsets
+    are never committed — and the batch before it still decodes."""
+    good = encode_record_batch([(0, 1000, b"k0", b"v0")])
+    bad = _with_compression(encode_record_batch([(1, 1000, b"k", b"v")]), ctype)
+
+    match = rf"compressed \({name}, type {ctype}\)"
+    with pytest.raises(KafkaWireError, match=match):
+        decode_record_batches(bad)
+    with pytest.raises(KafkaWireError, match=match):
+        decode_record_batches(good + bad)
+    assert decode_record_batches(good) == [(0, 1000, b"k0", b"v0")]
+
+    # the broker refuses such a produce whole and appends nothing
+    broker = KafkaWireBroker()
+    client = KafkaWireClient(broker.host, broker.port)
+    try:
+        body = (
+            _string(None) + _i16(1) + _i32(10000) + _i32(1) + _string("t")
+            + _i32(1) + _i32(0) + _bytes(good + bad)
+        )
+        c = client._request(API_PRODUCE, body)
+        c.i32(), c.string(), c.i32(), c.i32()
+        assert c.i16() == ERR_CORRUPT_MESSAGE
+        assert broker.high_watermark("t", 0) == 0
     finally:
         client.close()
         broker.close()
@@ -264,423 +348,34 @@ def test_kafka_wire_throttle_caps_batches(spark):
     assert max(b for b in batches if b) <= 3
 
 
-def test_record_batch_v2_gzip_compression():
-    """Gzip batches (compression type 1): codec round-trip, CRC over the
-    COMPRESSED payload, broker produce/fetch end-to-end, and the declared
-    rejection of library-needing codecs."""
-    from event_stream_spark.sources.kafkawire import encode_record_batch
-
-    records = [
-        (0, 1000, b"k" * 50, b"v" * 500),
-        (1, 2000, None, b"w" * 500),
-    ]
-    blob = encode_record_batch(records, codec="gzip")
-    plain = encode_record_batch(records)
-    assert len(blob) < len(plain)  # it actually compressed
-    assert decode_record_batches(blob) == records
-    # deterministic stream (mtime=0): same input → same bytes
-    assert encode_record_batch(records, codec="gzip") == blob
-
-    bad = bytearray(blob)
-    bad[-3] ^= 0xFF
-    with pytest.raises(KafkaWireError, match="crc32c"):
-        decode_record_batches(bytes(bad))
-
-    # zstd round-trips too: store-mode write, full RFC 8878 read
-    zblob = encode_record_batch(records, codec="zstd")
-    assert decode_record_batches(zblob) == records
-
-    # broker end-to-end: gzip produce, both fetch versions read it whole
-    broker = KafkaWireBroker()
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        assert client.produce(
-            "blocks", 0,
-            [(b"k1", b"v1" * 100, 1000), (None, b"v2" * 100, 2000)],
-            codec="gzip",
-        ) == 0
-        hw, recs = client.fetch("blocks", 0, 0, version=4)
-        assert hw == 2 and [r[2:] for r in recs] == [
-            (b"k1", b"v1" * 100), (None, b"v2" * 100)
-        ]
-        # zstd (store-mode produce, RFC 8878 fetch-side decode) end-to-end
-        assert client.produce(
-            "blocks", 0,
-            [(b"k3", b"v3" * 100, 3000)],
-            codec="zstd",
-        ) == 2
-        hw, recs = client.fetch("blocks", 0, 2, version=4)
-        assert hw == 3 and [r[2:] for r in recs] == [(b"k3", b"v3" * 100)]
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_codec_primitives_spec_vectors():
-    """snappy/LZ4/xxHash-32 against fixed public-spec vectors plus
-    round-trips over adversarial shapes (empty, incompressible, highly
-    repetitive, overlap-copy RLE)."""
-    import random
-
-    from event_stream_spark.sources.kafkacodecs import (
-        CodecError,
-        lz4_block_compress,
-        lz4_block_decompress,
-        lz4_frame_compress,
-        lz4_frame_decompress,
-        snappy_compress,
-        snappy_decompress,
-        xerial_frame,
-        xerial_unframe,
-        xxh32,
-    )
-
-    # xxHash-32 published vectors (Cyan4973/xxHash README)
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"a") == 0x550D7456
-    assert xxh32(b"abc") == 0x32D153FF
-    assert xxh32(b"abc", seed=1) != xxh32(b"abc")
-
-    # snappy fixed encodings from format_description.txt rules
-    assert snappy_compress(b"") == b"\x00"  # uvarint 0, no elements
-    assert snappy_decompress(b"\x03\x08abc") == b"abc"  # literal len 3
-    # copy-1 element: 8x 'a' = literal 'a' + copy-1(offset 1, len 7):
-    # tag = ((7-4)<<2)|0b01 = 0x0d, offset low byte 0x01
-    assert snappy_decompress(b"\x08\x00a\x0d\x01") == b"a" * 8
-    # copy-2 element: tag = ((4-1)<<2)|0b10 = 0x0e, offset LE16 = 1
-    assert snappy_decompress(b"\x05\x00a\x0e\x01\x00") == b"a" * 5
-
-    # LZ4 fixed decode: token 0x50 = 5 literals, last sequence
-    assert lz4_block_decompress(b"\x50hello") == b"hello"
-    # RLE via overlap copy: 1 literal + match(offset 1) repeating it
-    rle = lz4_block_compress(b"z" * 300)
-    assert len(rle) < 20 and lz4_block_decompress(rle) == b"z" * 300
-
-    random.seed(11)
-    cases = [
-        b"", b"x", b"abcabcabcabc",
-        bytes(random.randrange(256) for _ in range(5000)),  # incompressible
-        b"the quick brown fox " * 400,
-        bytes(random.randrange(3) for _ in range(70000)),   # > one lz4 frame block
-    ]
-    for blob in cases:
-        assert snappy_decompress(snappy_compress(blob)) == blob
-        assert xerial_unframe(xerial_frame(blob)) == blob
-        assert lz4_block_decompress(lz4_block_compress(blob)) == blob
-        assert lz4_frame_decompress(lz4_frame_compress(blob)) == blob
-    # compressible inputs actually shrink
-    assert len(snappy_compress(cases[4])) < len(cases[4]) // 4
-    assert len(lz4_frame_compress(cases[4])) < len(cases[4]) // 4
-
-    # corrupt frame header checksum is rejected
-    frame = bytearray(lz4_frame_compress(b"payload"))
-    frame[6] ^= 0xFF
-    with pytest.raises(CodecError):
-        lz4_frame_decompress(bytes(frame))
-
-
-def test_lz4_frame_accepts_kafka_legacy_header_checksum():
-    """Kafka message-format-v0 hashed the frame MAGIC into the header
-    checksum (KAFKA-3160); the reader accepts that variant so a
-    mixed-version broker replay does not hard-fail."""
-    import struct as _struct
-
-    from event_stream_spark.sources.kafkacodecs import (
-        lz4_frame_compress,
-        lz4_frame_decompress,
-        xxh32,
-    )
-
-    frame = bytearray(lz4_frame_compress(b"legacy-framed payload " * 20))
-    # rewrite HC the broken way: xxh32 over magic+FLG+BD
-    frame[6] = (xxh32(bytes(frame[0:6])) >> 8) & 0xFF
-    assert lz4_frame_decompress(bytes(frame)) == b"legacy-framed payload " * 20
-    # sanity: the two checksums genuinely differ for this header
-    assert frame[6] != (xxh32(bytes(frame[4:6])) >> 8) & 0xFF
-
-
-def test_compressed_v1_message_sets_roundtrip():
-    """v1 compressed wrapper form for every codec: ONE wrapper message
-    whose value is the compressed inner set, inner offsets relative,
-    wrapper offset = last absolute offset (the magic-1 contract)."""
-    import struct as _struct
-
-    from event_stream_spark.sources.kafkawire import (
-        decode_message_set,
-        encode_message_set,
-    )
-
-    records = [
-        (100, 1000, b"k0", b"v0" * 40),
-        (101, 2000, None, b"v1" * 40),
-        (102, 3000, b"k2", None),
-    ]
-    for codec in ("gzip", "snappy", "lz4"):
-        blob = encode_message_set(records, codec=codec)
-        # exactly one top-level wrapper message, carrying the LAST offset
-        assert _struct.unpack_from(">q", blob, 0)[0] == 102
-        wrapper_size = _struct.unpack_from(">i", blob, 8)[0]
-        assert 12 + wrapper_size == len(blob)
-        assert decode_message_set(blob) == records
-    # plain form unchanged
-    assert decode_message_set(encode_message_set(records)) == records
-
-
-def test_compressed_fetch_end_to_end_all_codecs():
-    """Snappy and lz4 RecordBatch v2 produce→broker→fetch over the real
-    socket, plus a broker configured to SERVE compressed fetch responses
-    in both framings (v4 RecordBatch and v1 compressed message set) —
-    the consumed-end-to-end proof for every supported codec."""
-    payload = [(b"key-%d" % i, b"block-payload-%d" % i * 20, 1000 + i)
-               for i in range(25)]
-    expect = [(r[0], r[1]) for r in payload]
-
-    for codec in ("snappy", "lz4"):
-        broker = KafkaWireBroker()
-        client = KafkaWireClient(broker.host, broker.port)
-        try:
-            assert client.produce("blocks", 0, payload, codec=codec) == 0
-            hw, recs = client.fetch("blocks", 0, 0, version=4)
-            assert hw == 25 and [r[2:] for r in recs] == expect
-        finally:
-            client.close()
-            broker.close()
-
-    # compressed v1 produce (wrapper form) through the broker
-    for codec in ("gzip", "snappy", "lz4"):
-        broker = KafkaWireBroker()
-        client = KafkaWireClient(broker.host, broker.port)
-        try:
-            assert client.produce(
-                "blocks", 0, payload, version=2, codec=codec
-            ) == 0
-            hw, recs = client.fetch("blocks", 0, 0, version=2)
-            assert hw == 25 and [r[2:] for r in recs] == expect
-        finally:
-            client.close()
-            broker.close()
-
-    # broker-side compression: fetch responses arrive compressed and the
-    # client decompresses transparently in both framings
-    for codec in ("snappy", "lz4", "gzip"):
-        broker = KafkaWireBroker(fetch_codec=codec)
-        client = KafkaWireClient(broker.host, broker.port)
-        try:
-            client.produce("blocks", 0, payload)
-            for version in (4, 2):
-                hw, recs = client.fetch("blocks", 0, 0, version=version)
-                assert hw == 25 and [r[2:] for r in recs] == expect, (
-                    codec, version,
-                )
-        finally:
-            client.close()
-            broker.close()
-
-
-def test_zstd_batch_fails_loud_without_poisoning_prior_records():
-    """A zstd batch (compression type 4) whose payload is GARBAGE must
-    (a) fail with a zstd-specific error, (b) surface as an exception
-    rather than silently skipped records — so a streaming microbatch
-    that hits it FAILS and its offsets are never committed (the
-    checkpoint ledger stays at the pre-batch offset, the at-least-once
-    ack model), and (c) batches BEFORE the bad one remain independently
-    fetchable.  (Valid zstd payloads decode — see the round-trip and
-    real-encoder tests; this pins the corruption contract.)"""
-    import struct as _struct
-
-    from event_stream_spark.sources.kafkawire import (
-        KafkaWireError,
-        crc32c,
-        decode_record_batches,
-        encode_record_batch,
-    )
-
-    good = encode_record_batch([(0, 1000, b"k0", b"v0")])
-
-    # hand-craft a RecordBatch v2 whose attrs say compression type 4
-    # (zstd) — same layout as encode_record_batch, bogus payload (the
-    # decoder must refuse at the codec check, before touching bytes)
-    body = bytearray(b"\x00")      # record attributes
-    body += b"\x00"                # ts delta varint 0
-    body += b"\x00"                # offset delta varint 0
-    body += b"\x02k"               # key len 1
-    body += b"\x02v"               # value len 1
-    body += b"\x00"                # headers
-    recs = bytes([len(body) * 2 // 2]) + bytes(body)  # varint len + body
-    post_crc = (
-        _struct.pack(">h", 4)          # attrs: compression type 4 = zstd
-        + _struct.pack(">i", 0)        # lastOffsetDelta
-        + _struct.pack(">q", 1000) + _struct.pack(">q", 1000)
-        + _struct.pack(">q", -1) + _struct.pack(">h", -1)
-        + _struct.pack(">i", -1)
-        + _struct.pack(">i", 1) + recs
-    )
-    zstd_batch = (
-        _struct.pack(">q", 1) + _struct.pack(">i", 9 + len(post_crc))
-        + _struct.pack(">i", -1) + b"\x02"
-        + _struct.pack(">I", crc32c(post_crc)) + post_crc
-    )
-
-    # (a)+(b): loud, zstd-specific, exception — not a silent skip
-    from event_stream_spark.sources.zstdcodec import ZstdError
-
-    with pytest.raises(ZstdError, match="magic"):
-        decode_record_batches(zstd_batch)
-    with pytest.raises(ZstdError, match="magic"):
-        decode_record_batches(good + zstd_batch)
-
-    # (c): the prior batch alone still decodes — a consumer that resumes
-    # from its unpoisoned checkpoint re-reads it identically
-    assert [r[2:] for r in decode_record_batches(good)] == [(b"k0", b"v0")]
-
-
-def test_idempotent_produce_broker_dup_reject():
-    """KIP-98 sequence checks on the broker: a replayed Produce with the
-    same (pid, epoch, base_seq) acks the ORIGINAL base offset without
-    re-appending; sequence gaps, stale sequences, stale epochs, and a
-    fresh producer not starting at 0 all error loudly."""
-    import pytest as _pytest
-
-    from event_stream_spark.sources.kafkawire import (
-        KafkaWireBroker,
-        KafkaWireClient,
-        KafkaWireError,
-    )
-
-    broker = KafkaWireBroker(num_partitions=2)
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        pid, epoch = client.init_producer_id()
-        pid2, _ = client.init_producer_id()
-        assert pid2 == pid + 1  # monotone assignment
-
-        recs = [(b"k%d" % i, b"v%d" % i, 1000 + i) for i in range(3)]
-        assert client.produce("t", 0, recs, producer=(pid, epoch, 0)) == 0
-        assert broker.high_watermark("t", 0) == 3
-
-        # the retried batch: same identity -> original offset, no append
-        assert client.produce("t", 0, recs, producer=(pid, epoch, 0)) == 0
-        assert broker.high_watermark("t", 0) == 3
-
-        # next in sequence appends
-        nxt = [(b"k3", b"v3", 1003)]
-        assert client.produce("t", 0, nxt, producer=(pid, epoch, 3)) == 3
-        assert broker.high_watermark("t", 0) == 4
-        # ... and ITS replay is also a no-op
-        assert client.produce("t", 0, nxt, producer=(pid, epoch, 3)) == 3
-        assert broker.high_watermark("t", 0) == 4
-
-        # a gap (skipped sequence) is out-of-order
-        with _pytest.raises(KafkaWireError, match="45"):
-            client.produce("t", 0, nxt, producer=(pid, epoch, 9))
-        # a sequence older than the last batch is a (non-cached) duplicate
-        with _pytest.raises(KafkaWireError, match="46"):
-            client.produce("t", 0, nxt, producer=(pid, epoch, 1))
-        # a stale epoch is fenced
-        with _pytest.raises(KafkaWireError, match="47"):
-            client.produce("t", 0, nxt, producer=(pid, epoch - 1, 4))
-        # a NEW producer id must start its sequence at 0
-        with _pytest.raises(KafkaWireError, match="45"):
-            client.produce("t", 0, nxt, producer=(pid2, 0, 7))
-        # sequences are PER PARTITION: partition 1 starts fresh
-        assert client.produce("t", 1, recs, producer=(pid, epoch, 0)) == 0
-        # non-idempotent producers (pid -1) remain unchecked
-        assert client.produce("t", 0, nxt) == 4
-        assert broker.high_watermark("t", 0) == 5
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_idempotent_producer_retries_lost_response_without_dup():
-    """The producer wrapper: a transport failure AFTER the broker applied
-    the batch (response lost) triggers a retry of the same sequence —
-    the broker recognizes the replay, the log gains exactly one copy,
-    and the producer's sequence advances normally for later batches."""
-    from event_stream_spark.sources.kafkawire import (
-        IdempotentProducer,
-        KafkaConnectionError,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-
-    broker = KafkaWireBroker()
-    client = KafkaWireClient(broker.host, broker.port)
-    real_request = client._request
-    drops = {"n": 0}
-
-    def lossy_request(api_key, api_version, body):
-        c = real_request(api_key, api_version, body)
-        from event_stream_spark.sources.kafkawire import API_PRODUCE
-
-        if api_key == API_PRODUCE and drops["n"] == 0:
-            drops["n"] = 1  # the broker HAS applied it; the ack is lost
-            raise KafkaConnectionError("simulated lost response")
-        return c
-
-    client._request = lossy_request
-    try:
-        prod = IdempotentProducer(client, "blocks")
-        recs = [(b"k%d" % i, b"v%d" % i, 1000 + i) for i in range(5)]
-        assert prod.send(0, recs) == 0
-        assert drops["n"] == 1  # the failure really fired
-        assert broker.high_watermark("blocks", 0) == 5  # exactly once
-        assert prod.send(0, [(b"k5", b"v5", 1005)]) == 5
-        assert broker.high_watermark("blocks", 0) == 6
-        # full payload intact and unduplicated
-        _, fetched = KafkaWireClient(broker.host, broker.port).fetch(
-            "blocks", 0, 0
-        )
-        assert [r[2] for r in fetched] == [b"k%d" % i for i in range(6)]
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_idempotent_produce_composes_with_splay_ack_round_trip(
-    spark, tmp_path
-):
-    """End-to-end composition: blocks produced through the idempotent
-    producer (with an injected lost-response retry) → kafkawire Spark
-    source → kafka-fed splay sink — the file-per-height output contains
-    exactly one file per height, no duplicates from the retry."""
-    import json
-    import os
-
+def test_kafka_wire_restart_resumes_at_checkpoint(spark, tmp_path):
+    """K6 through the offset log: an ``availableNow`` run over
+    ``format("kafkawire")`` into the Kafka-fed splay sink, then a second
+    run on the same checkpoint after the topic grew.  Each run sees only
+    its new records, and the splay directory ends with exactly one file
+    per height."""
     from event_stream_spark.sinks.splay import write_kafka_fed_splay_batch
     from event_stream_spark.sources import kafkawire
-    from event_stream_spark.sources.kafkawire import (
-        API_PRODUCE,
-        IdempotentProducer,
-        KafkaConnectionError,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
 
     kafkawire.register(spark)
     broker = KafkaWireBroker()
     client = KafkaWireClient(broker.host, broker.port)
-    real_request = client._request
-    drops = {"n": 0}
+    out = str(tmp_path / "splay")
 
-    def lossy_request(api_key, api_version, body):
-        c = real_request(api_key, api_version, body)
-        if api_key == API_PRODUCE and drops["n"] == 0:
-            drops["n"] = 1
-            raise KafkaConnectionError("simulated lost response")
-        return c
+    def produce(lo: int, hi: int) -> None:
+        client.produce("blocks", 0, [
+            (f"chain-1.{h}".encode(), _stream_block(h), 1650000000000 + h)
+            for h in range(lo, hi)
+        ])
 
-    client._request = lossy_request
-    try:
-        prod = IdempotentProducer(client, "blocks")
-        for h in range(100, 110):
-            key = f"chain-1.{h}".encode()
-            val = json.dumps(
-                {"height": h, "block": None, "historical": True}
-            ).encode()
-            prod.send(0, [(key, val, 1000 + h)])
-        assert drops["n"] == 1
-        assert broker.high_watermark("blocks", 0) == 10  # retry absorbed
+    def run() -> list[int]:
+        seen: list[int] = []
+
+        def batch(b, _id):
+            seen.extend(
+                int(bytes(r.key).split(b".")[1]) for r in b.select("key").collect()
+            )
+            write_kafka_fed_splay_batch(b, out)
 
         stream = (
             spark.readStream.format("kafkawire")
@@ -688,847 +383,23 @@ def test_idempotent_produce_composes_with_splay_ack_round_trip(
             .option("topic", "blocks")
             .load()
         )
-        out = str(tmp_path / "splay")
         q = (
-            stream.writeStream.foreachBatch(
-                lambda b, _i: write_kafka_fed_splay_batch(b, out)
-            )
+            stream.writeStream.foreachBatch(batch)
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        files = sorted(os.listdir(out))
-        assert len(files) == 10  # one file per height, exactly once
+        assert q.awaitTermination(120), "availableNow run did not finish"
+        assert q.exception() is None
+        return sorted(seen)
+
+    try:
+        produce(1, 11)
+        assert run() == list(range(1, 11))
+        produce(11, 15)
+        assert run() == list(range(11, 15))  # resumed at the checkpoint
     finally:
         client.close()
         broker.close()
-
-
-def test_transactional_produce_atomic_visibility_and_abort():
-    """KIP-98 transactions on the wire: records produced inside a
-    transaction are invisible to read_committed fetches (capped at the
-    last stable offset) until EndTxn commits; an aborted transaction's
-    records NEVER become visible to read_committed but remain readable
-    under read_uncommitted (Kafka's exact consumer contract); control
-    markers occupy real offsets but are never served as data; an
-    unregistered transactional produce and a stale-epoch EndTxn fail
-    loudly."""
-    import pytest as _pytest
-
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        KafkaWireBroker,
-        KafkaWireClient,
-        KafkaWireError,
-        TransactionalProducer,
-    )
-
-    broker = KafkaWireBroker()
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        prod = TransactionalProducer(client, "t", "txn-app-1")
-        recs = [(b"k%d" % i, b"v%d" % i, 1000 + i) for i in range(3)]
-        assert prod.send(0, recs) == 0
-
-        # in flight: uncommitted view sees the rows, committed view none
-        _, unc = client.fetch("t", 0, 0)
-        assert [r[2] for r in unc] == [b"k0", b"k1", b"k2"]
-        _, com = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert com == []
-        assert client.list_offsets("t", 0, isolation=READ_COMMITTED) == 0
-
-        prod.commit()
-        _, com = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert [r[2] for r in com] == [b"k0", b"k1", b"k2"]
-        # the COMMIT marker occupies offset 3: hw=4, but it is not data
-        assert broker.high_watermark("t", 0) == 4
-        assert len(com) == 3
-        assert client.list_offsets("t", 0, isolation=READ_COMMITTED) == 4
-
-        # second txn, aborted: rows never reach read_committed
-        assert prod.send(0, [(b"bad", b"x", 2000)]) == 4
-        prod.abort()
-        _, com = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert [r[2] for r in com] == [b"k0", b"k1", b"k2"]
-        _, unc = client.fetch("t", 0, 0)
-        assert [r[2] for r in unc] == [b"k0", b"k1", b"k2", b"bad"]
-
-        # a third, committed txn lands normally after the abort
-        assert prod.send(0, [(b"k3", b"v3", 3000)]) == 6
-        prod.commit()
-        _, com = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert [r[2] for r in com] == [b"k0", b"k1", b"k2", b"k3"]
-
-        # transactional batch without AddPartitionsToTxn → INVALID_TXN_STATE
-        # (correct next sequence, so the failure isolates the txn check —
-        # EndTxn cleared the registration, making the partition foreign)
-        with _pytest.raises(KafkaWireError, match="48"):
-            client.produce(
-                "t", 0, [(b"x", b"y", 1)],
-                producer=(prod.pid, prod.epoch, prod._seq.get(("t", 0), 0)),
-                transactional_id="txn-app-1",
-            )
-        # stale epoch EndTxn → fenced
-        with _pytest.raises(KafkaWireError, match="47"):
-            client.end_txn("txn-app-1", prod.pid, prod.epoch - 1, commit=True)
-        # unknown transactional id → invalid state
-        with _pytest.raises(KafkaWireError, match="48"):
-            client.end_txn("nope", prod.pid, prod.epoch, commit=True)
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_transactional_crash_between_produce_and_endtxn_fenced():
-    """The crash-recovery contract: a producer that dies between produce
-    and EndTxn leaves an OPEN transaction — read_committed consumers are
-    blocked at the LSO, never served the orphan rows; re-initializing the
-    same transactional.id bumps the epoch, ABORTS the orphan transaction
-    (its rows stay invisible forever), and fences the dead incarnation's
-    further produces and EndTxn."""
-    import pytest as _pytest
-
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        KafkaWireBroker,
-        KafkaWireClient,
-        KafkaWireError,
-        TransactionalProducer,
-    )
-
-    broker = KafkaWireBroker()
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        dead = TransactionalProducer(client, "t", "app")
-        dead.send(0, [(b"orphan", b"x", 1000)])
-        # crash here: no EndTxn.  committed consumers see nothing
-        _, com = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert com == []
-        assert client.list_offsets("t", 0, isolation=READ_COMMITTED) == 0
-
-        # recovery: same transactional.id re-initializes
-        revived = TransactionalProducer(client, "t", "app")
-        assert revived.pid == dead.pid and revived.epoch == dead.epoch + 1
-        # the orphan txn was aborted on re-init: LSO advanced past it
-        assert client.list_offsets("t", 0, isolation=READ_COMMITTED) == 2
-        _, com = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert com == []
-
-        # the new incarnation produces and commits normally
-        revived.send(0, [(b"good", b"y", 2000)])
-        revived.commit()
-        _, com = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert [r[2] for r in com] == [b"good"]
-
-        # the dead incarnation is fenced everywhere
-        with _pytest.raises(KafkaWireError, match="47"):
-            client.add_partitions_to_txn("app", dead.pid, dead.epoch, "t", [0])
-        with _pytest.raises(KafkaWireError, match="47"):
-            client.end_txn("app", dead.pid, dead.epoch, commit=True)
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_transactional_produce_composes_with_splay_read_committed(
-    spark, tmp_path
-):
-    """End-to-end KIP-98 exactly-once: blocks produced in transactions —
-    one committed, one 'crashed' before EndTxn (aborted on recovery) —
-    through the kafkawire Spark source in read_committed isolation into
-    the kafka-fed splay sink.  The sink receives exactly the committed
-    heights: the orphan transaction's records never reach a file."""
-    import json
-    import os
-
-    from event_stream_spark.sinks.splay import write_kafka_fed_splay_batch
-    from event_stream_spark.sources import kafkawire
-    from event_stream_spark.sources.kafkawire import (
-        KafkaWireBroker,
-        KafkaWireClient,
-        TransactionalProducer,
-    )
-
-    kafkawire.register(spark)
-    broker = KafkaWireBroker()
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        def block(h):
-            key = f"chain-1.{h}".encode()
-            val = json.dumps(
-                {"height": h, "block": None, "historical": True}
-            ).encode()
-            return (key, val, 1000 + h)
-
-        prod = TransactionalProducer(client, "blocks", "splay-writer")
-        prod.send(0, [block(h) for h in range(100, 105)])
-        prod.commit()
-        # second batch: crash between produce and EndTxn
-        prod.send(0, [block(h) for h in range(105, 110)])
-        # recovery aborts the in-flight txn
-        TransactionalProducer(client, "blocks", "splay-writer")
-
-        stream = (
-            spark.readStream.format("kafkawire")
-            .option("bootstrap", f"{broker.host}:{broker.port}")
-            .option("topic", "blocks")
-            .option("isolation", "read_committed")
-            .load()
-        )
-        out = str(tmp_path / "splay")
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda b, _i: write_kafka_fed_splay_batch(b, out)
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        heights = set()
-        for root, _dirs, names in os.walk(out):
-            for name in names:
-                with open(os.path.join(root, name)) as fh:
-                    heights.add(json.load(fh)["height"])
-        # exactly the committed transaction's heights: the crashed txn's
-        # records (105-109) never reached a file
-        assert heights == set(range(100, 105))
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_txn_sink_atomic_per_task_visibility(spark):
-    """Distributed transactional sink (write_kafka_wire_txn_batch): a run
-    that dies between produce and EndTxn leaves read_committed consumers
-    seeing NOTHING; the recovery run (same per-partition transactional
-    ids) fences and aborts the orphans, and consumers end with exactly
-    one copy of every record — no partials, no duplicates."""
-    import pytest as _pytest
-
-    from event_stream_spark.sinks.kafka import write_kafka_wire_txn_batch
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-
-    broker = KafkaWireBroker(num_partitions=2)
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        df = spark.range(40).selectExpr(
-            "CAST(CAST(id AS STRING) AS BINARY) AS key",
-            "CAST(CAST(id * 2 AS STRING) AS BINARY) AS value",
-        ).repartition(2)
-
-        # attempt 1 crashes after produce, before EndTxn
-        with _pytest.raises(Exception, match="injected crash"):
-            write_kafka_wire_txn_batch(
-                df, broker.host, broker.port, "t",
-                txn_prefix="sink", _crash_before_commit=True,
-            )
-        committed = []
-        for p in range(2):
-            _, recs = client.fetch("t", p, 0, isolation=READ_COMMITTED)
-            committed += recs
-        assert committed == []  # the crashed run is invisible
-
-        # recovery: same txn ids fence + abort the orphans, then commit
-        write_kafka_wire_txn_batch(
-            df, broker.host, broker.port, "t", txn_prefix="sink"
-        )
-        keys = []
-        for p in range(2):
-            _, recs = client.fetch("t", p, 0, isolation=READ_COMMITTED)
-            keys += [int(r[2]) for r in recs]
-        assert sorted(keys) == list(range(40))  # exactly once, no partials
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_txn_zombie_epoch_cannot_produce_into_retry_txn():
-    """ADVICE r10 (high): a fenced zombie producer (stale epoch) must not
-    append into the retry's open transaction on a partition the retry
-    registered but has not yet produced to — the broker must validate the
-    batch epoch against COORDINATOR state, not only per-partition
-    producer state, else the retry's EndTxn commits the zombie's rows."""
-    import pytest as _pytest
-
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        KafkaWireBroker,
-        KafkaWireClient,
-        TransactionalProducer,
-    )
-
-    broker = KafkaWireBroker()
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        zombie = TransactionalProducer(client, "t", "task-1")  # epoch 0
-        # overlapping attempt (speculative execution): same txn id —
-        # InitProducerId bumps the epoch and fences the zombie
-        retry = TransactionalProducer(client, "t", "task-1")   # epoch 1
-        assert retry.pid == zombie.pid and retry.epoch == zombie.epoch + 1
-        # retry registers partition 0 but has NOT produced to it yet —
-        # exactly the window the advisory reproduced
-        client.add_partitions_to_txn(
-            "task-1", retry.pid, retry.epoch, "t", [0]
-        )
-        with _pytest.raises(KafkaWireError, match="47"):
-            client.produce(
-                "t", 0, [(b"Z", b"ZOMBIE", 0)],
-                producer=(zombie.pid, zombie.epoch, 0),
-                transactional_id="task-1",
-            )
-        retry._in_txn.add(("t", 0))  # already registered above
-        retry.send(0, [(b"k", b"b0", 0)])
-        retry.commit()
-        _, recs = client.fetch("t", 0, 0, isolation=READ_COMMITTED)
-        assert [r[3] for r in recs] == [b"b0"]  # no zombie rows committed
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_txn_sink_post_commit_retry_is_deduplicated(spark):
-    """ADVICE r10 (medium): a task that dies AFTER its EndTxn succeeded
-    broker-side is retried by Spark; with ``batch_id`` the retry finds
-    the committed attempt marker (written atomically with the data) and
-    produces nothing — exactly-once across both crash windows.  A new
-    batch_id under the same transactional ids still appends normally."""
-    import pytest as _pytest
-
-    from event_stream_spark.sinks.kafka import write_kafka_wire_txn_batch
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-
-    broker = KafkaWireBroker(num_partitions=2)
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        df = spark.range(20).selectExpr(
-            "CAST(CAST(id AS STRING) AS BINARY) AS key",
-            "CAST(CAST(id AS STRING) AS BINARY) AS value",
-        ).repartition(2)
-
-        # attempt 1 commits broker-side, then dies before reporting
-        with _pytest.raises(Exception, match="after EndTxn"):
-            write_kafka_wire_txn_batch(
-                df, broker.host, broker.port, "t", txn_prefix="s",
-                batch_id="b0", _crash_after_commit=True,
-            )
-        # the retry of the SAME batch: marker scan skips the re-produce
-        write_kafka_wire_txn_batch(
-            df, broker.host, broker.port, "t", txn_prefix="s",
-            batch_id="b0",
-        )
-        keys = []
-        for p in range(2):
-            _, recs = client.fetch("t", p, 0, isolation=READ_COMMITTED)
-            keys += [int(r[2]) for r in recs]
-        assert sorted(keys) == list(range(20))  # once, not twice
-
-        # a different batch under the same txn ids is NOT suppressed
-        write_kafka_wire_txn_batch(
-            df, broker.host, broker.port, "t", txn_prefix="s",
-            batch_id="b1",
-        )
-        keys = []
-        for p in range(2):
-            _, recs = client.fetch("t", p, 0, isolation=READ_COMMITTED)
-            keys += [int(r[2]) for r in recs]
-        assert sorted(keys) == sorted(list(range(20)) * 2)
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_txn_sink_marker_scan_not_fooled_by_foreign_open_txn(spark):
-    """ADVICE r11 (medium): the attempt-marker partition is shared across
-    tasks, so ANOTHER task's still-open transaction can hold the LSO
-    below a committed marker; an empty read_committed fetch there must
-    not be read as "no prior commit".  The scan has to wait until the
-    open txn resolves (fence/abort/commit) and then find the marker —
-    re-producing would duplicate under read_committed."""
-    import threading
-    import time
-
-    import pytest as _pytest
-
-    from event_stream_spark.sinks.kafka import write_kafka_wire_txn_batch
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        KafkaWireBroker,
-        KafkaWireClient,
-        TransactionalProducer,
-    )
-
-    broker = KafkaWireBroker(num_partitions=1)
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        df = spark.range(10).selectExpr(
-            "CAST(CAST(id AS STRING) AS BINARY) AS key",
-            "CAST(CAST(id AS STRING) AS BINARY) AS value",
-        ).coalesce(1)
-
-        # a FOREIGN producer opens a txn on the marker partition and
-        # leaves it open: its record sits at offset 0, pinning LSO=0
-        blocker_client = KafkaWireClient(broker.host, broker.port)
-        blocker = TransactionalProducer(
-            blocker_client, "t.__attempts", "foreign-task"
-        )
-        blocker.send_to("t.__attempts", 0, [(b"foreign", b"open", 0)])
-
-        # the sink commits batch b0 (data + marker) but dies post-commit;
-        # its marker lands ABOVE the blocker's open record
-        with _pytest.raises(Exception, match="after EndTxn"):
-            write_kafka_wire_txn_batch(
-                df, broker.host, broker.port, "t", txn_prefix="s",
-                batch_id="b0", _crash_after_commit=True,
-            )
-
-        # sanity: read_committed sees an EMPTY marker log right now
-        _, recs = client.fetch(
-            "t.__attempts", 0, 0, isolation=READ_COMMITTED
-        )
-        assert recs == []
-
-        # resolve the blocker shortly after the retry starts scanning
-        def _resolve():
-            time.sleep(0.4)
-            blocker.abort()
-
-        t = threading.Thread(target=_resolve)
-        t.start()
-        # the retry must WAIT at the LSO, then find the marker and
-        # produce nothing — exactly once despite the masked window
-        write_kafka_wire_txn_batch(
-            df, broker.host, broker.port, "t", txn_prefix="s",
-            batch_id="b0",
-        )
-        t.join()
-        keys = [
-            int(r[2])
-            for r in client.fetch("t", 0, 0, isolation=READ_COMMITTED)[1]
-        ]
-        assert sorted(keys) == list(range(10))  # once, not twice
-
-        # a foreign open txn masking a record that CARRIES OUR MARKER KEY
-        # and never resolves: the scan cannot learn the marker's fate, so
-        # it must FAIL LOUDLY after marker_wait_s, never assume no prior
-        # commit (that assumption is the duplicate window)
-        blocker2 = TransactionalProducer(
-            blocker_client, "t.__attempts", "foreign-task-2"
-        )
-        blocker2.send_to("t.__attempts", 0, [(b"s-p0", b"b1", 0)])
-        with _pytest.raises(Exception, match="refusing to assume"):
-            write_kafka_wire_txn_batch(
-                df, broker.host, broker.port, "t", txn_prefix="s",
-                batch_id="b1", marker_wait_s=0.3,
-            )
-        blocker2.abort()
-        # once the open txn resolves as ABORTED, the masked record is
-        # dead and the retry of b1 produces normally (no suppression)
-        write_kafka_wire_txn_batch(
-            df, broker.host, broker.port, "t", txn_prefix="s",
-            batch_id="b1",
-        )
-        keys = [
-            int(r[2])
-            for r in client.fetch("t", 0, 0, isolation=READ_COMMITTED)[1]
-        ]
-        assert sorted(keys) == sorted(list(range(10)) * 2)
-        blocker_client.close()
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_group_offsets_round_trip_across_reconnect():
-    """VERDICT r10 #4: FindCoordinator + OffsetCommit/OffsetFetch on the
-    wire — committed group offsets survive the client reconnecting, the
-    unknown-group fetch returns -1, and a coordinated commit from a
-    member the coordinator never saw is refused (r11: UNKNOWN_MEMBER_ID
-    — the group now HAS a rebalance protocol, so the old blanket
-    ILLEGAL_GENERATION refusal became the real membership check)."""
-    import pytest as _pytest
-
-    from event_stream_spark.sources.kafkawire import (
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-
-    broker = KafkaWireBroker(num_partitions=2)
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        node, host, port = client.find_coordinator("g1")
-        assert (host, port) == (broker.host, broker.port)
-        assert client.offset_fetch("g1", [("t", 0), ("t", 1)]) == {
-            ("t", 0): -1, ("t", 1): -1,
-        }
-        client.offset_commit("g1", {("t", 0): 7, ("t", 1): 3})
-        client.close()
-
-        fresh = KafkaWireClient(broker.host, broker.port)
-        try:
-            assert fresh.offset_fetch("g1", [("t", 0), ("t", 1)]) == {
-                ("t", 0): 7, ("t", 1): 3,
-            }
-            # groups are isolated ledgers
-            assert fresh.offset_fetch("g2", [("t", 0)]) == {("t", 0): -1}
-            # re-commit moves the offset (the ack ratchet)
-            fresh.offset_commit("g1", {("t", 0): 9})
-            assert fresh.offset_fetch("g1", [("t", 0)])[("t", 0)] == 9
-        finally:
-            fresh.close()
-
-        # a coordinated commit from an unknown member is refused, never
-        # silently recorded (stale generations of REAL members get 22 —
-        # pinned in test_group_rebalance_protocol_lifecycle)
-        from event_stream_spark.sources.kafkawire import (
-            API_OFFSET_COMMIT,
-            KafkaWireError,
-            _i32,
-            _i64,
-            _string,
-        )
-
-        c2 = KafkaWireClient(broker.host, broker.port)
-        try:
-            body = (
-                _string("g1") + _i32(5) + _string("member-1") + _i64(-1)
-                + _i32(1) + _string("t") + _i32(1)
-                + _i32(0) + _i64(11) + _string(None)
-            )
-            cur = c2._request(API_OFFSET_COMMIT, 2, body)
-            cur.i32()  # topic count
-            cur.string()
-            cur.i32()  # partition count
-            cur.i32()  # partition id
-            assert cur.i16() == 25  # UNKNOWN_MEMBER_ID
-            assert c2.offset_fetch("g1", [("t", 0)])[("t", 0)] == 9
-        finally:
-            c2.close()
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_group_consumer_resume_equals_checkpoint_resume(spark, tmp_path):
-    """VERDICT r10 #4 (done-condition): the K6 ack contract spoken by an
-    EXTERNAL consumer of our broker — per-record ack = group offset
-    commit — resumes from the committed offset exactly like the Spark
-    source resumes from its checkpoint, on the SAME transactional feed
-    in read_committed (aborted rows invisible to both)."""
-    import json
-
-    from event_stream_spark.sources import kafkawire
-    from event_stream_spark.sources.kafkawire import (
-        READ_COMMITTED,
-        GroupConsumer,
-        KafkaWireBroker,
-        KafkaWireClient,
-        TransactionalProducer,
-    )
-
-    kafkawire.register(spark)
-    broker = KafkaWireBroker()
-    client = KafkaWireClient(broker.host, broker.port)
-    try:
-        prod = TransactionalProducer(client, "t", "feed")
-
-        def send(lo, hi):
-            prod.send(0, [
-                (b"k%d" % i, b"v%d" % i, 1000 + i) for i in range(lo, hi)
-            ])
-
-        send(0, 5)
-        prod.commit()
-        send(100, 103)
-        prod.abort()  # these three must be invisible to BOTH consumers
-        send(5, 10)
-        prod.commit()
-
-        def spark_increment():
-            stream = (
-                spark.readStream.format("kafkawire")
-                .option("bootstrap", f"{broker.host}:{broker.port}")
-                .option("topic", "t")
-                .option("isolation", "read_committed")
-                .load()
-            )
-            out: list = []
-            q = (
-                stream.writeStream.foreachBatch(
-                    lambda b, _i: out.extend(
-                        (bytes(r.key), bytes(r.value))
-                        for r in b.collect()
-                    )
-                )
-                .option("checkpointLocation", str(tmp_path / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return sorted(out)
-
-        def group_drain():
-            # fresh client+consumer each call = a restarted process
-            c = KafkaWireClient(broker.host, broker.port)
-            try:
-                gc = GroupConsumer(
-                    c, "ack-group", "t", 0, isolation=READ_COMMITTED
-                )
-                got = []
-                while True:
-                    recs = gc.poll()
-                    if not recs:
-                        return sorted(got)
-                    for off, _ts, k, v in recs:
-                        got.append((k, v))
-                        gc.ack(off)  # the per-record K6 ack
-            finally:
-                c.close()
-
-        want1 = sorted((b"k%d" % i, b"v%d" % i) for i in range(10))
-        assert spark_increment() == want1
-        assert group_drain() == want1
-
-        # feed grows; both resume — checkpoint vs committed offsets —
-        # and each sees exactly the new committed rows, once
-        send(10, 14)
-        prod.commit()
-        want2 = sorted((b"k%d" % i, b"v%d" % i) for i in range(10, 14))
-        assert spark_increment() == want2
-        assert group_drain() == want2
-        # nothing left: the ack ratchet holds across another restart
-        assert group_drain() == []
-    finally:
-        client.close()
-        broker.close()
-
-
-def test_group_rebalance_protocol_lifecycle():
-    """VERDICT r10 #7: coordinated classic groups on the wire —
-    JoinGroup forms generations through the rebalance barrier, the
-    leader runs the client-side range assignor over every member's
-    ConsumerProtocolSubscription, SyncGroup distributes slices,
-    Heartbeat detects rebalances, LeaveGroup shrinks the group, and
-    offset commits are fenced by (generation, member).  Each member
-    runs its own poll loop thread — the real client shape; the join
-    barrier blocks broker-side until every live member rejoins."""
-    import threading
-    import time
-
-    import pytest as _pytest
-
-    from event_stream_spark.sources.kafkawire import (
-        ERR_ILLEGAL_GENERATION,
-        GroupMember,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-
-    broker = KafkaWireBroker(num_partitions=4)
-    clients = [KafkaWireClient(broker.host, broker.port) for _ in range(3)]
-    state: dict[int, tuple[int, dict]] = {}
-    stops = [threading.Event() for _ in range(3)]
-    members: list[GroupMember] = []
-
-    def pump(i: int) -> None:
-        m = members[i]
-        while not stops[i].is_set():
-            try:
-                a = m.ensure_active()
-                state[i] = (m.generation, a)
-            except Exception:
-                pass
-            time.sleep(0.05)
-
-    def converged(idxs) -> bool:
-        if any(i not in state for i in idxs):
-            return False
-        gens = {state[i][0] for i in idxs}
-        if len(gens) != 1:
-            return False
-        parts = sorted(
-            p for i in idxs for p in state[i][1].get("t", [])
-        )
-        return parts == [0, 1, 2, 3]
-
-    def wait_converged(idxs, timeout=20) -> None:
-        deadline = time.time() + timeout
-        while not converged(idxs) and time.time() < deadline:
-            time.sleep(0.05)
-        assert converged(idxs), {i: state.get(i) for i in idxs}
-
-    threads = []
-    try:
-        clients[0].metadata("t")  # auto-create
-        for i in range(3):
-            members.append(GroupMember(clients[i], "g", ["t"]))
-
-        # phase A: two members converge on one generation splitting 4
-        # partitions 2+2 (range assignor, contiguous)
-        for i in (0, 1):
-            th = threading.Thread(target=pump, args=(i,))
-            th.start()
-            threads.append(th)
-        wait_converged([0, 1])
-        assert sorted(len(state[i][1]["t"]) for i in (0, 1)) == [2, 2]
-        gen_a = state[0][0]
-
-        # live commit under the current generation lands in the ledger
-        m1 = members[0]
-        p0 = m1.assignment["t"][0]
-        m1.commit({("t", p0): 17})
-        assert clients[0].offset_fetch("g", [("t", p0)])[("t", p0)] == 17
-        # a STALE generation is fenced
-        with _pytest.raises(Exception, match=str(ERR_ILLEGAL_GENERATION)):
-            clients[0].offset_commit(
-                "g", {("t", 0): 99},
-                generation=gen_a - 1, member=m1.member_id,
-            )
-
-        # phase B: third member triggers a rebalance; 4 partitions over
-        # 3 members = sizes 1/1/2, every partition covered exactly once
-        th = threading.Thread(target=pump, args=(2,))
-        th.start()
-        threads.append(th)
-        wait_converged([0, 1, 2])
-        assert state[0][0] > gen_a
-        assert sorted(len(state[i][1]["t"]) for i in range(3)) == [1, 1, 2]
-
-        # phase C: member 3 leaves; survivors re-cover everything
-        stops[2].set()
-        threads[2].join(10)
-        gen_b = state[0][0]
-        members[2].leave()
-        state.pop(2, None)
-        wait_converged([0, 1])
-        assert state[0][0] > gen_b
-
-        # the zombie's commit under its dead (generation, member) stays
-        # fenced (22 stale generation / 25 evicted / 27 rebalancing)
-        with _pytest.raises(Exception, match="2[257]"):
-            clients[2].offset_commit(
-                "g", {("t", 0): 1000}, generation=gen_b, member="gone",
-            )
-        # the manual-assignment contract is untouched by all of this
-        clients[0].offset_commit("g-manual", {("t", 0): 5})
-        assert clients[0].offset_fetch("g-manual", [("t", 0)])[("t", 0)] == 5
-    finally:
-        for e in stops:
-            e.set()
-        for th in threads:
-            th.join(10)
-        for c in clients:
-            c.close()
-        broker.close()
-
-
-def test_group_session_timeout_evicts_silent_member():
-    """A member that stops heartbeating is evicted at session expiry
-    (lazily, on the next group op) and the survivor's next heartbeat
-    reports the rebalance; the survivor rejoins and owns everything."""
-    import time
-
-    from event_stream_spark.sources.kafkawire import (
-        GroupMember,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-    import threading
-
-    broker = KafkaWireBroker(num_partitions=2)
-    c1 = KafkaWireClient(broker.host, broker.port)
-    c2 = KafkaWireClient(broker.host, broker.port)
-    try:
-        c1.metadata("t")
-        m1 = GroupMember(c1, "g", ["t"], session_timeout_ms=400)
-        m2 = GroupMember(c2, "g", ["t"], session_timeout_ms=400)
-        m1.join()
-        th = threading.Thread(target=m2.join)
-        th.start()
-        deadline = time.time() + 10
-        while m1.generation < 2 and time.time() < deadline:
-            m1.ensure_active()
-            time.sleep(0.05)
-        th.join(10)
-        assert sorted(m1.assignment["t"] + m2.assignment["t"]) == [0, 1]
-
-        # m2 goes silent; m1 keeps heartbeating past m2's session
-        deadline = time.time() + 10
-        while len(m1.assignment.get("t", [])) < 2 and time.time() < deadline:
-            m1.ensure_active()
-            time.sleep(0.1)
-        assert m1.assignment == {"t": [0, 1]}
-        assert m1.generation >= 3
-    finally:
-        c1.close()
-        c2.close()
-        broker.close()
-
-
-def test_group_assignor_heterogeneous_subscriptions():
-    """The leader-side range assignor honors per-member SUBSCRIPTIONS:
-    a topic only one member subscribes to goes wholly to it, a shared
-    topic splits contiguously — and the client fetches multi-topic
-    metadata in one request."""
-    import threading
-    import time
-
-    from event_stream_spark.sources.kafkawire import (
-        GroupMember,
-        KafkaWireBroker,
-        KafkaWireClient,
-    )
-
-    broker = KafkaWireBroker(num_partitions=2)
-    c1 = KafkaWireClient(broker.host, broker.port)
-    c2 = KafkaWireClient(broker.host, broker.port)
-    try:
-        c1.metadata("a", "b")  # multi-topic metadata + auto-create
-        m1 = GroupMember(c1, "g", ["a", "b"])
-        m2 = GroupMember(c2, "g", ["b"])
-        state = {}
-        stop = threading.Event()
-
-        def pump(i, m):
-            while not stop.is_set():
-                try:
-                    state[i] = (m.generation, m.ensure_active())
-                except Exception:
-                    pass
-                time.sleep(0.05)
-
-        ths = [
-            threading.Thread(target=pump, args=(i, m))
-            for i, m in ((1, m1), (2, m2))
-        ]
-        for th in ths:
-            th.start()
-        deadline = time.time() + 20
-        ok = False
-        while time.time() < deadline and not ok:
-            s1, s2 = state.get(1), state.get(2)
-            ok = (
-                s1 is not None and s2 is not None
-                and s1[0] == s2[0]
-                and s1[1].get("a") == [0, 1]
-                and sorted(s1[1].get("b", []) + s2[1].get("b", [])) == [0, 1]
-                and "a" not in s2[1]
-            )
-            time.sleep(0.05)
-        stop.set()
-        for th in ths:
-            th.join(10)
-        assert ok, (state.get(1), state.get(2))
-    finally:
-        c1.close()
-        c2.close()
-        broker.close()
+    names = [f for _d, _s, fs in os.walk(out) for f in fs]
+    assert sorted(names) == [f"{h:010d}.json" for h in range(1, 15)]

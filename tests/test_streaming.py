@@ -230,6 +230,8 @@ def _cosmos_tx_node():
             _cosmos_tx("underscore", "uosmo", "1_000"),
             _cosmos_tx("spaces", "uosmo", " 12 "),
             _cosmos_tx("plus sign", "uosmo", "+5"),
+            _cosmos_tx("empty amount", "uosmo", ""),  # amount left off the wire
+            _cosmos_tx("empty denom", "", "5"),  # denom left off the wire
         ],
         3: [],  # a block without txs
         4: [base64.b64encode(b"\xff\x01 not a Tx").decode(), _cosmos_tx("ok", "u", "1")],
@@ -252,8 +254,9 @@ def test_tx_meta_parity_real_cosmos_txs(spark, tmp_path):
     """Fee/denom/note decoded in the node fetch (batch backfill and live
     stream over HTTP) equal ``decode_tx_meta`` and the lake join's pandas
     UDF (``enrich_stream_blocks``) over the same rows.  Amounts parse as
-    Java's ``BigInteger`` does (else 0), and one past ``decimal(38,0)``
-    gives a null fee instead of failing the read."""
+    Java's ``BigInteger`` does (else 0, also for an empty amount), an empty
+    denom reads "", and one past ``decimal(38,0)`` gives a null fee instead
+    of failing the read."""
     from event_stream_spark.operators.flatten import (
         block_results_from_rpc,
         blocks_from_rpc,
@@ -276,6 +279,8 @@ def test_tx_meta_parity_real_cosmos_txs(spark, tmp_path):
         (2, 2): (0, "uosmo", "underscore"),
         (2, 3): (0, "uosmo", "spaces"),
         (2, 4): (5, "uosmo", "plus sign"),
+        (2, 5): (0, "uosmo", "empty amount"),
+        (2, 6): (5, "", "empty denom"),
         (4, 0): (None, None, None),
         (4, 1): (1, "u", "ok"),
     }
@@ -5620,7 +5625,7 @@ def test_task_retry_chaos_sinks():
     result = json.loads(last[-1])
     assert result == {
         "ok": True, "splay_files": 40, "shard_files": 20, "snap_rows": 1000,
-        "txn_sink_records": 64, "vacuum_merge_rows": 800,
+        "vacuum_merge_rows": 800,
     }
 
 

@@ -238,34 +238,6 @@ def test_dictionary_frames_refused_by_name(tmp_path):
         zstd_decompress(comp)
 
 
-@needs_bin
-def test_kafka_batch_with_real_zstd_payload():
-    """End-to-end transport check: a RecordBatch v2 whose records section
-    was compressed by the REFERENCE encoder decodes through the wire
-    reader — the exact shape a stock-client producer puts on a broker."""
-    from event_stream_spark.sources.kafkawire import (
-        crc32c,
-        decode_record_batches,
-        encode_record_batch,
-    )
-
-    records = [(i, 1000 + i, f"k{i}".encode(), f"v{i}".encode() * 40)
-               for i in range(50)]
-    plain = encode_record_batch(records)  # codec none
-    # splice: records section starts after the 61-byte batch header
-    hdr_len = 61
-    payload = _cli(plain[hdr_len:], ["-19"])
-    post_crc = bytearray(plain[8 + 4 + 4 + 1 + 4 : hdr_len]) 
-    struct.pack_into(">h", post_crc, 0, 4)  # attributes: zstd
-    body = bytes(post_crc) + payload
-    batch = (
-        plain[:8] + struct.pack(">i", 4 + 1 + 4 + len(body))
-        + plain[12:16] + plain[16:17]
-        + struct.pack(">I", crc32c(body)) + body
-    )
-    assert decode_record_batches(batch) == records
-
-
 def test_read_jsonl_zst_roundtrip_and_tolerance(spark, tmp_path):
     """Distributed .jsonl.zst ingest: store-mode shards round-trip exactly;
     records with missing keys surface NULL and extra keys are ignored
@@ -452,7 +424,7 @@ def test_fast_decode_parity_randomized_cli_sweep():
 
 @needs_bin
 def test_fast_decode_small_inputs_stay_pure():
-    """Inputs under _CLI_MIN_BYTES (Kafka record batches) take the pure
+    """Inputs under _CLI_MIN_BYTES take the pure
     decoder on the 'cli' backend — no subprocess spawn per batch."""
     from unittest import mock
 

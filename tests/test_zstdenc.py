@@ -287,23 +287,6 @@ def test_compress_fast_falls_back_and_roundtrips():
     assert len(frame) < len(data) // 4
 
 
-def test_kafka_produce_batches_are_really_compressed():
-    from event_stream_spark.sources.kafkawire import (
-        decode_record_batches,
-        encode_record_batch,
-    )
-
-    records = [
-        (i, 1000 + i, None, b'{"height": %d, "txs": ["%s"]}' % (i, b"ab" * 30))
-        for i in range(200)
-    ]
-    blob = encode_record_batch(records, codec="zstd")
-    plain = encode_record_batch(records, codec="none")
-    assert len(blob) < len(plain) // 3
-    got = [(r[0], r[3]) for r in decode_record_batches(blob)]
-    assert got == [(r[0], r[3]) for r in records]
-
-
 def test_write_jsonl_zst_pure_mode_compresses(tmp_path):
     from event_stream_spark.sources.dumps import write_jsonl_zst
 
