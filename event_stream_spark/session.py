@@ -7,8 +7,15 @@ right call on a 1000-executor cluster:
   and dynamic join-strategy switching replace all of the reference's hand-tuned
   chunk/concurrency constants (EventStream.kt:66-73, MetadataStream.kt:34-46).
 - Arrow enabled for the (few) Pandas-UDF paths.
-- shuffle.partitions sized to cores locally; on a real cluster AQE's
-  ``coalescePartitions`` makes the initial number mostly irrelevant.
+- ``spark.sql.shuffle.partitions`` equals the session's cores, like
+  ``spark.default.parallelism``.  For a batch query AQE's
+  ``coalescePartitions`` makes the initial number mostly irrelevant, but a
+  streaming query's stateful operators are not coalesced: the live tail's
+  ``dropDuplicates("height")`` keeps one state-store partition per shuffle
+  partition, and each runs one task per trigger that commits a checkpointed
+  delta file whether or not it got a row.  More partitions than cores only
+  adds waves of such tasks.  The count a query starts with is recorded in
+  its checkpoint, so a restarted query keeps it whatever the session says.
 """
 
 from __future__ import annotations
@@ -27,11 +34,15 @@ def get_spark(
     """Build (or fetch) the session.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores.
+    ``shuffle_partitions`` defaults to ``cpus``: each state-store partition
+    of a streaming query is one task per trigger that loads, commits and
+    checksums a delta file in the checkpoint, so one per core runs them all
+    in a single wave.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

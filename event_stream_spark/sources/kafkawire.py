@@ -793,6 +793,12 @@ class KafkaWireStreamReader(DataSourceStreamReader):
     def commit(self, end: dict) -> None:
         pass  # the checkpoint offset log is the ack ledger
 
+    def stop(self) -> None:
+        """Close the driver-side client that offset planning opened."""
+        if self._client is not None:
+            self._client.close()
+            self._client = None
+
 
 class KafkaWireDataSource(DataSource):
     @classmethod

@@ -217,6 +217,38 @@ def test_fetch_past_the_log_end_fails_loud():
         broker.close()
 
 
+def test_stream_reader_stop_closes_its_client():
+    """``stop()`` closes the client that ``initialOffset``/``latestOffset``
+    opened on the driver: its socket is closed at once, and a dropped
+    reader leaves no socket for the garbage collector to find open."""
+    import gc
+    import warnings
+
+    broker = KafkaWireBroker()
+    producer = KafkaWireClient(broker.host, broker.port)
+    try:
+        producer.produce("t", 0, [(b"k", b"v", 1000)])
+        gc.collect()
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always", ResourceWarning)
+            reader = KafkaWireStreamReader(
+                {"bootstrap": f"{broker.host}:{broker.port}", "topic": "t"}
+            )
+            assert reader.initialOffset() == {"0": 0}
+            assert reader.latestOffset() == {"0": 1}
+            sock = reader._client._sock
+            reader.stop()
+            assert reader._client is None and sock.fileno() == -1
+            reader.stop()  # a second stop is a no-op
+            del reader, sock
+            gc.collect()
+    finally:
+        producer.close()
+        broker.close()
+    leaked = [str(w.message) for w in caught if issubclass(w.category, ResourceWarning)]
+    assert leaked == []
+
+
 def _with_compression(batch: bytes, ctype: int) -> bytes:
     """``batch`` with its attributes naming compression ``ctype`` (records
     left as they are) and a CRC32C that matches again."""

@@ -1034,6 +1034,140 @@ def test_combined_flow_over_http_with_advancing_head(spark, hist_corpus, tmp_pat
     assert live_seen == list(live_heights)
 
 
+def _splay_blocks(out: str) -> list[tuple[int, bool]]:
+    """(height, historical) of every splay file, sorted; a file's name and
+    its payload must agree on the height."""
+    blocks = []
+    for path in glob.glob(f"{out}/*/*.json"):
+        with open(path) as fh:
+            payload = json.load(fh)
+        assert int(os.path.basename(path)[:-5]) == payload["height"]
+        blocks.append((payload["height"], payload["historical"]))
+    return sorted(blocks)
+
+
+_CORE_SIZED_LIVE_TAIL = r"""
+import json, sys, time
+
+from event_stream_spark.session import get_spark
+from event_stream_spark.sinks.splay import splayed_json_sink
+from event_stream_spark.sources.blockstream import SyntheticNode
+from event_stream_spark.sources.rpcnode import RpcNodeServer
+from event_stream_spark.streaming import combined_block_stream
+
+out, ckpt = sys.argv[1], sys.argv[2]
+spark = get_spark("core-sized-state", cpus=2)
+sc = spark.sparkContext
+sc.setLogLevel("ERROR")
+tracker = sc.statusTracker()
+cores = sc.defaultParallelism
+server = RpcNodeServer(SyntheticNode())
+server.set_head(15)
+try:
+    df = combined_block_stream(
+        spark, 1, 10, decode_tx_meta=False, backend="http", rpc_url=server.url
+    )
+    q = splayed_json_sink(df, out, ckpt).start()
+    try:
+        q.processAllAvailable()  # the backfill leg and live heights 11..15
+        before = set(tracker.getJobIdsForGroup(str(q.runId)))
+        server.set_head(18)  # one steady trigger: three new live heights
+        q.processAllAvailable()
+        jobs = set(tracker.getJobIdsForGroup(str(q.runId))) - before
+        deadline = time.time() + 30  # the status store trails the listener bus
+        while time.time() < deadline and any(
+            tracker.getJobInfo(j).status != "SUCCEEDED" for j in jobs
+        ):
+            time.sleep(0.1)
+        tasks = sum(
+            tracker.getStageInfo(s).numTasks
+            for j in jobs
+            for s in tracker.getJobInfo(j).stageIds
+        )
+        state = q.lastProgress["stateOperators"][0]
+    finally:
+        q.stop()
+finally:
+    server.close()
+    spark.stop()
+print(json.dumps({
+    "cores": cores,
+    "jobs": len(jobs),
+    "tasks": tasks,
+    "partitions": state["numShufflePartitions"],
+}))
+"""
+
+
+def test_default_session_sizes_live_tail_state_to_its_cores(tmp_path):
+    """A session built with default shuffle partitions gives the live tail's
+    height dedup one state-store partition per core, so a steady trigger is
+    one read task plus ``cores`` state tasks (each loads and commits a
+    checkpointed delta file, row or no row).  Runs in its own JVM: the
+    shared session pins 8 partitions."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out, ckpt = str(tmp_path / "splay"), str(tmp_path / "ckpt")
+    env = dict(
+        os.environ,
+        SPARK_DRIVER_MEM="1500m",
+        PYTHONPATH=os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _CORE_SIZED_LIVE_TAIL, out, ckpt],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["cores"] == 2
+    assert got["partitions"] == 2
+    assert got["jobs"] >= 1
+    assert got["tasks"] <= got["cores"] + 1
+    assert _splay_blocks(out) == [(h, h <= 10) for h in range(1, 19)]
+
+
+def test_restarted_live_tail_keeps_its_checkpoint_partition_count(spark, tmp_path):
+    """A streaming query's state-store partition count is fixed by its
+    first run: the offset log records ``spark.sql.shuffle.partitions`` and
+    a restart on the same checkpoint restores it, whatever the session says
+    now.  A live tail checkpointed with 8 partitions resumes with 8 after
+    the session's count changed, and every height lands exactly once."""
+    from event_stream_spark.sinks.splay import splayed_json_sink
+    from event_stream_spark.sources.blockstream import SyntheticNode
+    from event_stream_spark.sources.rpcnode import RpcNodeServer
+    from event_stream_spark.streaming import combined_block_stream
+
+    out, ckpt = str(tmp_path / "splay"), str(tmp_path / "ckpt")
+    server = RpcNodeServer(SyntheticNode())
+
+    def run_to(head: int) -> int:
+        server.set_head(head)
+        df = combined_block_stream(
+            spark, 1, 10, decode_tx_meta=False, backend="http", rpc_url=server.url
+        )
+        q = splayed_json_sink(df, out, ckpt).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "8")
+        assert run_to(15) == 8
+        assert _splay_blocks(out) == [(h, h <= 10) for h in range(1, 16)]
+        spark.conf.set(conf, "3")
+        assert run_to(20) == 8
+    finally:
+        spark.conf.set(conf, before)
+        server.close()
+    assert _splay_blocks(out) == [(h, h <= 10) for h in range(1, 21)]
+
+
 def test_http_rpc_transport_retries_502():
     """Transient 502s (the reference's retryable server-error class,
     EventStream.kt:222-233) are absorbed by exponential-backoff retry in
@@ -1273,52 +1407,46 @@ def test_combined_header_stream_fixtures(spark, templates_dir):
     )
 
 
-def test_from_latest_resolution(spark, templates_dir):
+@pytest.mark.parametrize(
+    "corpus", ["synthetic", *(["fixtures"] if os.path.isdir(TEMPLATES) else [])]
+)
+def test_from_latest_resolution(spark, request, corpus):
     """from="latest" resolves to the current head at plan time
     (MultiplexBlockDataFlow.kt:82-92): the bounded run emits exactly the
     head block; to_height=None resolves the backfill leg to head too."""
-    from tests.conftest import EXPECTED_LIVE_COUNT, MAX_LIVE_HEIGHT, MIN_LIVE_HEIGHT
     from event_stream_spark.streaming import combined_block_stream, resolve_heights
 
-    fh, th, live = resolve_heights(
-        "latest", None, backend="fixtures", fixtures_dir=templates_dir
-    )
-    assert fh == th == MAX_LIVE_HEIGHT
-    assert live == MAX_LIVE_HEIGHT + 1
+    if corpus == "fixtures":
+        from tests.conftest import MAX_LIVE_HEIGHT, MIN_LIVE_HEIGHT
+
+        options = {
+            "backend": "fixtures",
+            "fixtures_dir": request.getfixturevalue("templates_dir"),
+        }
+        head, tail_from = MAX_LIVE_HEIGHT, MIN_LIVE_HEIGHT
+    else:
+        from event_stream_spark.sources.blockstream import SYNTHETIC_HEAD
+
+        options = {"backend": "synthetic"}
+        head, tail_from = SYNTHETIC_HEAD, SYNTHETIC_HEAD - 5
+
+    assert resolve_heights("latest", None, **options) == (head, head, head + 1)
     with pytest.raises(ValueError, match="invalid height specifier"):
-        resolve_heights("newest", None, backend="fixtures", fixtures_dir=templates_dir)
+        resolve_heights("newest", None, **options)
 
-    df = combined_block_stream(
-        spark,
-        "latest",
-        backend="fixtures",
-        fixtures_dir=templates_dir,
-        decode_tx_meta=False,
-    )
-    heights = []
-    _drain(
-        df.select("height").writeStream.foreachBatch(
-            lambda b, _id: heights.extend(r["height"] for r in b.collect())
+    def emitted(from_height) -> list[int]:
+        df = combined_block_stream(spark, from_height, decode_tx_meta=False, **options)
+        heights: list[int] = []
+        _drain(
+            df.select("height").writeStream.foreachBatch(
+                lambda b, _id: heights.extend(r["height"] for r in b.collect())
+            )
         )
-    )
-    assert heights == [MAX_LIVE_HEIGHT]
+        return heights
 
-    # open-ended `to`: backfill leg resolves to head; bounded corpus = the tail
-    df2 = combined_block_stream(
-        spark,
-        MIN_LIVE_HEIGHT,
-        backend="fixtures",
-        fixtures_dir=templates_dir,
-        decode_tx_meta=False,
-    )
-    got = []
-    _drain(
-        df2.select("height").writeStream.foreachBatch(
-            lambda b, _id: got.extend(r["height"] for r in b.collect())
-        )
-    )
-    assert sorted(got) == list(range(MIN_LIVE_HEIGHT, MAX_LIVE_HEIGHT + 1))
-    assert len(got) == EXPECTED_LIVE_COUNT
+    assert emitted("latest") == [head]
+    # open-ended `to`: the backfill leg resolves to head, each height once
+    assert sorted(emitted(tail_from)) == list(range(tail_from, head + 1))
 
 
 @pytest.mark.parametrize("builder", ["blocks", "headers"])
