@@ -8,20 +8,26 @@ right call on a 1000-executor cluster:
   chunk/concurrency constants (EventStream.kt:66-73, MetadataStream.kt:34-46).
 - Arrow enabled for the (few) Pandas-UDF paths.
 - ``spark.sql.shuffle.partitions`` equals the session's cores, like
-  ``spark.default.parallelism``.  For a batch query AQE's
-  ``coalescePartitions`` makes the initial number mostly irrelevant, but a
-  streaming query's stateful operators are not coalesced: the live tail's
+  ``spark.default.parallelism``.  AQE can only coalesce a batch query's
+  shuffle partitions, so the count caps them at the cores; on the small
+  lakes measured so far AQE coalesced to the same task counts either way.
+  A streaming query's stateful operators are not coalesced: the live tail's
   ``dropDuplicates("height")`` keeps one state-store partition per shuffle
   partition, and each runs one task per trigger that commits a checkpointed
   delta file whether or not it got a row.  More partitions than cores only
   adds waves of such tasks.  The count a query starts with is recorded in
   its checkpoint, so a restarted query keeps it whatever the session says.
+
+A second ``get_spark`` call in a process that already runs a session returns
+that session as it is: ``getOrCreate`` would rewrite its SQL confs (the shuffle
+partitions among them) with the new call's defaults.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
@@ -31,7 +37,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session.
+    """Build the session, or return the running one unchanged.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores.
     ``shuffle_partitions`` defaults to ``cpus``: each state-store partition
@@ -39,6 +45,10 @@ def get_spark(
     checksums a delta file in the checkpoint, so one per core runs them all
     in a single wave.
     """
+    try:
+        return SparkSession.active()  # this thread's session, else the default
+    except PySparkRuntimeError:
+        pass  # none running
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:

@@ -1157,7 +1157,7 @@ def test_restarted_live_tail_keeps_its_checkpoint_partition_count(spark, tmp_pat
     conf = "spark.sql.shuffle.partitions"
     before = spark.conf.get(conf)
     try:
-        spark.conf.set(conf, "8")
+        spark.conf.set(conf, "8")  # the count tests/conftest.py pins, stated here
         assert run_to(15) == 8
         assert _splay_blocks(out) == [(h, h <= 10) for h in range(1, 16)]
         spark.conf.set(conf, "3")
@@ -1166,6 +1166,27 @@ def test_restarted_live_tail_keeps_its_checkpoint_partition_count(spark, tmp_pat
         spark.conf.set(conf, before)
         server.close()
     assert _splay_blocks(out) == [(h, h <= 10) for h in range(1, 21)]
+
+
+def test_get_spark_returns_the_running_session_unchanged(spark):
+    """``get_spark`` called where a session already runs (the CLI's
+    ``run`` inside this test session, say) hands that session back without
+    rewriting its confs: ``getOrCreate`` would reset the shuffle partitions
+    to the call's default and every later query and stream would run with
+    them.  Holds from another thread too, which has no active session."""
+    import threading
+
+    from event_stream_spark.session import get_spark
+
+    conf = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(conf) == "8"  # tests/conftest.py pins it
+    got = [get_spark("event-stream-cli", cpus=2)]
+    t = threading.Thread(target=lambda: got.append(get_spark("other", cpus=3)))
+    t.start()
+    t.join()
+    assert all(s._jsparkSession.equals(spark._jsparkSession) for s in got)
+    assert len(got) == 2
+    assert spark.conf.get(conf) == "8"
 
 
 def test_http_rpc_transport_retries_502():
